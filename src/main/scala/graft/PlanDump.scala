@@ -5,6 +5,8 @@ import org.apache.spark.sql.execution.ExplainMode
 /** Optimization-round diagnostic (guide §1.3/§7.2): dump
   * `.explain("formatted")` for the named queries to one file each, so plan
   * claims in OPTIMIZATION_r*.md are checkable without running Spark.
+  * Expression ids (`#123`) are written as `#_`, so dumps of the same
+  * query from two commits diff cleanly.
   * Usage: runMain graft.PlanDump <outDir> <q1,q2,...> [sfDir]
   * Not part of the bench/verify surface; never run by the driver. */
 object PlanDump {
@@ -23,6 +25,7 @@ object PlanDump {
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
       val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        .replaceAll("#\\d+", "#_")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/$n.txt"), txt)
       println(s"[plandump] wrote $outDir/$n.txt")
       spark.sharedState.cacheManager.clearCache()

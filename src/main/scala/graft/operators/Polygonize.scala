@@ -187,10 +187,11 @@ object Polygonize {
     // collect (threshold+1 rows max) answers the branch question AND
     // delivers the edges in a single job; union-find's min-root merge
     // law makes the component representatives order-independent, so the
-    // result is unchanged.
+    // result is unchanged. The limit is clamped to Int.MaxValue: a
+    // threshold at or past it would wrap threshold+1 negative.
     import spark.implicits._
     val collected = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .as[(Long, Long)].limit((driverThreshold + 1).toInt).collect()
+      .as[(Long, Long)].limit(math.min(driverThreshold, Int.MaxValue - 1L).toInt + 1).collect()
     if (collected.length <= driverThreshold) {
       val parent = new java.util.HashMap[Long, Long]()
       def find(x0: Long): Long = {

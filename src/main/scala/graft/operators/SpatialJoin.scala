@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.functions.F
 
 /** Distributed spatial join — the engine's centerpiece (SURVEY.md §3.3 J2/J3).
@@ -12,22 +13,22 @@ import graft.functions.F
   * with a bbox prefilter, as a two-phase cell-equi-join:
   *
   *   1. PRUNE:  polygons explode to the Z-order cells they intersect
-  *              (cells_cover); points map to exactly one cell (cell_encode).
+  *              ([[cover]]); points map to exactly one cell ([[keyPoints]]).
   *              The join on `cell` is an ordinary Catalyst equi-join, so
   *              Spark picks broadcast-hash vs shuffled-hash/SMJ and AQE
   *              re-plans at runtime.
-  *   2. REFINE: exact JTS predicate (st_contains / st_intersects) on the
-  *              candidates; the polygon side goes through the prepared-
-  *              geometry cache, matching the reference's prepared filter.
+  *   2. REFINE: codegen'd envelope gate, then the exact JTS predicate
+  *              ([[pipRefine]] / st_intersects) on the candidates; the
+  *              polygon side goes through the prepared-geometry cache,
+  *              matching the reference's prepared filter.
   *
   * Scale levers (100-TB design):
   *   - broadcast: polygon side is usually the small dimension → map-side
   *     join, zero shuffle of the big point table.
-  *   - shuffle + salting: when both sides are big, hot cells (skewed by
-  *     cells_cover fan-out or point clustering) are salted — points get a
-  *     deterministic salt in [0, s), polygons replicate ×s — bounding any
-  *     single task's share of a hot cell at 1/s. AQE skew-join splits the
-  *     residual.
+  *   - shuffle + salting ([[saltedJoin]]): probe rows get a deterministic
+  *     salt in [0, s), build rows replicate ×s — bounding any single
+  *     task's share of a hot cell at 1/s. [[skewJoin]] salts only the
+  *     cells a pre-agg finds hot; AQE skew-join splits the residual.
   *   - a point maps to exactly ONE cell per cover zoom, so point-in-polygon
   *     emits no duplicate pairs; geometry×geometry joins dedup on the id
   *     pair before the (expensive) refine.
@@ -54,18 +55,108 @@ object SpatialJoin {
     * the cover is single-zoom at the requested zoom; otherwise a per-row
     * explode of the literal zoom ladder (rows already coarser than a
     * target zoom skip it — ancestorAt would duplicate the key). */
-  private[operators] def fanToZooms(df: DataFrame, zooms: Seq[Int], reqZoom: Int): DataFrame =
+  private def fanToZooms(df: DataFrame, zooms: Seq[Int], reqZoom: Int): DataFrame =
     if (zooms.isEmpty || zooms == Seq(reqZoom)) df
     else df.withColumn("__cell", explode(expr(
       s"transform(filter(array(${zooms.mkString(",")}), z -> z <= cell_zoom(__cell)), " +
         "z -> cell_at_zoom(__cell, z))")))
+
+  /** The geometry side of every join: one row per (geometry, covering
+    * cell) keyed `__cell`, with the geometry's envelope in `envCol` —
+    * computed ONCE per geometry, before the explode — for the codegen'd
+    * envelope gate. Persisted: the plan-time [[coverZooms]] action
+    * materializes the cover anyway, so the join's second read is free.
+    * fan: the sf inputs are single-row-group parquet (one scan split), so
+    * without a repartition the WKT parse/cover explode — and, when the
+    * cover is broadcast, the whole candidate join + JTS refine — would
+    * run on one core (guide §2.5). Identity when the scan is already
+    * parallel. Registers the engine functions: every join starts here. */
+  private[operators] def cover(df: DataFrame, geomCol: String, zoom: Int, envCol: String,
+                               mercator: Boolean = false): DataFrame = {
+    F.ensureRegistered(df.sparkSession)
+    val cells =
+      if (mercator) F.cells_cover_merc(col(geomCol), lit(zoom))
+      else F.cells_cover(col(geomCol), lit(zoom))
+    graft.core.Par.fan(df)
+      .withColumn(envCol, F.st_env_bounds(col(geomCol)))
+      .withColumn("__cell", explode(cells))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** The point side: each point's `__cell` on the same grid as `cov`,
+    * re-keyed to every zoom present in the cover. */
+  private[operators] def keyPoints(points: DataFrame, lonCol: String, latCol: String,
+                                   zoom: Int, cov: DataFrame,
+                                   mercator: Boolean = false): DataFrame = {
+    val cell =
+      if (mercator) F.cell_encode_merc(col(lonCol), col(latCol), lit(zoom))
+      else F.cell_encode(col(lonCol), col(latCol), lit(zoom))
+    fanToZooms(points.withColumn("__cell", cell), coverZooms(cov), zoom)
+  }
+
+  /** Exact point-in-polygon refine behind the envelope gate (reference:
+    * OGRLayer::FilterGeometry checks m_sFilterEnvelope BEFORE any exact
+    * test). The gate is pure column arithmetic against the cover's
+    * `__env` inside whole-stage codegen, and And short-circuits, so the
+    * interpreted JTS probe runs only on candidates surviving the bbox.
+    * The gate is inclusive: boundary points reach the exact predicate. */
+  private[operators] def pipRefine(geomCol: String, lonCol: String, latCol: String,
+                                   predicate: String = "contains"): Column =
+    col(lonCol) >= col("__env")(0) && col(lonCol) <= col("__env")(2) &&
+      col(latCol) >= col("__env")(1) && col(latCol) <= col("__env")(3) &&
+      F.st_predicate_point(predicate, col(geomCol), col(lonCol), col(latCol))
+
+  /** Salted equi-join on (`__cell`, `__salt`): each probe row takes salt
+    * `pmod(saltKey, s)`, each build row replicates to every salt in
+    * [0, s), so one cell's probe rows spread over s tasks. */
+  private def saltedJoin(probe: DataFrame, build: DataFrame, saltKey: Column, s: Int): DataFrame =
+    probe.withColumn("__salt", pmod(saltKey, lit(s)))
+      .join(build.withColumn("__salt", explode(sequence(lit(0), lit(s - 1)))),
+        Seq("__cell", "__salt"), "inner")
+      .drop("__salt")
+
+  /** ADAPTIVE hot-cell salting (SURVEY.md §5 skew row): a pre-agg counts
+    * probe rows per cell; only cells over `hotThreshold` take the
+    * [[saltedJoin]], the cold remainder joins plainly — replication is
+    * paid exactly where skew exists. The hot-cell set stays a DataFrame
+    * joined via broadcast semi/anti joins — never a driver collect or an
+    * IN-list literal, so a million hot cells cannot bloat the plan.
+    *
+    * `probe` feeds three consumers (pre-agg, cold join, hot join), so it
+    * is persisted: without it each one re-runs the full upstream scan
+    * (measured 479 s vs 260 s at 128M docs). MEMORY_AND_DISK spills,
+    * never recomputes. The hot-cell table is tiny but referenced by four
+    * joins, so it is persisted too.
+    *
+    * OPTIMIZATION r6 (guide §2.5 — AQE-style plan-time adaptivity): when
+    * the bounded `isEmpty` probe finds NO hot cell, the split is four
+    * joins that all degenerate to identity — take the plain equi-join
+    * instead (identical rows: with no hot cell the anti-joins pass
+    * everything and the semi-joins pass nothing). */
+  private def skewJoin(probe: DataFrame, build: DataFrame, saltKey: Column, s: Int,
+                       hotThreshold: Long): DataFrame = {
+    val p = probe.persist(StorageLevel.MEMORY_AND_DISK)
+    val hotCells = p.groupBy("__cell").count()
+      .where(col("count") > hotThreshold).select("__cell")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    if (hotCells.isEmpty) {
+      hotCells.unpersist(false)
+      p.join(build, Seq("__cell"), "inner")
+    } else {
+      val hot = broadcast(hotCells)
+      val cold = p.join(hot, Seq("__cell"), "left_anti")
+        .join(build.join(hot, Seq("__cell"), "left_anti"), Seq("__cell"))
+      cold.unionByName(saltedJoin(p.join(hot, Seq("__cell"), "left_semi"),
+        build.join(hot, Seq("__cell"), "left_semi"), saltKey, s))
+    }
+  }
 
   /** Point-in-polygon join.
     * @param polys  (idCol, geomCol: WKB) polygon side
     * @param points point side with lon/lat double columns
     * @param zoom   geodetic cell zoom for the prune phase
     * @param broadcastPolys map-side join (polygon side must fit in memory)
-    * @param saltFactor >1 enables salting on the shuffle path
+    * @param saltFactor >1 salts every cell on the shuffle path
     * @param predicate "contains" (boundary excluded) or "covers"/"intersects"
     * @param mercator prune on the web-mercator cell grid instead of the
     *   geodetic one — the native path for post-warp (EPSG:3857-tiled) data;
@@ -78,162 +169,55 @@ object SpatialJoin {
                      saltFactor: Int = 1,
                      predicate: String = "contains",
                      mercator: Boolean = false): DataFrame = {
-    val spark = polys.sparkSession
-    F.ensureRegistered(spark)
-    def cover(g: org.apache.spark.sql.Column) =
-      if (mercator) F.cells_cover_merc(g, lit(zoom)) else F.cells_cover(g, lit(zoom))
-    def encode(lon: org.apache.spark.sql.Column, lat: org.apache.spark.sql.Column) =
-      if (mercator) F.cell_encode_merc(lon, lat, lit(zoom)) else F.cell_encode(lon, lat, lit(zoom))
-    // persisted: the plan-time coverZooms action materializes the cover
-    // anyway — caching it makes the join's second computation free.
-    // __env is computed ONCE per polygon (before the cover explode) and
-    // feeds the codegen'd envelope prefilter below.
-    // fan: the sf inputs are single-row-group parquet (one scan split), so
-    // without a repartition the polygon WKT-parse/cover-explode and — on
-    // the broadcast path — the ENTIRE candidate join + JTS refine run on
-    // one core (guide §2.5). Identity when the scan is already parallel.
-    val cov = graft.core.Par.fan(polys)
-      .withColumn("__env", F.st_env_bounds(col(polyGeom)))
-      .withColumn("__cell", explode(cover(col(polyGeom))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pts0 = if (broadcastPolys) graft.core.Par.fan(points) else points
-    val pts = fanToZooms(
-      pts0.withColumn("__cell", encode(col(lonCol), col(latCol))),
-      coverZooms(cov), zoom)
-    // point-probe fast path: no WKB point round-trip per candidate. The
-    // envelope gate (reference: OGRLayer::FilterGeometry checks
-    // m_sFilterEnvelope BEFORE any exact test) is pure column arithmetic
-    // inside whole-stage codegen; And short-circuits, so the interpreted
-    // JTS probe runs only on candidates surviving the bbox.
-    val pred: Column = envGateLonLat(lonCol, latCol) &&
-      F.st_predicate_point(predicate, col(polyGeom), col(lonCol), col(latCol))
-
+    val cov = cover(polys, polyGeom, zoom, "__env", mercator)
+    // the broadcast path runs the whole candidate join + refine inside the
+    // point-side tasks, so a single-split point scan must fan too
+    val pts = keyPoints(if (broadcastPolys) graft.core.Par.fan(points) else points,
+      lonCol, latCol, zoom, cov, mercator)
     val candidates =
-      if (broadcastPolys) {
-        pts.join(broadcast(cov), Seq("__cell"), "inner")
-      } else if (saltFactor > 1) {
-        val s = saltFactor
-        val saltedPts = pts.withColumn("__salt",
-          pmod(hash(col(lonCol), col(latCol)), lit(s)))
-        val saltedCov = cov.withColumn("__salt",
-          explode(sequence(lit(0), lit(s - 1))))
-        saltedPts.join(saltedCov, Seq("__cell", "__salt"), "inner").drop("__salt")
-      } else {
-        pts.join(cov, Seq("__cell"), "inner")
-      }
-    candidates.where(pred).drop("__cell", "__env")
+      if (broadcastPolys) pts.join(broadcast(cov), Seq("__cell"), "inner")
+      else if (saltFactor > 1) saltedJoin(pts, cov, hash(col(lonCol), col(latCol)), saltFactor)
+      else pts.join(cov, Seq("__cell"), "inner")
+    candidates.where(pipRefine(polyGeom, lonCol, latCol, predicate)).drop("__cell", "__env")
   }
 
-  /** Codegen'd bbox prefilter against a polygon-side `__env` array —
-    * shared by all batch paths and the streaming twin. */
-  private[operators] def envGateLonLat(lonCol: String, latCol: String): Column =
-    col(lonCol) >= col("__env")(0) && col(lonCol) <= col("__env")(2) &&
-      col(latCol) >= col("__env")(1) && col(latCol) <= col("__env")(3)
-
-  /** ADAPTIVE hot-cell salting (SURVEY.md §5 skew row): a cheap pre-agg
-    * counts points per cell; only cells whose count exceeds
-    * `hotThreshold` are salted (×saltFactor replication of the polygon
-    * side), the cold remainder joins plainly — so replication cost is
-    * paid exactly where skew exists. Returns the same rows as
-    * pointInPolygon (verified in SpatialJoinSpec). The hot-cell set stays
-    * a DataFrame joined via broadcast semi/anti joins — never a driver
-    * collect or an IN-list literal, so a million hot cells cannot bloat
-    * the plan. */
+  /** Point-in-polygon with [[skewJoin]]: only cells holding more than
+    * `hotThreshold` points are salted ×saltFactor. Returns the same rows
+    * as pointInPolygon (verified in SpatialJoinSpec). */
   def pointInPolygonAdaptive(polys: DataFrame, polyGeom: String,
                              points: DataFrame, lonCol: String, latCol: String,
                              zoom: Int, saltFactor: Int = 8,
-                             hotThreshold: Long = 100000L,
-                             predicate: String = "contains"): DataFrame = {
-    val spark = polys.sparkSession
-    F.ensureRegistered(spark)
-    // fan both sides: single-row-group inputs are one scan split each, so
-    // the cover build AND — because the cold/hot cov joins broadcast — the
-    // whole candidate+refine pipeline would run on one core (guide §2.5);
-    // fanning the persisted pts also parallelizes every cached read below
-    val cov = graft.core.Par.fan(polys)
-      .withColumn("__env", F.st_env_bounds(col(polyGeom)))
-      .withColumn("__cell", explode(F.cells_cover(col(polyGeom), lit(zoom))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // pts feeds THREE consumers (hot-cell pre-agg, cold join, hot join):
-    // without persist each one re-runs the full upstream scan/parse, which
-    // at scan-bound scale triples the job (measured 479 s vs 260 s at 128M
-    // docs). MEMORY_AND_DISK: spills, never recomputes.
-    val pts = fanToZooms(
-      graft.core.Par.fan(points)
-        .withColumn("__cell", F.cell_encode(col(lonCol), col(latCol), lit(zoom))),
-      coverZooms(cov), zoom)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // tiny (cells over threshold) but referenced by four joins — persist
-    // so the full-point pre-agg runs once
-    val hotCells = pts.groupBy("__cell").count()
-      .where(col("count") > hotThreshold)
-      .select("__cell")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pred: Column = envGateLonLat(lonCol, latCol) &&
-      F.st_predicate_point(predicate, col(polyGeom), col(lonCol), col(latCol))
-    // OPTIMIZATION r6 (guide §2.5 — AQE-style plan-time adaptivity): when
-    // the probe finds NO hot cell, the cold/hot split is four extra joins
-    // that all degenerate to identity — take the plain equi-join instead
-    // (identical rows: with hotCells empty, anti-joins pass everything
-    // and semi-joins pass nothing). The probe is a bounded action on the
-    // already-persisted hot-cell table; skewed inputs still take the
-    // salted split exactly as before.
-    if (hotCells.isEmpty) {
-      hotCells.unpersist(false)
-      pts.join(cov, Seq("__cell"), "inner").where(pred).drop("__cell", "__env")
-    } else {
-      val cold = pts.join(broadcast(hotCells), Seq("__cell"), "left_anti")
-        .join(cov.join(broadcast(hotCells), Seq("__cell"), "left_anti"), Seq("__cell"))
-      val s = saltFactor
-      val hot = pts.join(broadcast(hotCells), Seq("__cell"), "left_semi")
-        .withColumn("__salt", pmod(hash(col(lonCol), col(latCol)), lit(s)))
-        .join(cov.join(broadcast(hotCells), Seq("__cell"), "left_semi")
-          .withColumn("__salt", explode(sequence(lit(0), lit(s - 1)))),
-          Seq("__cell", "__salt"))
-        .drop("__salt")
-      cold.unionByName(hot).where(pred).drop("__cell", "__env")
-    }
+                             hotThreshold: Long = 100000L): DataFrame = {
+    val cov = cover(polys, polyGeom, zoom, "__env")
+    // fan the points too: the cold/hot cov joins broadcast, so the whole
+    // candidate + refine pipeline runs in point-side tasks, and the
+    // persisted probe is read three times
+    val pts = keyPoints(graft.core.Par.fan(points), lonCol, latCol, zoom, cov)
+    skewJoin(pts, cov, hash(col(lonCol), col(latCol)), saltFactor, hotThreshold)
+      .where(pipRefine(polyGeom, lonCol, latCol)).drop("__cell", "__env")
   }
 
-  /** Geometry × geometry join (both sides arbitrary WKB geometries).
-    * Both sides explode to covering cells; candidate pairs dedup on the id
-    * pair before the exact refine (a pair can meet in several cells).
-    * Refine keeps only the pair ids + geometries; callers re-join payload
-    * columns by id — at scale that keeps the dedup shuffle narrow.
-    *
-    * Skew: hot cells (giant geometries fanning out, or dense clusters) are
-    * ADAPTIVELY salted when `saltFactor > 1`: a pre-agg over the left
-    * cover finds cells with > hotThreshold left rows; in those cells the
-    * left side salts deterministically and the right side replicates ×s.
-    * Cold cells join plainly — replication is paid only where skew exists. */
+  /** Geometry × geometry `st_intersects` join (both sides arbitrary WKB
+    * geometries). Both sides explode to covering cells; candidate pairs
+    * dedup on the id pair before the exact refine (a pair can meet in
+    * several cells). Refine keeps only the pair ids + geometries; callers
+    * re-join payload columns by id — at scale that keeps the dedup
+    * shuffle narrow. With `saltFactor > 1` the cell join is a
+    * [[skewJoin]] over the left cover (left rows salt by id, right rows
+    * replicate). */
   def geomJoin(left: DataFrame, leftId: String, leftGeom: String,
                right: DataFrame, rightId: String, rightGeom: String,
                zoom: Int,
-               predicate: String = "intersects",
-               broadcastRight: Boolean = false,
                saltFactor: Int = 1,
-               hotThreshold: Long = 100000L,
-               mercator: Boolean = false): DataFrame = {
-    val spark = left.sparkSession
-    F.ensureRegistered(spark)
-    def cover(g: org.apache.spark.sql.Column) =
-      if (mercator) F.cells_cover_merc(g, lit(zoom)) else F.cells_cover(g, lit(zoom))
-    // fan: single-split inputs would build both covers — and, when either
-    // join side ends up broadcast, the whole pair generation — on one core
-    val l0 = graft.core.Par.fan(left.select(col(leftId), col(leftGeom)))
-      .withColumn("__envl", F.st_env_bounds(col(leftGeom)))
-      .withColumn("__cell", explode(cover(col(leftGeom))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val r00 = graft.core.Par.fan(right.select(col(rightId), col(rightGeom)))
-      .withColumn("__envr", F.st_env_bounds(col(rightGeom)))
-      .withColumn("__cell", explode(cover(col(rightGeom))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+               hotThreshold: Long = 100000L): DataFrame = {
+    val l0 = cover(left.select(col(leftId), col(leftGeom)), leftGeom, zoom, "__envl")
+    val r0 = cover(right.select(col(rightId), col(rightGeom)), rightGeom, zoom, "__envr")
     // mixed-zoom completeness: each side re-keys to every zoom present on
     // EITHER side that is <= its own cell's zoom; an intersecting pair
     // always meets at the coarser of its two cover zooms.
-    val zooms = (coverZooms(l0) ++ coverZooms(r00)).distinct.sorted
-    geomJoinCore(l0, leftId, leftGeom, r00, rightId, rightGeom, zoom,
-      predicate, broadcastRight, saltFactor, hotThreshold, zooms)
+    val zooms = (coverZooms(l0) ++ coverZooms(r0)).distinct.sorted
+    geomJoinCore(l0, leftId, leftGeom, r0, rightId, rightGeom, zoom,
+      saltFactor, hotThreshold, zooms)
   }
 
   /** Self-join variant (OPTIMIZATION r6, guide §2.4 "two operations keyed
@@ -246,85 +230,34 @@ object SpatialJoin {
                    leftId: String, leftGeom: String,
                    rightId: String, rightGeom: String,
                    zoom: Int,
-                   predicate: String = "intersects",
                    saltFactor: Int = 1,
-                   hotThreshold: Long = 100000L,
-                   mercator: Boolean = false): DataFrame = {
-    val spark = geoms.sparkSession
-    F.ensureRegistered(spark)
-    def cover(g: org.apache.spark.sql.Column) =
-      if (mercator) F.cells_cover_merc(g, lit(zoom)) else F.cells_cover(g, lit(zoom))
-    val cov = graft.core.Par.fan(geoms.select(col(idCol), col(geomCol)))
-      .withColumn("__env0", F.st_env_bounds(col(geomCol)))
-      .withColumn("__cell", explode(cover(col(geomCol))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                   hotThreshold: Long = 100000L): DataFrame = {
+    val cov = cover(geoms.select(col(idCol), col(geomCol)), geomCol, zoom, "__env0")
     val zooms = coverZooms(cov)
     val l0 = cov.select(col(idCol).as(leftId), col(geomCol).as(leftGeom),
       col("__env0").as("__envl"), col("__cell"))
-    val r00 = cov.select(col(idCol).as(rightId), col(geomCol).as(rightGeom),
+    val r0 = cov.select(col(idCol).as(rightId), col(geomCol).as(rightGeom),
       col("__env0").as("__envr"), col("__cell"))
-    geomJoinCore(l0, leftId, leftGeom, r00, rightId, rightGeom, zoom,
-      predicate, broadcastRight = false, saltFactor, hotThreshold, zooms)
+    geomJoinCore(l0, leftId, leftGeom, r0, rightId, rightGeom, zoom,
+      saltFactor, hotThreshold, zooms)
   }
 
   private def geomJoinCore(l0: DataFrame, leftId: String, leftGeom: String,
-                           r00: DataFrame, rightId: String, rightGeom: String,
-                           zoom: Int, predicate: String,
-                           broadcastRight: Boolean, saltFactor: Int,
+                           r0: DataFrame, rightId: String, rightGeom: String,
+                           zoom: Int, saltFactor: Int,
                            hotThreshold: Long, zooms: Seq[Int]): DataFrame = {
     val l = fanToZooms(l0, zooms, zoom)
-    val r0 = fanToZooms(r00, zooms, zoom)
+    val r = fanToZooms(r0, zooms, zoom)
+    val candidates =
+      if (saltFactor > 1) skewJoin(l, r, hash(col(leftId)), saltFactor, hotThreshold)
+      else l.join(r, Seq("__cell"), "inner")
     // envelope-overlap prefilter (codegen'd) applied BEFORE the pair
     // dedup: a rejected candidate never enters the dedup shuffle
-    val envOverlap =
-      col("__envl")(0) <= col("__envr")(2) && col("__envl")(2) >= col("__envr")(0) &&
-        col("__envl")(1) <= col("__envr")(3) && col("__envl")(3) >= col("__envr")(1)
-    val refined =
-      if (broadcastRight) {
-        l.join(broadcast(r0), Seq("__cell"), "inner")
-          .where(envOverlap)
-          .dropDuplicates(leftId, rightId)
-      } else if (saltFactor > 1) {
-        val lp = l.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val hotCells = lp.groupBy("__cell").count()
-          .where(col("count") > hotThreshold).select("__cell")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // OPTIMIZATION r6 (guide §2.5): no hot cell found → the split is
-        // four identity joins; take the plain equi-join (same rows — see
-        // pointInPolygonAdaptive). Skew still salts exactly as before.
-        if (hotCells.isEmpty) {
-          hotCells.unpersist(false)
-          lp.join(r0, Seq("__cell"), "inner")
-            .where(envOverlap)
-            .dropDuplicates(leftId, rightId)
-        } else {
-        val s = saltFactor
-        val cold = lp.join(broadcast(hotCells), Seq("__cell"), "left_anti")
-          .join(r0.join(broadcast(hotCells), Seq("__cell"), "left_anti"), Seq("__cell"))
-        val hot = lp.join(broadcast(hotCells), Seq("__cell"), "left_semi")
-          .withColumn("__salt", pmod(hash(col(leftId)), lit(s)))
-          .join(r0.join(broadcast(hotCells), Seq("__cell"), "left_semi")
-            .withColumn("__salt", explode(sequence(lit(0), lit(s - 1)))),
-            Seq("__cell", "__salt"))
-          .drop("__salt")
-        cold.unionByName(hot).where(envOverlap).dropDuplicates(leftId, rightId)
-        }
-      } else {
-        l.join(r0, Seq("__cell"), "inner")
-          .where(envOverlap)
-          .dropDuplicates(leftId, rightId)
-      }
-    refined
-      .where(call_function(s"st_$predicate", col(leftGeom), col(rightGeom)))
+    candidates
+      .where(col("__envl")(0) <= col("__envr")(2) && col("__envl")(2) >= col("__envr")(0) &&
+        col("__envl")(1) <= col("__envr")(3) && col("__envl")(3) >= col("__envr")(1))
+      .dropDuplicates(leftId, rightId)
+      .where(F.st_intersects(col(leftGeom), col(rightGeom)))
       .drop("__cell", "__envl", "__envr")
-  }
-
-  /** Spatial overlay (reference: OGRLayer::Intersection) — the join above
-    * plus the geometric intersection of each surviving pair. */
-  def intersectionOverlay(left: DataFrame, leftId: String, leftGeom: String,
-                          right: DataFrame, rightId: String, rightGeom: String,
-                          zoom: Int): DataFrame = {
-    geomJoin(left, leftId, leftGeom, right, rightId, rightGeom, zoom)
-      .withColumn("geom_intersection", F.st_intersection(col(leftGeom), col(rightGeom)))
   }
 }

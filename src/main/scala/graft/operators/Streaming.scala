@@ -74,48 +74,34 @@ object Streaming {
   }
 
   /** Stream-static point-in-polygon: streaming points prune against the
-    * STATIC polygon side with the same cell equi-join + envelope gate +
-    * exact refine as the batch operator (SpatialJoin), broadcast by
-    * Catalyst (stream-static joins are stateless — no watermark needed).
-    * This is the incremental-ingest twin of q11: a micro-batch of arriving
-    * documents gets region-tagged with identical semantics. */
+    * STATIC polygon side with the same cover, cell equi-join and refine as
+    * the batch operator (SpatialJoin), broadcast by Catalyst (stream-static
+    * joins are stateless — no watermark needed). This is the
+    * incremental-ingest twin of q11: a micro-batch of arriving documents
+    * gets region-tagged with identical semantics. */
   def streamPointInPolygon(points: DataFrame, polys: DataFrame,
                            polyGeom: String, lonCol: String, latCol: String,
-                           zoom: Int, predicate: String = "contains"): DataFrame = {
-    F.ensureRegistered(points.sparkSession)
+                           zoom: Int): DataFrame = {
     ensureReleaseListener(points.sparkSession)
-    // persist like the batch operator: coverZooms below is a plan-time
-    // action over the cover, and the static side is re-joined by EVERY
-    // micro-batch of a long-running stream — without the persist the
-    // cells_cover explode recomputes once for the collect plus once per
-    // batch for the lifetime of the query. Lifecycle: the termination
-    // listener (ensureReleaseListener) unpersists covers once the last
-    // active streaming query stops; releaseStaticCovers() remains for
-    // callers that want to free earlier.
-    // fan: single-row-group static input → one-core WKT parse/cover build
-    // without the repartition; identity when already parallel (guide §2.5)
-    val cov = graft.core.Par.fan(polys)
-      .withColumn("__env", F.st_env_bounds(col(polyGeom)))
-      .withColumn("__cell", explode(F.cells_cover(col(polyGeom), lit(zoom))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the cover is persisted like the batch operator's, and here it
+    // matters more: the static side is re-joined by EVERY micro-batch of a
+    // long-running stream. Lifecycle: the termination listener
+    // (ensureReleaseListener) unpersists covers once the last active
+    // streaming query stops; releaseStaticCovers() remains for callers
+    // that want to free earlier.
+    val cov = SpatialJoin.cover(polys, polyGeom, zoom, "__env")
     staticCovers.add(cov)
     // `polys` is STATIC, so the mixed-zoom ladder is computable at plan
     // time exactly like the batch operator: if any polygon's capped cover
     // coarsened below `zoom`, the streaming point side must re-key to
     // every zoom present or those polygons silently never match (the
-    // batch/stream row-set equality this operator promises). Single-zoom
-    // covers — the common case — leave the point plan untouched.
-    val zooms = SpatialJoin.coverZooms(cov)
+    // batch/stream row-set equality this operator promises).
     // fanStream: each micro-batch of a single-row-group file source is one
     // scan split, so the broadcast join + JTS refine below would run on
     // one core; repartition spreads the batch to cluster parallelism
-    val pts = SpatialJoin.fanToZooms(
-      graft.core.Par.fanStream(points)
-        .withColumn("__cell", F.cell_encode(col(lonCol), col(latCol), lit(zoom))),
-      zooms, zoom)
+    val pts = SpatialJoin.keyPoints(graft.core.Par.fanStream(points), lonCol, latCol, zoom, cov)
     pts.join(broadcast(cov), Seq("__cell"))
-      .where(SpatialJoin.envGateLonLat(lonCol, latCol) &&
-        F.st_predicate_point(predicate, col(polyGeom), col(lonCol), col(latCol)))
+      .where(SpatialJoin.pipRefine(polyGeom, lonCol, latCol))
       .drop("__cell", "__env")
   }
 

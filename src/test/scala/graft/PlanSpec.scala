@@ -11,12 +11,15 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  // formatted mode annotates codegen spans ("[codegen id : N]") even
+  // under AQE, where executedPlan.toString is the pre-adaptive skeleton
+  private def formatted(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+
   private def plan(name: String): String = {
     graft.functions.F.ensureRegistered(spark)
-    val qe = SparkEntry.queries(name)(spark, TestSpark.SfSmall).queryExecution
-    // formatted mode annotates codegen spans ("[codegen id : N]") even
-    // under AQE, where executedPlan.toString is the pre-adaptive skeleton
-    qe.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    formatted(SparkEntry.queries(name)(spark, TestSpark.SfSmall))
   }
 
   test("q01: predicate pushdown reaches the parquet scan + columns pruned") {
@@ -42,6 +45,41 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("q12_pip_salted")
     assert(p.contains("__cell") && p.contains("__salt"), p)
     assert(!p.contains("CartesianProduct"), p)
+  }
+
+  // hot side: an equi-join on (cell, salt); cold: no salt at all
+  private val saltKeys = "keys \\[2\\]: \\[__cell#\\d+L?, __salt#\\d+\\]".r
+  private def assertHotSplit(p: String): Unit = {
+    assert(saltKeys.findFirstIn(p).isDefined, p)
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+  }
+  private def assertCold(p: String): Unit = {
+    assert(!p.contains("__salt"), p)
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+  }
+
+  test("adaptive PIP: forced hot salts on (cell, salt); forced cold never salts") {
+    import org.apache.spark.sql.functions.col
+    graft.functions.F.ensureRegistered(spark)
+    val polys = graft.synth.Synth.regionWkt(spark, TestSpark.SfSmall)
+      .withColumn("geom", graft.functions.F.st_geomfromwkt(col("wkt")))
+    val points = graft.synth.Synth.points(spark, TestSpark.SfSmall).select("pt_id", "lon", "lat")
+    def pip(threshold: Long) = formatted(graft.operators.SpatialJoin.pointInPolygonAdaptive(
+      polys, "geom", points, "lon", "lat", zoom = 5, saltFactor = 4, hotThreshold = threshold))
+    assertHotSplit(pip(1L))
+    assertCold(pip(Long.MaxValue))
+  }
+
+  test("geomSelfJoin salted: forced hot salts on (cell, salt); forced cold never salts") {
+    import org.apache.spark.sql.functions.col
+    graft.functions.F.ensureRegistered(spark)
+    val r = graft.synth.Synth.regionWkt(spark, TestSpark.SfSmall)
+      .withColumn("g", graft.functions.F.st_geomfromwkt(col("wkt")))
+    def self(threshold: Long) = formatted(graft.operators.SpatialJoin.geomSelfJoin(
+      r, "region_id", "g", "id_a", "ga", "id_b", "gb", zoom = 4,
+      saltFactor = 4, hotThreshold = threshold))
+    assertHotSplit(self(1L))
+    assertCold(self(Long.MaxValue))
   }
 
   test("q01/q09: aggregates are partial+final hash aggregates (map-side combine)") {

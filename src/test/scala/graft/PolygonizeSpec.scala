@@ -357,6 +357,11 @@ class PolygonizeSpec extends AnyFunSuite {
     val drv = Polygonize.resolveLabels(nodes, edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(dist == drv)
+    // a threshold at Int.MaxValue must still take the driver path (the
+    // collect limit threshold+1 must not wrap negative)
+    val drvMax = Polygonize.resolveLabels(nodes, edges, driverThreshold = Int.MaxValue.toLong)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(drvMax == drv)
     assert(dist.filter(_._1 <= 32L).forall(_._2 == 1L))
     val ckDir = spark.sparkContext.getCheckpointDir
     assert(ckDir.isDefined, "reliable checkpoint dir must be set by Checkpoints.reliable")

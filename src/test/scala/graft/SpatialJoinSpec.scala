@@ -124,18 +124,26 @@ class SpatialJoinSpec extends AnyFunSuite {
     val polys = shapes.toDF("region_id", "wkt")
       .withColumn("geom", F.st_geomfromwkt(col("wkt")))
     val points = Synth.points(spark, TestSpark.SfSmall)
-    for (bc <- Seq(true, false)) {
-      val got = SpatialJoin.pointInPolygon(polys, "geom", points, "lon", "lat", 9,
-        broadcastPolys = bc)
-        .select(col("region_id"), col("pt_id")).collect()
+    val brute = (for {
+      (rid, wkt) <- shapes
+      prep = org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(GeomIO.fromWkt(wkt))
+      (pid, lon, lat) <- pts
+      if prep.contains(GeomIO.point(lon, lat))
+    } yield (rid, pid)).toSet
+    // the salted joins must see the fanned (mixed-zoom) point keys too:
+    // blanket salt, and the adaptive split with every cell forced hot
+    val runs = Seq(
+      "broadcast" -> SpatialJoin.pointInPolygon(polys, "geom", points, "lon", "lat", 9),
+      "shuffle" -> SpatialJoin.pointInPolygon(polys, "geom", points, "lon", "lat", 9,
+        broadcastPolys = false),
+      "salted" -> SpatialJoin.pointInPolygon(polys, "geom", points, "lon", "lat", 9,
+        broadcastPolys = false, saltFactor = 4),
+      "adaptive" -> SpatialJoin.pointInPolygonAdaptive(polys, "geom", points, "lon", "lat", 9,
+        saltFactor = 4, hotThreshold = 1L))
+    for ((name, df) <- runs) {
+      val got = df.select(col("region_id"), col("pt_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val brute = (for {
-        (rid, wkt) <- shapes
-        prep = org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(GeomIO.fromWkt(wkt))
-        (pid, lon, lat) <- pts
-        if prep.contains(GeomIO.point(lon, lat))
-      } yield (rid, pid)).toSet
-      assert(got == brute, s"bc=$bc: engine ${got.size} vs brute ${brute.size}")
+      assert(got == brute, s"$name: engine ${got.size} vs brute ${brute.size}")
     }
   }
 
