@@ -1,9 +1,15 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.types._
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 /** Iceberg-shaped table IO without the Iceberg runtime (not on the
   * classpath — SURVEY.md §0): Parquet data + an atomically-renamed JSON
@@ -14,50 +20,76 @@ import java.nio.charset.StandardCharsets
   * Spark re-expression of the reference's memory-bounded restartable
   * chunking (reference: alg/gdalwarpoperation.cpp :: CollectChunkList) and
   * progress reporting (port/cpl_progress.cpp :: GDALTermProgress):
-  * a stage whose manifest exists is never recomputed; per-partition
-  * lineage + metrics rows are appended alongside every commit.
+  * a stage whose manifest exists is never recomputed. Like an Iceberg
+  * manifest's per-file `record_count`, the manifest carries one lineage
+  * entry per written data file (write-partition id, rows, bytes), taken
+  * from the files themselves, so a commit never re-scans what it wrote.
   */
 object CatalogIO {
 
   /** Write df as parquet + manifest; atomic via temp-dir rename. Returns
-    * the row count. No-op (returns committed count) if already committed. */
+    * the row count. No-op (returns committed count) if already committed.
+    *
+    * Runs exactly the data write's Spark job(s): the row count and the
+    * lineage entries come from listing `data/` and reading each part
+    * file's parquet footer on the driver. A failed write removes its temp
+    * dir and leaves the stage uncommitted. */
   def commitStage(spark: SparkSession, df: DataFrame, root: String,
                   jobId: String, stage: String): Long = {
     val dir = Paths.get(root, jobId, stage)
-    val manifest = dir.resolve("MANIFEST.json")
-    if (Files.exists(manifest)) {
-      val txt = Files.readString(manifest)
-      return "\"rows\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toLong).getOrElse(0L)
+    committedRows(dir).getOrElse {
+      Files.createDirectories(dir.getParent)
+      val tmp = dir.resolveSibling(s".$stage.tmp-${System.nanoTime()}")
+      try {
+        df.write.mode("overwrite").parquet(tmp.resolve("data").toString)
+        val files = dataFiles(spark, tmp.resolve("data"))
+        val rows = files.map(_.rows).sum
+        val lineage = files.map(f =>
+          s"""{"file":${jsonStr(f.name)},"pid":${f.pid},"rows":${f.rows},"bytes":${f.bytes}}""")
+        val manifestTxt =
+          s"""{"job_id":${jsonStr(jobId)},"stage":${jsonStr(stage)},"rows":$rows,"files":${files.length},""" +
+            s""""committed_at_ms":${System.currentTimeMillis()},"schema":${jsonStr(df.schema.json)},""" +
+            s""""lineage":${lineage.mkString("[", ",", "]")}}"""
+        Files.writeString(tmp.resolve("MANIFEST.json"), manifestTxt, StandardCharsets.UTF_8)
+        // atomic publish
+        if (Files.exists(dir)) deleteRec(dir)
+        Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
+        rows
+      } catch {
+        case e: Throwable =>
+          try deleteRec(tmp) catch { case d: Throwable => e.addSuppressed(d) }
+          throw e
+      }
     }
-    Files.createDirectories(dir.getParent)
-    val tmp = Paths.get(root, jobId, s".$stage.tmp-${System.nanoTime()}")
-    // per-partition metrics (lineage rows): partition id, rows, wall ms
-    val sc = spark.sparkContext
-    val rowsAcc = sc.longAccumulator(s"$stage-rows")
-    val counted = df.withColumn("__one", lit(1))
-    val metrics = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val out = counted.drop("__one")
-    out.write.mode("overwrite").parquet(tmp.resolve("data").toString)
-    // gather per-file (≈ per-partition) metrics from the committed files
-    val dataDir = tmp.resolve("data")
-    val partFiles = Files.list(dataDir).iterator()
-    var nFiles = 0
-    while (partFiles.hasNext) { val f = partFiles.next(); if (f.toString.endsWith(".parquet")) nFiles += 1 }
-    val rows = spark.read.parquet(dataDir.toString).count()
-    val lineage = spark.read.parquet(dataDir.toString)
-      .withColumn("__pid", spark_partition_id())
-      .groupBy("__pid").agg(count(lit(1)).as("rows"))
-      .withColumn("job_id", lit(jobId)).withColumn("stage", lit(stage))
-      .withColumn("committed_at", current_timestamp())
-    lineage.write.mode("overwrite").parquet(tmp.resolve("lineage").toString)
-    val manifestTxt =
-      s"""{"job_id":"$jobId","stage":"$stage","rows":$rows,"files":$nFiles,"schema":${jsonStr(df.schema.json)}}"""
-    Files.writeString(tmp.resolve("MANIFEST.json"), manifestTxt, StandardCharsets.UTF_8)
-    // atomic publish
-    if (Files.exists(dir)) deleteRec(dir)
-    Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
-    rows
   }
+
+  /** One written data file: its write-partition id comes from Spark's
+    * `part-NNNNN-…` name, its rows from the parquet footer. */
+  private final case class DataFile(name: String, pid: Int, rows: Long, bytes: Long)
+
+  private val PartFile = "part-(\\d+)-.*\\.parquet".r
+
+  private def dataFiles(spark: SparkSession, dataDir: Path): Seq[DataFile] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new HPath(dataDir.toUri)
+    path.getFileSystem(conf).listStatus(path).toSeq
+      .map(st => (st, st.getPath.getName)).sortBy(_._2)
+      .collect { case (st, name @ PartFile(pid)) if st.isFile =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        val rows = try reader.getRecordCount finally reader.close()
+        DataFile(name, pid.toInt, rows, st.getLen)
+      }
+  }
+
+  private val mapper = new ObjectMapper()
+
+  private def readManifest(dir: Path): JsonNode =
+    mapper.readTree(Files.readString(dir.resolve("MANIFEST.json")))
+
+  /** The committed row count of a stage, if its manifest exists. */
+  private def committedRows(dir: Path): Option[Long] =
+    if (Files.exists(dir.resolve("MANIFEST.json"))) Some(readManifest(dir).get("rows").asLong)
+    else None
 
   def readStage(spark: SparkSession, root: String, jobId: String, stage: String): DataFrame =
     spark.read.parquet(Paths.get(root, jobId, stage, "data").toString)
@@ -81,17 +113,20 @@ object CatalogIO {
   def mergeStage(spark: SparkSession, batch: DataFrame, root: String,
                  jobId: String, fromStage: String, toStage: String,
                  keyCol: String): Long = {
-    val target = readStage(spark, root, jobId, fromStage)
-    val cols = target.columns
-    require(batch.columns.sameElements(cols),
-      s"mergeStage: batch schema ${batch.columns.mkString(",")} != target ${cols.mkString(",")}")
-    val t = target.select(cols.map(c => col(c).as(s"__t_$c")).toIndexedSeq: _*)
-    val b = batch.select(cols.map(c => col(c).as(s"__b_$c")).toIndexedSeq: _*)
-    val srcPresent = col(s"__b_$keyCol").isNotNull
-    val merged = t.join(b, col(s"__t_$keyCol") === col(s"__b_$keyCol"), "full_outer")
-      .select(cols.map(c =>
-        when(srcPresent, col(s"__b_$c")).otherwise(col(s"__t_$c")).as(c)).toIndexedSeq: _*)
-    commitStage(spark, merged, root, jobId, toStage)
+    // an already-committed target returns before the read plans anything
+    committedRows(Paths.get(root, jobId, toStage)).getOrElse {
+      val target = readStage(spark, root, jobId, fromStage)
+      val cols = target.columns
+      require(batch.columns.sameElements(cols),
+        s"mergeStage: batch schema ${batch.columns.mkString(",")} != target ${cols.mkString(",")}")
+      val t = target.select(cols.map(c => col(c).as(s"__t_$c")).toIndexedSeq: _*)
+      val b = batch.select(cols.map(c => col(c).as(s"__b_$c")).toIndexedSeq: _*)
+      val srcPresent = col(s"__b_$keyCol").isNotNull
+      val merged = t.join(b, col(s"__t_$keyCol") === col(s"__b_$keyCol"), "full_outer")
+        .select(cols.map(c =>
+          when(srcPresent, col(s"__b_$c")).otherwise(col(s"__t_$c")).as(c)).toIndexedSeq: _*)
+      commitStage(spark, merged, root, jobId, toStage)
+    }
   }
 
   /** PARTITION-GRANULAR idempotent commit (the north-star "resume without
@@ -174,8 +209,23 @@ object CatalogIO {
   def isCommitted(root: String, jobId: String, stage: String): Boolean =
     Files.exists(Paths.get(root, jobId, stage, "MANIFEST.json"))
 
-  def lineage(spark: SparkSession, root: String, jobId: String, stage: String): DataFrame =
-    spark.read.parquet(Paths.get(root, jobId, stage, "lineage").toString)
+  /** The stage's lineage, one row per written data file, built from the
+    * manifest: `__pid` (write partition), `rows`, `job_id`, `stage`,
+    * `committed_at`, `file`, `bytes`. */
+  def lineage(spark: SparkSession, root: String, jobId: String, stage: String): DataFrame = {
+    val m = readManifest(Paths.get(root, jobId, stage))
+    val at = new java.sql.Timestamp(m.get("committed_at_ms").asLong)
+    val rows = m.get("lineage").elements().asScala.map(e =>
+      Row(e.get("pid").asInt, e.get("rows").asLong, m.get("job_id").asText,
+        m.get("stage").asText, at, e.get("file").asText, e.get("bytes").asLong)).toSeq
+    spark.createDataFrame(rows.asJava, LineageSchema)
+  }
+
+  private val LineageSchema = StructType(Seq(
+    StructField("__pid", IntegerType), StructField("rows", LongType),
+    StructField("job_id", StringType), StructField("stage", StringType),
+    StructField("committed_at", TimestampType), StructField("file", StringType),
+    StructField("bytes", LongType)))
 
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {

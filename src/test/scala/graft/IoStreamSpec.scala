@@ -3,8 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.TestBus
 import graft.io.CatalogIO
 import graft.operators.Streaming
+import scala.jdk.CollectionConverters._
 
 /** Checkpoint/lineage (idempotent resume) + Structured Streaming suites. */
 class IoStreamSpec extends AnyFunSuite {
@@ -26,7 +28,55 @@ class IoStreamSpec extends AnyFunSuite {
     assert(back.agg(sum("v")).collect()(0).getLong(0) == 9900)
     val lin = CatalogIO.lineage(spark, root, "job1", "stage_a")
     assert(lin.agg(sum("rows")).collect()(0).getLong(0) == 100)
-    assert(lin.columns.contains("job_id") && lin.columns.contains("committed_at"))
+    assert(lin.columns.toSeq == Seq("__pid", "rows", "job_id", "stage", "committed_at", "file", "bytes"))
+    // one entry per data file, with that file's size
+    val dataDir = java.nio.file.Paths.get(root, "job1", "stage_a", "data")
+    val sizes = java.nio.file.Files.list(dataDir).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(p => p.getFileName.toString -> java.nio.file.Files.size(p)).toMap
+    assert(lin.select("file", "bytes").collect().map(r => r.getString(0) -> r.getLong(1)).toMap == sizes)
+    // a job id with a quote and a backslash still yields a JSON manifest
+    val odd = "job\"q\\b"
+    assert(CatalogIO.commitStage(spark, df1, root, odd, "stage_a") == 100)
+    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(root, odd, "stage_a", "MANIFEST.json")))
+    assert(m.get("job_id").asText == odd && m.get("rows").asLong == 100)
+    assert(CatalogIO.commitStage(spark, df2, root, odd, "stage_a") == 100)
+    assert(CatalogIO.lineage(spark, root, odd, "stage_a").select("job_id").distinct()
+      .collect().map(_.getString(0)).toSeq == Seq(odd))
+  }
+
+  test("commitStage runs only the write job; counts empty and sparse inputs") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ckpt-jobs").toString
+    val (n, jobs) = TestBus.countJobs(spark.sparkContext) {
+      CatalogIO.commitStage(spark, spark.range(0, 1000, 1, 7).toDF(), root, "j", "seven")
+    }
+    assert(n == 1000)
+    assert(jobs == 1, s"commit ran $jobs jobs")
+    val inputs = Seq(
+      "empty" -> spark.range(0).toDF(),
+      "sparse" -> spark.range(0, 100, 1, 7).where(col("id") < 10).toDF())
+    for ((stage, df) <- inputs) {
+      val c = CatalogIO.commitStage(spark, df, root, "j", stage)
+      assert(c == CatalogIO.readStage(spark, root, "j", stage).count(), stage)
+      val lin = CatalogIO.lineage(spark, root, "j", stage)
+      assert(lin.agg(coalesce(sum("rows"), lit(0L))).collect()(0).getLong(0) == c, stage)
+    }
+    assert(CatalogIO.readStage(spark, root, "j", "sparse").count() == 10)
+  }
+
+  test("a failed commit leaves no temp dir and no manifest") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ckpt-fail").toString
+    val bad = spark.range(0, 100, 1, 4).toDF()
+      .withColumn("v", when(col("id") === 57, raise_error(lit("boom"))).otherwise(col("id")))
+    intercept[Exception](CatalogIO.commitStage(spark, bad, root, "j", "s"))
+    val left = java.nio.file.Files.list(java.nio.file.Paths.get(root, "j")).iterator().asScala
+      .map(_.toString).filter(_.contains(".tmp-")).toSeq
+    assert(left.isEmpty, s"temp dirs left behind: $left")
+    assert(!CatalogIO.isCommitted(root, "j", "s"))
+    val good = spark.range(0, 100, 1, 4).toDF().withColumn("v", col("id"))
+    assert(CatalogIO.commitStage(spark, good, root, "j", "s") == 100)
+    assert(CatalogIO.readStage(spark, root, "j", "s").count() == 100)
   }
 
   test("mergeStage: MERGE INTO law — update/insert/carry, row-level source-wins, idempotent") {
@@ -41,8 +91,13 @@ class IoStreamSpec extends AnyFunSuite {
       .toDF("k", "s", "v")
     val n = CatalogIO.mergeStage(spark, batch, root, "jm", "snap1", "snap2", "k")
     assert(n == 4)
-    // idempotent: second call is a manifest no-op with the same count
-    assert(CatalogIO.mergeStage(spark, batch, root, "jm", "snap1", "snap2", "k") == 4)
+    // idempotent: second call is a manifest no-op with the same count,
+    // answered without a single Spark job
+    val (again, jobs) = TestBus.countJobs(spark.sparkContext) {
+      CatalogIO.mergeStage(spark, batch, root, "jm", "snap1", "snap2", "k")
+    }
+    assert(again == 4)
+    assert(jobs == 0, s"idempotent merge ran $jobs jobs")
     val got = CatalogIO.readStage(spark, root, "jm", "snap2")
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else r.getString(1), r.getLong(2))).toSet
