@@ -339,8 +339,11 @@ object SparkEntry {
         .select(col("region_id").cast("long").as("box_id"), col("pt_id"))
     }),
     "q52_pip_adaptive" -> ((s, dir) => {
-      // adaptive skew handling: only cells the pre-agg flags hot are
-      // salted (here the 0.5° hot-spot cluster); identical row set to q11
+      // adaptive skew handling: a region cover under the broadcast
+      // threshold broadcasts (no cell can be hot); a larger one, like this
+      // one with its WKT text from sf0.01 up, salts only the cells the
+      // pre-agg flags hot (here the 0.5° hot-spot cluster); identical row
+      // set to q11
       F.ensureRegistered(s)
       val polys = Synth.regionWkt(s, dir).withColumn("geom", F.st_geomfromwkt(col("wkt")))
       SpatialJoin.pointInPolygonAdaptive(polys, "geom",
@@ -1398,7 +1401,8 @@ object SparkEntry {
       val r = Synth.regionWkt(s, dir).withColumn("g", F.st_geomfromwkt(col("wkt")))
       // adaptive hot-cell salting armed: the synthetic giant boxes
       // (region_id % 97) are exactly the hot-cell case at 100× scale;
-      // below the threshold the plan degrades to the plain equi-join.
+      // a cover under the broadcast threshold broadcasts instead, and
+      // below the hot threshold the plan degrades to the plain equi-join.
       // OPTIMIZATION r6: the self-join entry point builds ONE cover for
       // both sides instead of two byte-identical ones (same join core).
       SpatialJoin.geomSelfJoin(r, "region_id", "g", "id_a", "ga",

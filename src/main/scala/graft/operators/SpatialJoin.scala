@@ -29,6 +29,9 @@ import graft.functions.F
   *     salt in [0, s), build rows replicate ×s — bounding any single
   *     task's share of a hot cell at 1/s. [[skewJoin]] salts only the
   *     cells a pre-agg finds hot; AQE skew-join splits the residual.
+  *     The probe/split/salt runs only on a SHUFFLED cell join: a cover
+  *     under the broadcast threshold is broadcast instead, where no cell
+  *     can be hot, and the probe side is never counted.
   *   - a point maps to exactly ONE cell per cover zoom, so point-in-polygon
   *     emits no duplicate pairs; geometry×geometry joins dedup on the id
   *     pair before the (expensive) refine.
@@ -115,12 +118,34 @@ object SpatialJoin {
         Seq("__cell", "__salt"), "inner")
       .drop("__salt")
 
-  /** ADAPTIVE hot-cell salting (SURVEY.md §5 skew row): a pre-agg counts
-    * probe rows per cell; only cells over `hotThreshold` take the
-    * [[saltedJoin]], the cold remainder joins plainly — replication is
-    * paid exactly where skew exists. The hot-cell set stays a DataFrame
-    * joined via broadcast semi/anti joins — never a driver collect or an
-    * IN-list literal, so a million hot cells cannot bloat the plan.
+  /** The map-side cell join: `build` is broadcast, so every probe task
+    * joins and refines its own rows and the probe side never shuffles. */
+  private def broadcastCellJoin(probe: DataFrame, build: DataFrame): DataFrame =
+    probe.join(broadcast(build), Seq("__cell"), "inner")
+
+  /** Whether `build` fits under `spark.sql.autoBroadcastJoinThreshold`.
+    * Every build here is a cover persisted and materialized by the
+    * plan-time [[coverZooms]] collect, so its size is the measured size
+    * of the cached rows, not an estimate (a zoom-ladder re-key on top is
+    * sized as Spark's planner sizes it for its own broadcast choice). */
+  private def broadcastable(build: DataFrame): Boolean = {
+    val limit = build.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    limit > 0 && build.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
+  }
+
+  /** ADAPTIVE hot-cell salting (SURVEY.md §5 skew row), for a SHUFFLED
+    * cell join only. When `build` is small enough to broadcast, the join
+    * is [[broadcastCellJoin]]: a broadcast hash join never groups probe
+    * rows by cell, so no cell can be hot (Spark's AQE splits skew only in
+    * shuffled joins for the same reason), and the probe is neither
+    * persisted nor counted.
+    *
+    * Otherwise a pre-agg counts probe rows per cell; only cells over
+    * `hotThreshold` take the [[saltedJoin]], the cold remainder joins
+    * plainly — replication is paid exactly where skew exists. The hot-cell
+    * set stays a DataFrame joined via broadcast semi/anti joins — never a
+    * driver collect or an IN-list literal, so a million hot cells cannot
+    * bloat the plan.
     *
     * `probe` feeds three consumers (pre-agg, cold join, hot join), so it
     * is persisted: without it each one re-runs the full upstream scan
@@ -132,24 +157,28 @@ object SpatialJoin {
     * the bounded `isEmpty` probe finds NO hot cell, the split is four
     * joins that all degenerate to identity — take the plain equi-join
     * instead (identical rows: with no hot cell the anti-joins pass
-    * everything and the semi-joins pass nothing). */
+    * everything and the semi-joins pass nothing). Every branch returns
+    * the same rows: the cold/hot split partitions the cells disjointly and
+    * each probe row meets each build row of its cell exactly once. */
   private def skewJoin(probe: DataFrame, build: DataFrame, saltKey: Column, s: Int,
-                       hotThreshold: Long): DataFrame = {
-    val p = probe.persist(StorageLevel.MEMORY_AND_DISK)
-    val hotCells = p.groupBy("__cell").count()
-      .where(col("count") > hotThreshold).select("__cell")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (hotCells.isEmpty) {
-      hotCells.unpersist(false)
-      p.join(build, Seq("__cell"), "inner")
-    } else {
-      val hot = broadcast(hotCells)
-      val cold = p.join(hot, Seq("__cell"), "left_anti")
-        .join(build.join(hot, Seq("__cell"), "left_anti"), Seq("__cell"))
-      cold.unionByName(saltedJoin(p.join(hot, Seq("__cell"), "left_semi"),
-        build.join(hot, Seq("__cell"), "left_semi"), saltKey, s))
+                       hotThreshold: Long): DataFrame =
+    if (broadcastable(build)) broadcastCellJoin(probe, build)
+    else {
+      val p = probe.persist(StorageLevel.MEMORY_AND_DISK)
+      val hotCells = p.groupBy("__cell").count()
+        .where(col("count") > hotThreshold).select("__cell")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      if (hotCells.isEmpty) {
+        hotCells.unpersist(false)
+        p.join(build, Seq("__cell"), "inner")
+      } else {
+        val hot = broadcast(hotCells)
+        val cold = p.join(hot, Seq("__cell"), "left_anti")
+          .join(build.join(hot, Seq("__cell"), "left_anti"), Seq("__cell"))
+        cold.unionByName(saltedJoin(p.join(hot, Seq("__cell"), "left_semi"),
+          build.join(hot, Seq("__cell"), "left_semi"), saltKey, s))
+      }
     }
-  }
 
   /** Point-in-polygon join.
     * @param polys  (idCol, geomCol: WKB) polygon side
@@ -175,23 +204,24 @@ object SpatialJoin {
     val pts = keyPoints(if (broadcastPolys) graft.core.Par.fan(points) else points,
       lonCol, latCol, zoom, cov, mercator)
     val candidates =
-      if (broadcastPolys) pts.join(broadcast(cov), Seq("__cell"), "inner")
+      if (broadcastPolys) broadcastCellJoin(pts, cov)
       else if (saltFactor > 1) saltedJoin(pts, cov, hash(col(lonCol), col(latCol)), saltFactor)
       else pts.join(cov, Seq("__cell"), "inner")
     candidates.where(pipRefine(polyGeom, lonCol, latCol, predicate)).drop("__cell", "__env")
   }
 
-  /** Point-in-polygon with [[skewJoin]]: only cells holding more than
-    * `hotThreshold` points are salted ×saltFactor. Returns the same rows
+  /** Point-in-polygon with [[skewJoin]]: a cover that fits the broadcast
+    * threshold is broadcast; on a shuffled cover only cells holding more
+    * than `hotThreshold` points are salted ×saltFactor. Returns the same rows
     * as pointInPolygon (verified in SpatialJoinSpec). */
   def pointInPolygonAdaptive(polys: DataFrame, polyGeom: String,
                              points: DataFrame, lonCol: String, latCol: String,
                              zoom: Int, saltFactor: Int = 8,
                              hotThreshold: Long = 100000L): DataFrame = {
     val cov = cover(polys, polyGeom, zoom, "__env")
-    // fan the points too: the cold/hot cov joins broadcast, so the whole
-    // candidate + refine pipeline runs in point-side tasks, and the
-    // persisted probe is read three times
+    // fan the points too: a broadcast cover runs the whole candidate +
+    // refine pipeline in point-side tasks (and so do the cold/hot joins of
+    // a shuffled cover's split, whose persisted probe is read three times)
     val pts = keyPoints(graft.core.Par.fan(points), lonCol, latCol, zoom, cov)
     skewJoin(pts, cov, hash(col(lonCol), col(latCol)), saltFactor, hotThreshold)
       .where(pipRefine(polyGeom, lonCol, latCol)).drop("__cell", "__env")
@@ -204,7 +234,8 @@ object SpatialJoin {
     * re-join payload columns by id — at scale that keeps the dedup
     * shuffle narrow. With `saltFactor > 1` the cell join is a
     * [[skewJoin]] over the left cover (left rows salt by id, right rows
-    * replicate). */
+    * replicate) — a broadcast join when the right cover fits the
+    * broadcast threshold. */
   def geomJoin(left: DataFrame, leftId: String, leftGeom: String,
                right: DataFrame, rightId: String, rightGeom: String,
                zoom: Int,

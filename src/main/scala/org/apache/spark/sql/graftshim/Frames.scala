@@ -3,10 +3,12 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
-/** Package-access shim (the Register/Columns seam pattern): rebuild a
-  * DataFrame from an already-computed InternalRow RDD. `internalCreateDataFrame`
+/** Package-access shim (the Register/Columns seam pattern): build
+  * DataFrames the public API cannot. [[ofInternal]] rebuilds one from an
+  * already-computed InternalRow RDD. `internalCreateDataFrame`
   * is `private[sql]`; routing through it gives iterative loops a
   * LogicalRDD-rooted plan — i.e. real logical-plan truncation — without
   * the double-compute + disk round-trip of Dataset.checkpoint or the
@@ -17,4 +19,11 @@ object Frames {
                  schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** A DataFrame over a rewritten logical plan (`Dataset.ofRows` is
+    * `private[sql]`); `graft.core.Par.fan` uses it to move its exchange
+    * down to the scan. */
+  def ofPlan(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

@@ -58,28 +58,57 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
   }
 
-  test("adaptive PIP: forced hot salts on (cell, salt); forced cold never salts") {
+  // a broadcast cover: a map-side join on the cell key, with no hot-cell
+  // pre-aggregate (keyed on __cell) and no salt
+  private val cellAgg = "(?m)^Keys \\[\\d+\\]: \\[__cell#".r
+  private def assertBroadcastCells(p: String): Unit = {
+    assert(p.contains("BroadcastHashJoin"), p)
+    assert("Left keys \\[1\\]: \\[__cell#".r.findFirstIn(p).isDefined, p)
+    assert(cellAgg.findFirstIn(p).isEmpty, p)
+    assertCold(p)
+  }
+  private def noBroadcast[T](body: => T): T =
+    TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
+
+  private def adaptivePip(threshold: Long): String = {
     import org.apache.spark.sql.functions.col
     graft.functions.F.ensureRegistered(spark)
     val polys = graft.synth.Synth.regionWkt(spark, TestSpark.SfSmall)
       .withColumn("geom", graft.functions.F.st_geomfromwkt(col("wkt")))
     val points = graft.synth.Synth.points(spark, TestSpark.SfSmall).select("pt_id", "lon", "lat")
-    def pip(threshold: Long) = formatted(graft.operators.SpatialJoin.pointInPolygonAdaptive(
+    formatted(graft.operators.SpatialJoin.pointInPolygonAdaptive(
       polys, "geom", points, "lon", "lat", zoom = 5, saltFactor = 4, hotThreshold = threshold))
-    assertHotSplit(pip(1L))
-    assertCold(pip(Long.MaxValue))
   }
 
-  test("geomSelfJoin salted: forced hot salts on (cell, salt); forced cold never salts") {
+  private def saltedSelfJoin(threshold: Long): String = {
     import org.apache.spark.sql.functions.col
     graft.functions.F.ensureRegistered(spark)
     val r = graft.synth.Synth.regionWkt(spark, TestSpark.SfSmall)
       .withColumn("g", graft.functions.F.st_geomfromwkt(col("wkt")))
-    def self(threshold: Long) = formatted(graft.operators.SpatialJoin.geomSelfJoin(
+    formatted(graft.operators.SpatialJoin.geomSelfJoin(
       r, "region_id", "g", "id_a", "ga", "id_b", "gb", zoom = 4,
       saltFactor = 4, hotThreshold = threshold))
-    assertHotSplit(self(1L))
-    assertCold(self(Long.MaxValue))
+  }
+
+  // the hot-cell split runs only on a shuffled cell join: these pins turn
+  // broadcasting off so the covers take it
+  test("adaptive PIP: forced hot salts on (cell, salt); forced cold never salts") {
+    noBroadcast {
+      assertHotSplit(adaptivePip(1L))
+      assertCold(adaptivePip(Long.MaxValue))
+    }
+  }
+
+  test("geomSelfJoin salted: forced hot salts on (cell, salt); forced cold never salts") {
+    noBroadcast {
+      assertHotSplit(saltedSelfJoin(1L))
+      assertCold(saltedSelfJoin(Long.MaxValue))
+    }
+  }
+
+  test("adaptive PIP and salted geomSelfJoin broadcast a small cover: no probe, no salt") {
+    assertBroadcastCells(adaptivePip(1L))
+    assertBroadcastCells(saltedSelfJoin(1L))
   }
 
   test("q01/q09: aggregates are partial+final hash aggregates (map-side combine)") {

@@ -147,6 +147,42 @@ class SpatialJoinSpec extends AnyFunSuite {
     }
   }
 
+  // the same cover-coarsening input in both cell-join regimes: a cover
+  // under the broadcast threshold joins map-side and skips the hot-cell
+  // split; with broadcasting off every hot cell (threshold 1) is salted
+  test("mixed-zoom giant polygon: adaptive PIP and salted geomSelfJoin rows hold with the cover broadcast or shuffled") {
+    F.ensureRegistered(spark)
+    val shapes = Seq(
+      (1L, "POLYGON((-179 -89, 179 -89, 179 89, -179 89, -179 -89))"), // giant
+      (2L, "POLYGON((10 10, 30 10, 30 30, 10 30, 10 10))"))            // small
+    val polys = shapes.toDF("region_id", "wkt")
+      .withColumn("geom", F.st_geomfromwkt(col("wkt")))
+    val geoms = polys.unionByName(Synth.regionWkt(spark, TestSpark.SfSmall).limit(20)
+      .select((col("region_id") + 1000).as("region_id"), col("wkt"))
+      .withColumn("geom", F.st_geomfromwkt(col("wkt"))))
+    val points = Synth.points(spark, TestSpark.SfSmall)
+    def pairs(df: org.apache.spark.sql.DataFrame, a: String, b: String): Set[(Long, Long)] =
+      df.select(col(a).cast("long"), col(b).cast("long")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val bc = pairs(SpatialJoin.pointInPolygon(polys, "geom", points, "lon", "lat", 9),
+      "region_id", "pt_id")
+    val two = pairs(SpatialJoin.geomJoin(
+      geoms.select(col("region_id").as("id_a"), col("geom").as("ga")), "id_a", "ga",
+      geoms.select(col("region_id").as("id_b"), col("geom").as("gb")), "id_b", "gb", 9),
+      "id_a", "id_b")
+    assert(bc.nonEmpty && two.size > geoms.count())
+    def check(regime: String): Unit = {
+      val adaptive = pairs(SpatialJoin.pointInPolygonAdaptive(polys, "geom", points,
+        "lon", "lat", 9, saltFactor = 4, hotThreshold = 1L), "region_id", "pt_id")
+      assert(adaptive == bc, s"$regime: adaptive ${adaptive.size} vs broadcast ${bc.size}")
+      val self = pairs(SpatialJoin.geomSelfJoin(geoms, "region_id", "geom",
+        "id_a", "ga", "id_b", "gb", 9, saltFactor = 4, hotThreshold = 1L), "id_a", "id_b")
+      assert(self == two, s"$regime: salted self ${self.size} vs geomJoin ${two.size}")
+    }
+    check("broadcast cover")
+    TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(check("shuffled cover"))
+  }
+
   test("PIP on the MERCATOR cell grid == geodetic == brute force (post-warp prune path)") {
     F.ensureRegistered(spark)
     val polys = Synth.regionWkt(spark, TestSpark.SfSmall)

@@ -14,4 +14,12 @@ object TestSpark {
     .getOrCreate()
 
   val SfSmall = "/root/testdata/sf0.001"
+
+  /** Runs `body` with one session SQL setting changed, then restores it. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
