@@ -52,17 +52,15 @@ object SparkEntry {
     * of source input each with a floor of 4: a 2 MB local backlog gets 4
     * stores (measured: q223 8.1 s → 4.8 s vs 32 stores), a 100-TB
     * backlog gets thousands. Emitted rows are partition-count invariant
-    * (the 7-core verify gate varies this by construction).
-    * GRAFT_STREAM_PARTS overrides for experiments. */
-  private def streamStateParts(srcs: String*): Int =
-    sys.env.get("GRAFT_STREAM_PARTS").map(_.toInt).getOrElse {
-      def sz(p: String): Long = {
-        val f = new java.io.File(p)
-        val kids = if (f.isDirectory) f.listFiles else null
-        if (kids != null) kids.map(_.length).sum else f.length
-      }
-      math.max(4, (srcs.map(sz).sum >> 26).toInt)
+    * (the 7-core verify gate varies this by construction). */
+  private def streamStateParts(srcs: String*): Int = {
+    def sz(p: String): Long = {
+      val f = new java.io.File(p)
+      val kids = if (f.isDirectory) f.listFiles else null
+      if (kids != null) kids.map(_.length).sum else f.length
     }
+    math.max(4, (srcs.map(sz).sum >> 26).toInt)
+  }
 
   /** Scope `spark.sql.shuffle.partitions` to a streaming query (the
     * setting binds at query START); restores the session value for
@@ -2698,9 +2696,10 @@ object SparkEntry {
     }),
     "q169_dedup_clusters" -> ((s, dir) =>
       // near-dup CLUSTERS: q24's MinHash-LSH pairs -> connected components
-      // by min-label propagation with pointer jumping + reliable
-      // checkpoints; keeper = component min id — the verdict a dedup
-      // pipeline actually applies (operators/Dedup.clusters)
+      // through Polygonize.resolveLabels (driver union-find below its edge
+      // threshold, distributed pointer jumping above); keeper = component
+      // min id — the verdict a dedup pipeline actually applies
+      // (operators/Dedup.clusters)
       Dedup.clusters(Dedup.minhashLsh(
         s.read.parquet(s"$dir/documents.parquet"),
         "doc_id", "text", numPerm = 64, bands = 16, shingleK = 3,

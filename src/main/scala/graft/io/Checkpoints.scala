@@ -4,9 +4,11 @@ import org.apache.spark.sql.DataFrame
 
 /** Reliable (cluster-safe) eager checkpoints for iterative operators.
   *
-  * The kNN ring-doubling loop and polygonize's pointer-jumping label loop
-  * must truncate lineage every round (a persist would stack O(rounds) of
-  * plan on plan). Round-4's `localCheckpoint(true)` did that but is
+  * The kNN ring-doubling loop checkpoints every round with [[reliable]];
+  * the loops that go through [[RoundCache]] are Network's PageRank and
+  * SSSP and the distributed path of Polygonize.resolveLabels (which also
+  * serves Contour and Dedup.clusters). Each must truncate lineage every
+  * round (a persist would stack O(rounds) of plan on plan). Round-4's `localCheckpoint(true)` did that but is
   * cluster-UNSAFE: a local checkpoint's blocks live only on the executors
   * that computed them, so one lost executor poisons the lineage of every
   * later round (the same analysis Dedup.ngramJaccard documents). This

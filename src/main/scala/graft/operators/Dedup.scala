@@ -372,64 +372,26 @@ object Dedup {
     * intent (A~B, B~C → one retained document), so pairs alone
     * under-delete.
     *
-    * Algorithm: distributed min-label propagation with pointer jumping —
-    * each round every node takes min(own label, min neighbor label,
-    * label(label)); the shortcut step gives O(log n) rounds on chain
-    * components (plain neighbor propagation needs O(diameter)). Each round
-    * is two key-bounded equi-joins + one hash agg; lineage is truncated
-    * every round with a RELIABLE checkpoint (io/Checkpoints), so the loop
-    * survives executor loss and resumes idempotently — the same contract
-    * as kNN's ring loop. Only ids shuffle, never text.
+    * A projection of [[Polygonize.resolveLabels]] over the pair graph
+    * (nodes = the distinct pair endpoints): below its edge threshold the
+    * pairs are collected once and solved by driver union-find, above it
+    * the distributed hash-to-min + pointer-jumping loop runs on reliable
+    * checkpoints. Both return the component minimum. Only ids move, never
+    * text. The pair edges are persisted and not released here: the
+    * result reads its node set from them.
     *
     * Returns (doc_id, cluster_id, is_keeper) for every doc in some pair;
     * docs with no near-dup pair are their own keepers by definition and
-    * are left to the caller (anti-join), keeping the loop's working set
+    * are left to the caller (anti-join), keeping the working set
     * proportional to the duplicate subgraph, not the corpus. */
-  def clusters(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
+  def clusters(pairs: DataFrame): DataFrame = {
     val edges = pairs.select(col("id_a").as("a"), col("id_b").as("b"))
-      .union(pairs.select(col("id_b").as("a"), col("id_a").as("b")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("a").as("id")).distinct()
-      .withColumn("label", col("id"))
-    val rc = new graft.io.Checkpoints.RoundCache()
-    var changed = 1L
-    var rounds = 0
-    // OPTIMIZATION r6 (guide §1.2, the q263 stride): TWO propagation
-    // rounds per convergence probe — the lazy cuts chain into one job,
-    // halving driver round-trips. Labels are monotone non-increasing, so
-    // a zero-change second round can only occur at the fixpoint, and an
-    // extra round at the fixpoint is an identity.
-    while (changed > 0) {
-      require(rounds < maxRounds, s"label propagation did not converge in $maxRounds rounds")
-      var probe: DataFrame = null
-      var inner = 0
-      while (inner < 2) {
-        // min label among direct neighbors
-        val nbrMin = edges
-          .join(labels.select(col("id").as("a"), col("label").as("la")), Seq("a"))
-          .groupBy(col("b").as("id")).agg(min(col("la")).as("nl"))
-        // pointer jump: the label of my label (label(l) <= l always holds,
-        // so least() below can only improve)
-        val hop = labels.select(col("id").as("label"), col("label").as("ll"))
-        val next = labels
-          .join(nbrMin, Seq("id"), "left")
-          .join(hop, Seq("label"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("nl"), col("label")),
-              coalesce(col("ll"), col("label"))).as("label"),
-            (least(col("label"), coalesce(col("nl"), col("label")),
-              coalesce(col("ll"), col("label"))) < col("label")).cast("long").as("chg"))
-        // RoundCache: plan-truncating cached round, reliable cut every 8th
-        probe = rc.cut(next)
-        labels = probe.select("id", "label")
-        rounds += 1
-        inner += 1
-      }
-      changed = probe.agg(coalesce(sum(col("chg")), lit(0L))).collect()(0).getLong(0)
-    }
-    edges.unpersist(false)
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"),
-      when(col("label") === col("id"), 1).otherwise(0).cast("int").as("is_keeper"))
+    val nodes = edges.select(col("a").as("node"))
+      .union(edges.select(col("b").as("node"))).distinct()
+    Polygonize.resolveLabels(nodes, edges)
+      .select(col("node").as("doc_id"), col("rep").as("cluster_id"),
+        when(col("rep") === col("node"), 1).otherwise(0).cast("int").as("is_keeper"))
   }
 
   /** C4's corpus-GLOBAL span dedup (Raffel et al. 2020 §2.2: "we

@@ -175,8 +175,9 @@ object Polygonize {
     * edges it is collected and solved with union-find on the driver in one
     * pass (the same small-graph shortcut GraphFrames' connectedComponents
     * takes); above it, distributed hash-to-min + pointer jumping iterates
-    * to fixpoint in O(log diameter) shuffle rounds. Results are identical
-    * — both produce rep = min node id of the component. */
+    * to fixpoint in O(log diameter) shuffle rounds, and raises if it has
+    * not converged after `maxIter` rounds. Results are identical — both
+    * produce rep = min node id of the component. */
   def resolveLabels(nodes: DataFrame, edges: DataFrame, maxIter: Int = 50,
                     driverThreshold: Long = 4000000L): DataFrame = {
     val spark = nodes.sparkSession
@@ -188,10 +189,14 @@ object Polygonize {
     // delivers the edges in a single job; union-find's min-root merge
     // law makes the component representatives order-independent, so the
     // result is unchanged. The limit is clamped to Int.MaxValue: a
-    // threshold at or past it would wrap threshold+1 negative.
+    // threshold at or past it would wrap threshold+1 negative. A limit
+    // collect scans partitions progressively (one job for the first,
+    // then ×4 per job), so an edge table small enough to broadcast is
+    // collected whole instead: one job over every partition.
     import spark.implicits._
-    val collected = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .as[(Long, Long)].limit(math.min(driverThreshold, Int.MaxValue - 1L).toInt + 1).collect()
+    val typed = edges.select(col("a").cast("long"), col("b").cast("long")).as[(Long, Long)]
+    val collected = (if (SpatialJoin.broadcastable(typed.toDF())) typed
+      else typed.limit(math.min(driverThreshold, Int.MaxValue - 1L).toInt + 1)).collect()
     if (collected.length <= driverThreshold) {
       val parent = new java.util.HashMap[Long, Long]()
       def find(x0: Long): Long = {
@@ -243,10 +248,11 @@ object Polygonize {
     // lazy cuts chain into one job; a zero-change second round can only
     // occur at the fixpoint since labels are monotone, and an extra
     // round at the fixpoint is an identity).
-    while (!done && iter < maxIter) {
+    while (!done) {
+      require(iter < maxIter, s"label resolution did not converge in $maxIter rounds")
       var inner = 0
       var probe: DataFrame = null
-      while (inner < 2 && !done) {
+      while (inner < 2) {
         val nbrMin = sym.join(rep.withColumnRenamed("node", "y"), Seq("y"))
           .groupBy(col("x").as("node")).agg(min("rep").as("nbr_rep"))
         val stepped = rep.join(nbrMin, Seq("node"), "left")
@@ -266,8 +272,7 @@ object Polygonize {
         iter += 1
         inner += 1
       }
-      done = done ||
-        probe.agg(coalesce(sum(col("chg")), lit(0L))).collect()(0).getLong(0) == 0L
+      done = probe.agg(coalesce(sum(col("chg")), lit(0L))).collect()(0).getLong(0) == 0L
     }
     rep
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.TestBus
 import org.apache.spark.sql.functions._
 import graft.functions.F
 import graft.operators.{Ann, Dedup, Media, Quality}
@@ -470,7 +471,10 @@ class PipelineSpec extends AnyFunSuite {
   test("dedup clusters: chain components converge, keeper = min id") {
     val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
       .toDF("id_a", "id_b")
-    val out = Dedup.clusters(pairs).collect()
+    // the driver path: one bounded edge collect, no convergence probes
+    val (built, jobs) = TestBus.countJobs(spark.sparkContext)(Dedup.clusters(pairs))
+    assert(jobs == 1, s"building clusters ran $jobs jobs")
+    val out = built.collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2))).toMap
     assert(out.keySet == Set(1L, 2L, 3L, 4L, 5L, 10L, 11L))
     for (id <- Seq(1L, 2L, 3L, 4L, 5L)) assert(out(id)._1 == 1L, s"doc $id")

@@ -371,6 +371,16 @@ class PolygonizeSpec extends AnyFunSuite {
       "checkpoint files must exist under the reliable checkpoint dir")
   }
 
+  test("distributed label loop raises at its round cap instead of returning unconverged labels") {
+    // a 64-node chain needs more than the 2 rounds of one probe stride
+    val nodes = (1L to 64L).toDF("node")
+    val edges = (1L until 64L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalArgumentException] {
+      Polygonize.resolveLabels(nodes, edges, maxIter = 1, driverThreshold = 0L).collect()
+    }
+    assert(e.getMessage.contains("did not converge"))
+  }
+
   test("footprint: per-scene components match a driver union-find; bbox georeferenced exactly") {
     // scene (0,0): two valid runs split by a nodata column; scene (1,0):
     // fully valid -> one full-tile component
