@@ -8,7 +8,8 @@ import org.apache.spark.sql.DataFrame
   * the loops that go through [[RoundCache]] are Network's PageRank and
   * SSSP and the distributed path of Polygonize.resolveLabels (which also
   * serves Contour and Dedup.clusters). Each must truncate lineage every
-  * round (a persist would stack O(rounds) of plan on plan). Round-4's `localCheckpoint(true)` did that but is
+  * round (a persist would stack O(rounds) of plan on plan). Round-4's
+  * `localCheckpoint(true)` did that but is
   * cluster-UNSAFE: a local checkpoint's blocks live only on the executors
   * that computed them, so one lost executor poisons the lineage of every
   * later round (the same analysis Dedup.ngramJaccard documents). This
@@ -44,6 +45,20 @@ object Checkpoints {
     }
     df.checkpoint() // eager: materializes now, truncates lineage
   }
+
+  /** LAZY persisted copy of `df`: the first action over the returned
+    * frame computes `df` once into a MEMORY_AND_DISK InternalRow RDD,
+    * later actions read its blocks, and the returned plan starts at that
+    * RDD (graftshim.Frames). Unlike `Dataset.persist`, whose CacheManager
+    * entry lives until an explicit unpersist, only the returned frame and
+    * the frames built on it reference the RDD, so Spark's ContextCleaner
+    * unpersists it once they are all unreachable. Lost blocks recompute
+    * from the kept lineage. */
+  def cached(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graftshim.Frames.ofInternal(df.sparkSession, persisted(df), df.schema)
+
+  private def persisted(df: DataFrame) = df.queryExecution.toRdd.map(_.copy())
+    .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Per-round lineage management for iterative loops (OPTIMIZATION r6,
     * guide §5): an eager reliable checkpoint computes every round TWICE
@@ -81,8 +96,7 @@ object Checkpoints {
           release()
           ck
         } else {
-          val rdd = df.queryExecution.toRdd.map(_.copy())
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val rdd = persisted(df)
           if (r2 != null) r2.unpersist(false): Unit
           r2 = r1
           r1 = rdd

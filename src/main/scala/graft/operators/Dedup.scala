@@ -377,16 +377,18 @@ object Dedup {
     * pairs are collected once and solved by driver union-find, above it
     * the distributed hash-to-min + pointer-jumping loop runs on reliable
     * checkpoints. Both return the component minimum. Only ids move, never
-    * text. The pair edges are persisted and not released here: the
-    * result reads its node set from them.
+    * text. The pair edges are read twice, by the edge collect and by the
+    * result's node set, so they are computed once into a
+    * [[graft.io.Checkpoints.cached]] copy. The result owns that copy:
+    * Spark releases its blocks once the result is unreachable.
     *
     * Returns (doc_id, cluster_id, is_keeper) for every doc in some pair;
     * docs with no near-dup pair are their own keepers by definition and
     * are left to the caller (anti-join), keeping the working set
     * proportional to the duplicate subgraph, not the corpus. */
   def clusters(pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("id_a").as("a"), col("id_b").as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = graft.io.Checkpoints.cached(
+      pairs.select(col("id_a").as("a"), col("id_b").as("b")))
     val nodes = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
     Polygonize.resolveLabels(nodes, edges)

@@ -189,14 +189,10 @@ object Polygonize {
     // delivers the edges in a single job; union-find's min-root merge
     // law makes the component representatives order-independent, so the
     // result is unchanged. The limit is clamped to Int.MaxValue: a
-    // threshold at or past it would wrap threshold+1 negative. A limit
-    // collect scans partitions progressively (one job for the first,
-    // then ×4 per job), so an edge table small enough to broadcast is
-    // collected whole instead: one job over every partition.
+    // threshold at or past it would wrap threshold+1 negative.
     import spark.implicits._
-    val typed = edges.select(col("a").cast("long"), col("b").cast("long")).as[(Long, Long)]
-    val collected = (if (SpatialJoin.broadcastable(typed.toDF())) typed
-      else typed.limit(math.min(driverThreshold, Int.MaxValue - 1L).toInt + 1)).collect()
+    val collected = edges.select(col("a").cast("long"), col("b").cast("long"))
+      .as[(Long, Long)].limit(math.min(driverThreshold, Int.MaxValue - 1L).toInt + 1).collect()
     if (collected.length <= driverThreshold) {
       val parent = new java.util.HashMap[Long, Long]()
       def find(x0: Long): Long = {

@@ -128,7 +128,7 @@ object SpatialJoin {
     * plan-time [[coverZooms]] collect, so its size is the measured size
     * of the cached rows, not an estimate (a zoom-ladder re-key on top is
     * sized as Spark's planner sizes it for its own broadcast choice). */
-  private[operators] def broadcastable(build: DataFrame): Boolean = {
+  private def broadcastable(build: DataFrame): Boolean = {
     val limit = build.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     limit > 0 && build.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
   }

@@ -471,15 +471,40 @@ class PipelineSpec extends AnyFunSuite {
   test("dedup clusters: chain components converge, keeper = min id") {
     val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
       .toDF("id_a", "id_b")
-    // the driver path: one bounded edge collect, no convergence probes
-    val (built, jobs) = TestBus.countJobs(spark.sparkContext)(Dedup.clusters(pairs))
-    assert(jobs == 1, s"building clusters ran $jobs jobs")
+    // the driver path: the bounded edge collect writes no shuffle (the
+    // distributed loop's joins and convergence probes each write some)
+    val (built, shuffles) = TestBus.countShuffles(spark.sparkContext)(Dedup.clusters(pairs))
+    assert(shuffles == 0, s"building clusters wrote $shuffles shuffles")
     val out = built.collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2))).toMap
     assert(out.keySet == Set(1L, 2L, 3L, 4L, 5L, 10L, 11L))
     for (id <- Seq(1L, 2L, 3L, 4L, 5L)) assert(out(id)._1 == 1L, s"doc $id")
     for (id <- Seq(10L, 11L)) assert(out(id)._1 == 10L, s"doc $id")
     assert(out.collect { case (id, (_, 1)) => id }.toSet == Set(1L, 10L))
+  }
+
+  test("dedup clusters: the cached pair edges are released with the result") {
+    val sc = spark.sparkContext
+    val before = TestBus.rddsWithBlocks(sc)
+    // built and consumed inside a method, so no local keeps the result alive
+    def run(): Set[Int] = {
+      val out = Dedup.clusters(Seq((2L, 1L), (2L, 3L)).toDF("id_a", "id_b"))
+      assert(out.queryExecution.withCachedData.collectFirst {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }.isEmpty, "the result must not read a CacheManager entry")
+      assert(out.count() == 3L)
+      TestBus.rddsWithBlocks(sc) -- before
+    }
+    val held = run()
+    assert(held.nonEmpty, "the pair edges are cached while the result is live")
+    var left = held
+    var tries = 0
+    while (left.nonEmpty && tries < 100) {
+      System.gc(); Thread.sleep(50)
+      left = held & TestBus.rddsWithBlocks(sc)
+      tries += 1
+    }
+    assert(left.isEmpty, s"blocks of RDDs $left outlive the result")
   }
 
   test("decontaminateBloom: exact-hit set == exact decontaminate; FPs observable; shrinking the filter never loses a hit") {

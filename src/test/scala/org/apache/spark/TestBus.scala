@@ -1,7 +1,7 @@
 package org.apache.spark
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 
 /** The listener bus is private to Spark; specs drain it so that a listener
   * has seen every event of the code under test before it is read. */
@@ -10,17 +10,36 @@ object TestBus {
 
   /** Runs `body` and returns its result with the number of Spark jobs it
     * started. Not meaningful while other threads run jobs on `sc`. */
-  def countJobs[T](sc: SparkContext)(body: => T): (T, Int) = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-    }
+  def countJobs[T](sc: SparkContext)(body: => T): (T, Int) =
+    count(sc, n => new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet(): Unit
+    })(body)
+
+  /** Runs `body` and returns its result with the number of shuffle map
+    * stages it submitted, i.e. the shuffles it wrote. Unlike a job count
+    * this does not depend on how many partitions a limit scan reads. */
+  def countShuffles[T](sc: SparkContext)(body: => T): (T, Int) =
+    count(sc, n => new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.shuffleDepId.isDefined) n.incrementAndGet(): Unit
+    })(body)
+
+  /** Ids of the RDDs that have blocks in the block manager. */
+  def rddsWithBlocks(sc: SparkContext): Set[Int] =
+    sc.env.blockManager.master
+      .getMatchingBlockIds(_.isRDD, askStorageEndpoints = true)
+      .collect { case b: org.apache.spark.storage.RDDBlockId => b.rddId }.toSet
+
+  private def count[T](sc: SparkContext, listen: AtomicInteger => SparkListener)
+                      (body: => T): (T, Int) = {
+    val n = new AtomicInteger
+    val listener = listen(n)
     drain(sc) // events of earlier jobs must not reach the new listener
     sc.addSparkListener(listener)
     try {
       val out = body
       drain(sc)
-      (out, jobs.get)
+      (out, n.get)
     } finally sc.removeSparkListener(listener)
   }
 }
