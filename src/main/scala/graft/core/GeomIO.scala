@@ -13,6 +13,12 @@ import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory
   * ogr/ogrgeometryfactory.cpp :: createFromWkt/createFromWkb). Geometry
   * travels through Spark plans as WKB in a BinaryType column (no UDT,
   * SURVEY.md §2.2); these helpers run inside Catalyst expressions.
+  *
+  * `toWkb(fromWkt(s))` is the reference result for text: `Wkt.toWkb`
+  * writes the same bytes directly for 2D POINT/LINESTRING/POLYGON text
+  * (the analog of ogr/ogrutils.cpp :: OGRWktReadToken) and returns null for
+  * everything else, which then goes through `fromWkt`. `pointOrdinate`
+  * reads a plain point's coordinate from WKB without building a geometry.
   */
 object GeomIO {
   val factory = new GeometryFactory(new PrecisionModel(PrecisionModel.FLOATING), 4326)
@@ -28,6 +34,20 @@ object GeomIO {
   def toWkt(g: Geometry): String = wktWriter.get.write(g)
   def fromWkb(wkb: Array[Byte]): Geometry = wkbReader.get.read(wkb)
   def toWkb(g: Geometry): Array[Byte] = wkbWriter.get.write(g)
+
+  /** x (`axis` 0) or y (`axis` 1) of a 21-byte, type-1 point WKB of
+    * either byte order, read as `fromWkb(wkb).getCoordinate` reads it.
+    * NaN for any other bytes: other types, EWKB flags or an SRID, Z/M, an
+    * unknown byte-order byte, or a NaN coordinate (which JTS reads as
+    * POINT EMPTY), so the caller sends those to JTS. */
+  def pointOrdinate(wkb: Array[Byte], axis: Int): Double = {
+    if (wkb.length != 21 || (wkb(0) != 0 && wkb(0) != 1)) return Double.NaN
+    val b = java.nio.ByteBuffer.wrap(wkb).order(
+      if (wkb(0) == 1) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
+    if (b.getInt(1) != 1) return Double.NaN
+    val x = b.getDouble(5); val y = b.getDouble(13)
+    if (x.isNaN || y.isNaN) Double.NaN else if (axis == 0) x else y
+  }
 
   def point(lon: Double, lat: Double): Geometry =
     factory.createPoint(new Coordinate(lon, lat))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.Geometry
-import graft.core.{GeomIO, TileMath}
+import graft.core.{GeomIO, TileMath, Wkt}
 
 /** Geometry scalar functions as native Catalyst expressions over WKB
   * BinaryType columns, backed by JTS — semantics-identical to the
@@ -22,17 +22,27 @@ object GeomOps {
   def fromWkb(b: Array[Byte]): Geometry = GeomIO.fromWkb(b)
 }
 
+/** st_geomfromwkt(text) → WKB. 2D POINT/LINESTRING/POLYGON text is
+  * scanned straight from the UTF-8 bytes by `core.Wkt` (the analog of the
+  * reference's ogr/ogrutils.cpp :: OGRWktReadToken scanner); it writes the
+  * bytes JTS would, so WKB-keyed caches and oracle hashes see no change.
+  * Any other text falls back to the JTS `WKTReader` path unchanged: blank
+  * text → null, curves → `core.Arc`, the rest → JTS, including its
+  * exceptions for malformed input. */
 case class StGeomFromWkt(child: Expression)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
   override def nullSafeEval(v: Any): Any = {
+    val u = v.asInstanceOf[UTF8String]
+    val wkb = Wkt.toWkb(u.getBytes)
+    if (wkb != null) return wkb
     // empty/blank → null, NOT an error: the interleaved doc schema uses ''
     // for the non-applicable field of a span (media rows carry text='').
     // Catalyst may legally reorder filter conjuncts, so an inferred
     // isnotnull(f(text)) can run BEFORE a kind='text' predicate — parsing
     // must tolerate the convention. Truly malformed WKT still throws.
-    val s = v.asInstanceOf[UTF8String].toString
+    val s = u.toString
     if (s.isEmpty || s.forall(_.isWhitespace)) null
     // curve WKT (CIRCULARSTRING/COMPOUNDCURVE/CURVEPOLYGON/MULTICURVE)
     // linearizes on ingest (core/Arc) — JTS/GEOS has no native arcs, and
@@ -445,17 +455,27 @@ case class GeomUnaryToString(child: Expression, op: String)
   override def prettyName: String = s"st_$op"
 }
 
-/** geometry → double ops: area, length, x, y */
+/** geometry → double ops: area, length, x, y. x and y of a plain 2D
+  * point WKB are read from the bytes (`GeomIO.pointOrdinate`); every other
+  * WKB goes through JTS. */
 case class GeomUnaryToDouble(child: Expression, op: String)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = DoubleType
   override def nullSafeEval(v: Any): Any = {
-    val g = GeomOps.fromWkb(v.asInstanceOf[Array[Byte]])
+    val wkb = v.asInstanceOf[Array[Byte]]
     op match {
-      case "area"   => g.getArea
-      case "length" => g.getLength
-      case "x"      => g.getCoordinate.x
-      case "y"      => g.getCoordinate.y
+      case "area"   => GeomOps.fromWkb(wkb).getArea
+      case "length" => GeomOps.fromWkb(wkb).getLength
+      case "x"      => ordinate(wkb, 0)
+      case "y"      => ordinate(wkb, 1)
+    }
+  }
+  private def ordinate(wkb: Array[Byte], axis: Int): Double = {
+    val d = GeomIO.pointOrdinate(wkb, axis)
+    if (!d.isNaN) d
+    else {
+      val c = GeomOps.fromWkb(wkb).getCoordinate
+      if (axis == 0) c.x else c.y
     }
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(c, op)
