@@ -5082,7 +5082,7 @@ object SparkEntry {
       // supplier ids (width-10 lattice + two express-edge tiers so the
       // diameter stays in the tens at every SF) relaxed to the exact
       // distance fixpoint by operators/Network.shortestPaths — BSP
-      // Bellman-Ford rounds with reliable-checkpoint lineage truncation.
+      // Bellman-Ford rounds on the io/Checkpoints.iterate driver.
       // The oracle replays the graph with a recursive CTE bounded by a
       // distance cap strictly above the true diameter. All integer.
       Network.shortestPaths(gnmEdges(s, dir)._2, source = 0L)

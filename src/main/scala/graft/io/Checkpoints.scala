@@ -2,22 +2,24 @@ package graft.io
 
 import org.apache.spark.sql.DataFrame
 
-/** Reliable (cluster-safe) eager checkpoints for iterative operators.
+/** Reliable (cluster-safe) checkpoints and the round driver for
+  * iterative operators.
   *
   * The kNN ring-doubling loop checkpoints every round with [[reliable]];
-  * the loops that go through [[RoundCache]] are Network's PageRank and
-  * SSSP and the distributed path of Polygonize.resolveLabels (which also
-  * serves Contour and Dedup.clusters). Each must truncate lineage every
-  * round (a persist would stack O(rounds) of plan on plan). Round-4's
-  * `localCheckpoint(true)` did that but is
-  * cluster-UNSAFE: a local checkpoint's blocks live only on the executors
-  * that computed them, so one lost executor poisons the lineage of every
-  * later round (the same analysis Dedup.ngramJaccard documents). This
-  * helper routes the truncation through a RELIABLE checkpoint instead —
-  * written to `sparkContext.setCheckpointDir`, which on a real cluster the
-  * caller points at shared storage (HDFS/S3); blocks then survive executor
-  * loss and any stage resumes idempotently, matching the engine's
-  * checkpoint-table contract (CatalogIO).
+  * the fixpoint loops run on [[iterate]] (Network.shortestPaths and the
+  * distributed path of Polygonize.resolveLabels, which also serves
+  * Contour and Dedup.clusters) and [[repeat]] (Network.pagerankInt).
+  * Each must truncate lineage every round (a persist would stack
+  * O(rounds) of plan on plan). Round-4's `localCheckpoint(true)` did that
+  * but is cluster-UNSAFE: a local checkpoint's blocks live only on the
+  * executors that computed them, so one lost executor poisons the
+  * lineage of every later round (the same analysis Dedup.ngramJaccard
+  * documents). [[reliable]] writes to `sparkContext.setCheckpointDir`,
+  * which on a real cluster the caller points at shared storage
+  * (HDFS/S3); blocks then survive executor loss and any stage resumes
+  * idempotently, matching the engine's checkpoint-table contract
+  * (CatalogIO). The driver's per-round cuts between reliable checkpoints
+  * keep their lineage, so lost blocks recompute.
   *
   * If no checkpoint dir is configured (local runs, tests), a per-JVM temp
   * dir is created once and removed at JVM exit.
@@ -46,71 +48,88 @@ object Checkpoints {
     df.checkpoint() // eager: materializes now, truncates lineage
   }
 
-  /** LAZY persisted copy of `df`: the first action over the returned
-    * frame computes `df` once into a MEMORY_AND_DISK InternalRow RDD,
-    * later actions read its blocks, and the returned plan starts at that
-    * RDD (graftshim.Frames). Unlike `Dataset.persist`, whose CacheManager
-    * entry lives until an explicit unpersist, only the returned frame and
-    * the frames built on it reference the RDD, so Spark's ContextCleaner
-    * unpersists it once they are all unreachable. Lost blocks recompute
-    * from the kept lineage. */
-  def cached(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.Frames.ofInternal(df.sparkSession, persisted(df), df.schema)
+  /** Persisted copy of `df`: the first action over the returned frame
+    * computes `df` once into a MEMORY_AND_DISK InternalRow RDD, later
+    * actions read its blocks, and the returned plan starts at that RDD
+    * (graftshim.Frames). Building the RDD plans `df`, which under AQE
+    * runs its shuffle stages at once; only the final stage waits. Unlike
+    * `Dataset.persist`, whose CacheManager entry lives until an explicit
+    * unpersist, only the returned frame and the frames built on it
+    * reference the RDD, so Spark's ContextCleaner unpersists it once they
+    * are all unreachable. Lost blocks recompute from the kept lineage. */
+  def cached(df: DataFrame): DataFrame = persisted(df)._1
 
-  private def persisted(df: DataFrame) = df.queryExecution.toRdd.map(_.copy())
-    .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** [[cached]] together with its RDD, for a caller that unpersists it. */
+  private def persisted(df: DataFrame) = {
+    val rdd = df.queryExecution.toRdd.map(_.copy())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (org.apache.spark.sql.graftshim.Frames.ofInternal(df.sparkSession, rdd, df.schema), rdd)
+  }
 
-  /** Per-round lineage management for iterative loops (OPTIMIZATION r6,
-    * guide §5): an eager reliable checkpoint computes every round TWICE
-    * (the eager action plus the checkpoint-write job) and round-trips
-    * disk — paying that EVERY round dominated the tiny per-round joins of
-    * the SSSP/PageRank/pointer-jumping loops. A bare persist() is NOT a
-    * substitute: it leaves the logical plan growing, and analyzer/
-    * optimizer time explodes with round count (measured: q263 6.5 s →
-    * 97 s on persist-only rounds). `cut` instead materializes the round
-    * ONCE into a persisted InternalRow RDD and rebuilds a
-    * LogicalRDD-rooted DataFrame from it (graftshim.Frames) — constant
-    * plan size per round, one compute, no disk round-trip — and every
-    * `interval`-th round still goes through a true reliable checkpoint.
-    * Cluster safety: the persisted RDDs keep their lineage, so a lost
-    * block recomputes through at most `interval` rounds back to the last
-    * reliable cut (never the fatal localCheckpoint block loss). The
-    * previous round's RDD is unpersisted after the new round
-    * materializes. */
-  final class RoundCache(interval: Int = 8) {
-    private var r1: org.apache.spark.rdd.RDD[_] = null // most recent cut
-    private var r2: org.apache.spark.rdd.RDD[_] = null // the cut before it
-    private var idx = 0
-    /** LAZY cut: no eager job here — the caller's next action (a
-      * convergence signature, the following round's cut chain, or the
-      * loop's final result action) materializes the persisted RDD. A
-      * loop with no per-round driver decision (PageRank's fixed `iters`)
-      * therefore runs as ONE multi-stage job instead of 2·iters jobs.
-      * Release is deferred one cut (the previous round is this round's
-      * parent); unpersisting a never-computed RDD is a no-op, and
-      * lineage stays intact either way. */
-    def cut(df: DataFrame): DataFrame = {
-      val out =
-        if (interval > 0 && idx % interval == interval - 1) {
-          val ck = reliable(df)
-          release()
-          ck
-        } else {
-          val rdd = persisted(df)
-          if (r2 != null) r2.unpersist(false): Unit
-          r2 = r1
-          r1 = rdd
-          org.apache.spark.sql.graftshim.Frames.ofInternal(
-            df.sparkSession, rdd, df.schema)
-        }
-      idx += 1
-      out
+  /** Rounds between the reliable checkpoints of [[iterate]]/[[repeat]]:
+    * a lost block recomputes through at most this many rounds. */
+  private val ReliableEvery = 8
+  /** Rounds between the convergence probes of [[iterate]]. */
+  private val ProbeEvery = 2
+
+  /** The driver of the engine's fixpoint loops (Network.shortestPaths
+    * and the distributed path of Polygonize.resolveLabels): runs `step`
+    * from `init` until `done` holds. `done` is probed every
+    * [[ProbeEvery]]-th round and at round `maxRounds`; a loop not done by
+    * then raises "fixpoint did not converge in <maxRounds> rounds".
+    * Probing only some rounds is exact for loops whose rounds change
+    * nothing only at the fixpoint and are identities past it, as these
+    * monotone loops are.
+    *
+    * Every round is cut so the plan stays constant in size (OPTIMIZATION
+    * r6, guide §5): an eager reliable checkpoint per round computes the
+    * round twice and round-trips disk, and a bare persist() leaves the
+    * plan growing until analysis dominates (q263 6.5 s → 97 s). The cut
+    * persists the round as a MEMORY_AND_DISK InternalRow RDD under a
+    * LogicalRDD-rooted frame (graftshim.Frames); every
+    * [[ReliableEvery]]-th round goes through [[reliable]] instead. A cut
+    * is not lazy: building the RDD plans the round, which under AQE runs
+    * its shuffle stages at once; only the final stage waits for the next
+    * action. Once a round is cut, the previous round's RDD is unpersisted:
+    * keeping more generations measured the same job, stage and task
+    * counts, as Spark skips a map stage whose shuffle output exists. The
+    * persisted RDDs keep their lineage, so a lost block recomputes back
+    * to at most the last reliable cut. */
+  def iterate(init: DataFrame, maxRounds: Int)(step: DataFrame => DataFrame)
+             (done: DataFrame => Boolean): DataFrame =
+    drive(init, maxRounds, step, Some(done))
+
+  /** Exactly `rounds` rounds of `step` from `init`, with no probe
+    * (Network's PageRank); the cuts are [[iterate]]'s. */
+  def repeat(init: DataFrame, rounds: Int)(step: DataFrame => DataFrame): DataFrame =
+    drive(init, rounds, step, None)
+
+  private val beforeRound = new scala.util.DynamicVariable[Int => Unit](_ => ())
+
+  /** Runs `body` with `hook` called with the 0-based round index before
+    * every round's `step`, so a test can disturb a loop mid-run. */
+  private[graft] def withRoundHook[T](hook: Int => Unit)(body: => T): T =
+    beforeRound.withValue(hook)(body)
+
+  private def drive(init: DataFrame, maxRounds: Int, step: DataFrame => DataFrame,
+                    done: Option[DataFrame => Boolean]): DataFrame = {
+    var cur = init
+    var kept: org.apache.spark.rdd.RDD[_] = null // the persisted RDD under `cur`
+    var round = 0
+    var converged = false
+    while (!converged && round < maxRounds) {
+      beforeRound.value(round)
+      val next = step(cur)
+      val (cut, rdd) =
+        if (round % ReliableEvery == ReliableEvery - 1) (reliable(next), null)
+        else persisted(next)
+      if (kept != null) kept.unpersist(false): Unit
+      cur = cut
+      kept = rdd
+      round += 1
+      converged = done.exists(d => (round % ProbeEvery == 0 || round == maxRounds) && d(cur))
     }
-    /** Unpersist every tracked round (called on reliable cuts; loops may
-      * call at the end once their result is materialized elsewhere). */
-    def release(): Unit = {
-      if (r2 != null) { r2.unpersist(false): Unit; r2 = null }
-      if (r1 != null) { r1.unpersist(false): Unit; r1 = null }
-    }
+    require(converged || done.isEmpty, s"fixpoint did not converge in $maxRounds rounds")
+    cur
   }
 }

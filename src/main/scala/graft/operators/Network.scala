@@ -14,13 +14,14 @@ import org.apache.spark.sql.functions._
   *
   * 100-TB shape: the frontier table is (node, dist) LONG pairs; each
   * round is one key-bounded equi-join (edges side partitioned by src,
-  * reusable across rounds) + one hash agg. Lineage truncates every round
-  * through a RELIABLE checkpoint (io/Checkpoints — the q33/q169 loop
-  * contract), so the iteration survives executor loss and resumes
-  * idempotently. Convergence = the (count, sum) signature of the dist
-  * table reaching a fixpoint — two driver scalars per round, never the
-  * table. Positive weights make the signature strictly monotone until
-  * the fixpoint, so the test is exact. */
+  * reusable across rounds) + one hash agg. The rounds run on
+  * io/Checkpoints.iterate: every round's plan is cut to a persisted RDD
+  * that keeps its lineage, and every 8th round goes through a RELIABLE
+  * checkpoint, so a lost block recomputes through at most 8 rounds.
+  * Convergence = the (count, sum) signature of the dist table reaching a
+  * fixpoint — two driver scalars per probe, never the table. Positive
+  * weights make the signature strictly monotone until the fixpoint, so
+  * the test is exact. */
 object Network {
 
   /** Scale-adaptive shuffle width for the BSP rounds (guide §2.2): each
@@ -48,8 +49,10 @@ object Network {
     * drift per run; integer mass is bit-stable and oracle-replayable).
     * Floor losses and dangling mass simply leak (documented, still a
     * fixed-point family; ranking order is what consumers read). Each of
-    * the fixed `iters` rounds is one equi-join + one hash agg with
-    * reliable-checkpoint lineage truncation.
+    * the fixed `iters` rounds is one equi-join + one hash agg, cut by
+    * io/Checkpoints.repeat; the cuts run each round's shuffle stages as
+    * the frame is built, so the result's action runs only the last
+    * round's final stage.
     *
     * nodes: (node: long); edges: (src, dst) — weights ignored. */
   def pagerankInt(edges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
@@ -58,20 +61,13 @@ object Network {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ec = e.count()
     withGraphParts(e, ec) {
-    var m = nodes.select(col("node")).withColumn("m", lit(1000000L))
-    // RoundCache: one materialization per round into a plan-truncating
-    // cached RDD, reliable checkpoint every 8th round (guide §5; see
-    // io/Checkpoints for the measured pathologies of the alternatives)
-    val rc = new graft.io.Checkpoints.RoundCache()
-    var it = 0
-    while (it < iters) {
+    val m = graft.io.Checkpoints.repeat(
+        nodes.select(col("node")).withColumn("m", lit(1000000L)), iters) { m =>
       val contrib = e.join(m, m("node") === e("src"))
         .select(col("dst").as("node"), expr("((m * 85L) div 100L) div od").as("c"))
         .groupBy("node").agg(sum(col("c")).as("cs"))
-      m = rc.cut(
-        nodes.select(col("node")).join(contrib, Seq("node"), "left")
-          .select(col("node"), (lit(150000L) + coalesce(col("cs"), lit(0L))).as("m")))
-      it += 1
+      nodes.select(col("node")).join(contrib, Seq("node"), "left")
+        .select(col("node"), (lit(150000L) + coalesce(col("cs"), lit(0L))).as("m"))
     }
     e.unpersist(false)
     m.select(col("node"), col("m").as("rank_micro"))
@@ -79,7 +75,8 @@ object Network {
   }
 
   /** edges: (src: long, dst: long, w: long), positive weights. Returns
-    * (node, dist) for every node reachable from `source`. */
+    * (node, dist) for every node reachable from `source`; raises if the
+    * distances have not converged after `maxRounds` rounds. */
   def shortestPaths(edges: DataFrame, source: Long, maxRounds: Int = 200): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -87,36 +84,21 @@ object Network {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ec = e.count()
     withGraphParts(e, ec) {
-    var dist = Seq((source, 0L)).toDF("node", "d")
+    // Probing only every second round is exact: the signature is
+    // strictly monotone until the fixpoint, so it repeats across probes
+    // iff the rounds between were identities, and relaxation at the
+    // fixpoint is idempotent.
     var prev = (-1L, -1L)
-    val rc = new graft.io.Checkpoints.RoundCache()
-    var rounds = 0
-    var done = false
-    while (!done) {
-      require(rounds < maxRounds, s"SSSP did not converge in $maxRounds rounds")
-      // OPTIMIZATION r6 (guide §1.2): TWO relaxation rounds per
-      // convergence probe. The lazy RoundCache cuts chain, so the probe
-      // action computes both rounds in ONE job — halving the driver
-      // round-trips the old probe-every-round loop paid. Detection is
-      // still exact: the (count, sum) signature is strictly monotone
-      // until the fixpoint, so equality across the 2-round stride occurs
-      // iff both rounds were identities; relaxation at the fixpoint is
-      // idempotent, so the result table is unchanged.
-      var inner = 0
-      while (inner < 2) {
-        val relaxed = dist.join(e, dist("node") === e("src"))
-          .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
-        val next = dist.unionByName(relaxed)
-          .groupBy("node").agg(min(col("d")).as("d"))
-        // RoundCache: plan-truncating cached round, reliable cut every 8th
-        dist = rc.cut(next)
-        rounds += 1
-        inner += 1
-      }
+    val dist = graft.io.Checkpoints.iterate(Seq((source, 0L)).toDF("node", "d"), maxRounds) { dist =>
+      val relaxed = dist.join(e, dist("node") === e("src"))
+        .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
+      dist.unionByName(relaxed).groupBy("node").agg(min(col("d")).as("d"))
+    } { dist =>
       val st = dist.agg(count(lit(1)), coalesce(sum(col("d")), lit(0L))).collect()(0)
       val sig = (st.getLong(0), st.getLong(1))
-      done = sig == prev
+      val same = sig == prev
       prev = sig
+      same
     }
     e.unpersist(false)
     dist.select(col("node"), col("d").as("dist"))

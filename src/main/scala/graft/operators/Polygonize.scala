@@ -220,57 +220,38 @@ object Polygonize {
   /** Distributed fallback for graphs too big to collect. */
   private def resolveLabelsDistributed(nodes: DataFrame, edges: DataFrame,
                                        maxIter: Int): DataFrame = {
-    // the iterative rounds below eagerly checkpoint ON PURPOSE: pointer
-    // jumping needs its lineage truncated every round (a persist would
-    // stack O(iterations) of plan on plan). RELIABLE checkpoints
-    // (io/Checkpoints — shared checkpoint dir on a cluster), not
-    // localCheckpoint: a local checkpoint dies with its executor and
-    // poisons every later round's lineage.
+    // the symmetric edges, which every round reads, and the start labels
+    // are RELIABLE checkpoints (io/Checkpoints — shared checkpoint dir on
+    // a cluster), so a lost executor does not take them along.
     val sym = graft.io.Checkpoints.reliable(
       edges.select(col("a").as("x"), col("b").as("y"))
         .union(edges.select(col("b").as("x"), col("a").as("y")))
         .distinct())
-    var rep = graft.io.Checkpoints.reliable(
-      nodes.select(col("node"), col("node").as("rep")))
-    val rc = new graft.io.Checkpoints.RoundCache()
-    var iter = 0
-    var done = false
-    // OPTIMIZATION r6 (guide §1.2): the old loop paid TWO driver actions
-    // per round — the round itself plus a join-against-previous diff
-    // job. The change flag is now computed INSIDE the round (labels only
-    // decrease, so `new < previous` captures exactly the old
-    // rep_new <> rep test), the convergence probe is the same action
-    // that materializes the round, and it runs every SECOND round (the
-    // lazy cuts chain into one job; a zero-change second round can only
-    // occur at the fixpoint since labels are monotone, and an extra
-    // round at the fixpoint is an identity).
-    while (!done) {
-      require(iter < maxIter, s"label resolution did not converge in $maxIter rounds")
-      var inner = 0
-      var probe: DataFrame = null
-      while (inner < 2) {
-        val nbrMin = sym.join(rep.withColumnRenamed("node", "y"), Seq("y"))
-          .groupBy(col("x").as("node")).agg(min("rep").as("nbr_rep"))
-        val stepped = rep.join(nbrMin, Seq("node"), "left")
-          .select(col("node"), col("rep").as("rep_prev"),
-            least(col("rep"), coalesce(col("nbr_rep"), col("rep"))).as("rep"))
-        // pointer jumping: rep := rep(rep)
-        val jumped = stepped.alias("l")
-          .join(stepped.select(col("node").as("rep"), col("rep").as("rep2")).alias("r"),
-            Seq("rep"), "left")
-          .select(col("node"),
-            least(col("rep"), coalesce(col("rep2"), col("rep"))).as("rep"),
-            (least(col("rep"), coalesce(col("rep2"), col("rep"))) <
-              col("rep_prev")).cast("long").as("chg"))
-        // RoundCache: plan-truncating cached round, reliable cut every 8th
-        probe = rc.cut(jumped)
-        rep = probe.select("node", "rep")
-        iter += 1
-        inner += 1
-      }
-      done = probe.agg(coalesce(sum(col("chg")), lit(0L))).collect()(0).getLong(0) == 0L
-    }
-    rep
+    // OPTIMIZATION r6 (guide §1.2): the change flag is computed INSIDE
+    // the round (labels only decrease, so `new < previous` is exactly a
+    // rep_new <> rep diff), so the probe reads only the probed round. A
+    // zero-change round can only occur at the fixpoint since labels are
+    // monotone, and an extra round at the fixpoint is an identity.
+    graft.io.Checkpoints.iterate(
+        graft.io.Checkpoints.reliable(nodes.select(col("node"), col("node").as("rep"))),
+        maxIter) { round =>
+      val rep = round.select("node", "rep")
+      val nbrMin = sym.join(rep.withColumnRenamed("node", "y"), Seq("y"))
+        .groupBy(col("x").as("node")).agg(min("rep").as("nbr_rep"))
+      val stepped = rep.join(nbrMin, Seq("node"), "left")
+        .select(col("node"), col("rep").as("rep_prev"),
+          least(col("rep"), coalesce(col("nbr_rep"), col("rep"))).as("rep"))
+      // pointer jumping: rep := rep(rep)
+      stepped.alias("l")
+        .join(stepped.select(col("node").as("rep"), col("rep").as("rep2")).alias("r"),
+          Seq("rep"), "left")
+        .select(col("node"),
+          least(col("rep"), coalesce(col("rep2"), col("rep"))).as("rep"),
+          (least(col("rep"), coalesce(col("rep2"), col("rep"))) <
+            col("rep_prev")).cast("long").as("chg"))
+    } { round =>
+      round.agg(coalesce(sum(col("chg")), lit(0L))).collect()(0).getLong(0) == 0L
+    }.select("node", "rep")
   }
 
   /** Global components with stats: (label, dn, n_pixels, min_gx, max_gx,

@@ -372,7 +372,7 @@ class PolygonizeSpec extends AnyFunSuite {
   }
 
   test("distributed label loop raises at its round cap instead of returning unconverged labels") {
-    // a 64-node chain needs more than the 2 rounds of one probe stride
+    // a 64-node chain needs more than one round
     val nodes = (1L to 64L).toDF("node")
     val edges = (1L until 64L).map(i => (i, i + 1)).toDF("a", "b")
     val e = intercept[IllegalArgumentException] {

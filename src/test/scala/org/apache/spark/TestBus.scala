@@ -24,6 +24,24 @@ object TestBus {
         if (e.stageInfo.shuffleDepId.isDefined) n.incrementAndGet(): Unit
     })(body)
 
+  /** Runs `body` and returns its result with the number of stages it
+    * submitted (stages skipped for existing shuffle output not counted). */
+  def countStages[T](sc: SparkContext)(body: => T): (T, Int) =
+    count(sc, n => new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = n.incrementAndGet(): Unit
+    })(body)
+
+  /** Removes every cached RDD block from the driver's block manager,
+    * which in local mode holds them all, and returns how many it removed.
+    * The RDDs stay persisted, so a later read recomputes the lost
+    * partitions from lineage, as after an executor loss. */
+  def dropRddBlocks(sc: SparkContext): Int = {
+    val bm = sc.env.blockManager
+    val ids = bm.getMatchingBlockIds(_.isRDD)
+    ids.foreach(bm.removeBlock(_))
+    ids.size
+  }
+
   /** Ids of the RDDs that have blocks in the block manager. */
   def rddsWithBlocks(sc: SparkContext): Set[Int] =
     sc.env.blockManager.master
