@@ -5,11 +5,22 @@ import org.apache.spark.sql.execution.ExplainMode
 /** Optimization-round diagnostic (guide §1.3/§7.2): dump
   * `.explain("formatted")` for the named queries to one file each, so plan
   * claims in OPTIMIZATION_r*.md are checkable without running Spark.
-  * Expression ids (`#123`) are written as `#_`, so dumps of the same
-  * query from two commits diff cleanly.
+  * Per-run tokens (expression, plan and RDD ids, identity hashes, source
+  * lines, temp-dir suffixes) are written as `_`, so dumps of one query
+  * from two runs or commits diff cleanly: `diff -r <dumpA> <dumpB>`.
   * Usage: runMain graft.PlanDump <outDir> <q1,q2,...> [sfDir]
   * Not part of the bench/verify surface; never run by the driver. */
 object PlanDump {
+  def normalize(txt: String): String =
+    txt.replaceAll("#\\d+", "#_")
+      .replaceAll("plan_id=\\d+", "plan_id=_")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[_]")
+      .replaceAll("\\.scala:\\d+", ".scala:_")
+      .replaceAll("\\$Lambda[$/0-9a-fx]*@", "\\$Lambda@")
+      .replaceAll("(?<=[\\w$\\[])@[0-9a-f]{1,8}\\b", "@_")
+      .replaceAll("(graft-(?:scratch|ckpt))\\d+", "$1_")
+      .replaceAll("(graft-scratch_/[A-Za-z0-9]*[A-Za-z])\\d+", "$1_")
+
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
@@ -24,8 +35,7 @@ object PlanDump {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
-      val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-        .replaceAll("#\\d+", "#_")
+      val txt = normalize(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
       java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/$n.txt"), txt)
       println(s"[plandump] wrote $outDir/$n.txt")
       spark.sharedState.cacheManager.clearCache()

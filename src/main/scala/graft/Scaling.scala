@@ -98,7 +98,7 @@ object Scaling {
       .drop("g")
     val polys = regions(spark, nRegions)
       .withColumn("geom", F.st_geomfromwkt(col("wkt")))
-    val joined = (mode match {
+    def build(): DataFrame = (mode match {
       case "adaptive" =>
         // the cover broadcasts (no hot-cell split); were it too large to,
         // a threshold ~5x the mean cell population salts only genuinely
@@ -128,27 +128,24 @@ object Scaling {
     // measured first would otherwise pay JIT/codegen the later ones get
     // for free (which inflates the ratio into fake superlinearity) — one
     // full pass saturates compilation before any timing starts
-    action(joined)
+    action(build())
     // best-of-reps to damp GC/OS noise (protocol: same reps per config)
     var best = Double.MaxValue
     var rows = 0L
     for (_ <- 1 to reps) {
       // timed rep = the job FROM COLD CACHE: the warmup above exists only
-      // for JIT/codegen parity. Without this clear, a config whose operator
-      // persists internally (adaptive) times a cache read while others
-      // time the full scan — and Spark's CacheManager plan-matching even
-      // lets LATER configs silently reuse an EARLIER config's cache
-      // (observed: unsalted 24.9 s with a stale adaptive cache vs 273.5 s
-      // honest). Wall times are cross-config comparable only this way.
-      spark.sharedState.cacheManager.clearCache()
+      // for JIT/codegen parity, and a reused join would time a read of its
+      // own cached cover/probe (a stale cache once measured unsalted 24.9 s
+      // vs 273.5 s honest). Building runs the cover collect, untimed.
+      val job = build()
       val t0 = System.nanoTime()
-      val sig = action(joined)
+      val sig = action(job)
       val dt = (System.nanoTime() - t0) / 1e9
       if (dt < best) best = dt
       rows = sig.getLong(0)
     }
     if (commitLineage)
-      CatalogIO.commitStage(spark, joined, outRoot, s"scaling-$tag", "join_tiles")
+      CatalogIO.commitStage(spark, build(), outRoot, s"scaling-$tag", "join_tiles")
     (best, rows)
   }
 
@@ -178,13 +175,9 @@ object Scaling {
       val s = session(cores, parts)
       val (dtAdaptive, rows) = runJob(s, docsPath, nRegions, "adaptive",
         s"$work/out", s"adaptive-c$cores-${System.nanoTime()}")
-      // drop the adaptive run's persisted point set (and covers) so it
-      // cannot contend with the next configs' timed windows
-      s.sharedState.cacheManager.clearCache()
       commitLineage = false
       val (dtSalted, _) = runJob(s, docsPath, nRegions, "salted",
         s"$work/out", s"salted-c$cores-${System.nanoTime()}")
-      s.sharedState.cacheManager.clearCache()
       val (dtUnsalted, _) = runJob(s, docsPath, nRegions, "unsalted",
         s"$work/out", s"unsalted-c$cores-${System.nanoTime()}")
       s.stop()
@@ -201,7 +194,7 @@ object Scaling {
     val commit = try {
       new String(java.lang.Runtime.getRuntime.exec(Array("git", "-C", "/root/repo",
         "rev-parse", "--short", "HEAD")).getInputStream.readAllBytes()).trim
-    } catch { case _: Throwable => "unknown" }
+    } catch { case _: java.io.IOException => "unknown" }
     val md =
       s"""# BENCH/BASELINE — two-cluster-size scaling evidence
          |

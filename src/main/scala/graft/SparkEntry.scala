@@ -29,17 +29,7 @@ object SparkEntry {
     * (ADVICE r4). Results ARE still read back lazily from scratch paths,
     * so deletion happens only at JVM exit — after the driver has written
     * its output parquet. */
-  private lazy val scratchRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft-scratch")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(p: java.io.File): Unit = {
-        val kids = p.listFiles(); if (kids != null) kids.foreach(rm)
-        p.delete(): Unit
-      }
-      rm(root.toFile)
-    }))
-    root
-  }
+  private lazy val scratchRoot: java.nio.file.Path = graft.io.LocalDirs.temp("graft-scratch")
   private def scratch(prefix: String): String =
     java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
 
@@ -52,12 +42,14 @@ object SparkEntry {
     * of source input each with a floor of 4: a 2 MB local backlog gets 4
     * stores (measured: q223 8.1 s → 4.8 s vs 32 stores), a 100-TB
     * backlog gets thousands. Emitted rows are partition-count invariant
-    * (the 7-core verify gate varies this by construction). */
-  private def streamStateParts(srcs: String*): Int = {
+    * (the 7-core verify gate varies this by construction). Sources are
+    * sized through the Hadoop FileSystem of their URI, so a `file:`,
+    * `hdfs:` or `s3a:` source counts its bytes like a plain local path. */
+  private[graft] def streamStateParts(s: SparkSession, srcs: String*): Int = {
+    val conf = s.sessionState.newHadoopConf()
     def sz(p: String): Long = {
-      val f = new java.io.File(p)
-      val kids = if (f.isDirectory) f.listFiles else null
-      if (kids != null) kids.map(_.length).sum else f.length
+      val path = new org.apache.hadoop.fs.Path(p)
+      path.getFileSystem(conf).getContentSummary(path).getLength
     }
     math.max(4, (srcs.map(sz).sum >> 26).toInt)
   }
@@ -135,40 +127,35 @@ object SparkEntry {
     * probes touch those engine families on 3-row synthetic inputs (no
     * testdata, no caches survive — every bench query still computes from
     * its parquet inputs; this shifts no real work, only JIT, into the
-    * warmup whose role is exactly that). Failures are swallowed like the
-    * warmup itself. */
-  private def warmupProbes(spark: SparkSession): Unit = {
+    * warmup whose role is exactly that). A probe that fails raises. */
+  private[graft] def warmupProbes(spark: SparkSession): Unit = {
     import spark.implicits._
-    try {
-      // WindowExec + hash agg + HOF codegen families
-      val w = Window.partitionBy(col("g")).orderBy(col("id"))
-      spark.range(64).select(col("id"), (col("id") % 4).as("g"),
-          expr("transform(sequence(0, 15), i -> CAST(i AS DOUBLE))").as("a"))
-        .withColumn("rn", row_number().over(w))
-        .withColumn("s", expr("aggregate(zip_with(a, a, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"))
-        .groupBy("g").agg(sum("s").as("s"), max("rn").as("m"))
-        .queryExecution.toRdd.count(): Unit
-      // parquet write/read committer path + micro-batch streaming engine
-      // (file source, watermark, stateful agg, file sink, state store)
-      val base = scratch("warmup")
-      val src = s"$base/src"; val out = s"$base/out"; val ckp = s"$base/ckp"
-      Seq((1L, new java.sql.Timestamp(0L)), (2L, new java.sql.Timestamp(60000L)),
-        (3L, new java.sql.Timestamp(120000L))).toDF("k", "ts")
-        .write.mode("overwrite").parquet(src)
-      val st = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, ts TIMESTAMP"))
-        .parquet(src)
-        .withWatermark("ts", "1 minute")
-        .groupBy(window(col("ts"), "1 minute")).agg(count(lit(1)).as("n"))
-      withStreamParts(spark, 2) {
-        val q = st.writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckp).outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      spark.read.parquet(out).queryExecution.toRdd.count(): Unit
-    } catch { case _: Throwable => () }
-    finally spark.sharedState.cacheManager.clearCache()
+    // WindowExec + hash agg + HOF codegen families
+    val w = Window.partitionBy(col("g")).orderBy(col("id"))
+    spark.range(64).select(col("id"), (col("id") % 4).as("g"),
+        expr("transform(sequence(0, 15), i -> CAST(i AS DOUBLE))").as("a"))
+      .withColumn("rn", row_number().over(w))
+      .withColumn("s", expr("aggregate(zip_with(a, a, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"))
+      .groupBy("g").agg(sum("s").as("s"), max("rn").as("m"))
+      .queryExecution.toRdd.count(): Unit
+    // parquet write/read committer path + micro-batch streaming engine
+    // (file source, watermark, stateful agg, file sink, state store)
+    val base = scratch("warmup")
+    val src = s"$base/src"; val out = s"$base/out"; val ckp = s"$base/ckp"
+    Seq((1L, new java.sql.Timestamp(0L)), (2L, new java.sql.Timestamp(60000L)),
+      (3L, new java.sql.Timestamp(120000L))).toDF("k", "ts")
+      .write.mode("overwrite").parquet(src)
+    val st = spark.readStream
+      .schema(org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, ts TIMESTAMP"))
+      .parquet(src)
+      .withWatermark("ts", "1 minute")
+      .groupBy(window(col("ts"), "1 minute")).agg(count(lit(1)).as("n"))
+    withStreamParts(spark, 2) {
+      val q = st.writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckp).outputMode("append").start()
+      q.processAllAvailable()
+      q.stop()
+    }
   }
 
   def entry(spark: SparkSession): DataFrame = {
@@ -612,7 +599,7 @@ object SparkEntry {
       // stateful-streaming state stores = shuffle partitions; 8 beats 32
       // at this volume (scoped to the query, restored after — results
       // are partition-count-independent, see the 7-core gate)
-      withStreamParts(s, streamStateParts(src)) {
+      withStreamParts(s, streamStateParts(s, src)) {
         val q = Streaming.sessionizeStream(stream)
           .filter(so => so.user_id >= 0)
           .writeStream.format("parquet").option("path", out)
@@ -650,7 +637,7 @@ object SparkEntry {
         .withColumn("doc_id", col("doc_id") + 1000000L)
       docs.unionByName(dup).write.mode("overwrite").parquet(src)
       val stream = s.readStream.schema(docs.schema).parquet(src)
-      withStreamParts(s, streamStateParts(src)) {
+      withStreamParts(s, streamStateParts(s, src)) {
         val q = Streaming.streamingDedup(stream, "text", "ts")
           .select(col("fp"))
           .writeStream.format("parquet").option("path", out)
@@ -700,7 +687,7 @@ object SparkEntry {
       // streaming query and restore for whoever runs next; results are
       // partition-count-independent (the 7-core gate already varies it).
       import s.implicits._
-      withStreamParts(s, streamStateParts(srcV, srcC)) {
+      withStreamParts(s, streamStateParts(s, srcV, srcC)) {
         val q = joined.writeStream.format("parquet").option("path", out)
           .option("checkpointLocation", ckp).outputMode("append").start()
         q.processAllAvailable()
@@ -744,7 +731,7 @@ object SparkEntry {
         .select(unix_millis(col("window.start")).as("win_ms"), col("event_type"), col("n"))
       // windowed-agg state stores = shuffle partitions (same rationale
       // as q120/q154): scope 8 stores to the streaming query
-      withStreamParts(s, streamStateParts(src)) {
+      withStreamParts(s, streamStateParts(s, src)) {
         val q = agg.writeStream.format("parquet").option("path", out)
           .option("checkpointLocation", ckp).outputMode("append").start()
         q.processAllAvailable()
@@ -782,7 +769,6 @@ object SparkEntry {
         .option("checkpointLocation", ckp).outputMode("append").start()
       q.processAllAvailable()
       q.stop()
-      Streaming.releaseStaticCovers()
       s.read.parquet(out).select(col("box_id"), col("pt_id"))
     }),
     "q223_stream_semi_join" -> ((s, dir) => {
@@ -815,7 +801,7 @@ object SparkEntry {
           joinType = "leftSemi")
         .select(col("view_id"), col("v_user"),
           unix_millis(col("vts")).as("vts_ms"))
-      withStreamParts(s, streamStateParts(srcV, srcC)) {
+      withStreamParts(s, streamStateParts(s, srcV, srcC)) {
         val q = joined.writeStream.format("parquet").option("path", out)
           .option("checkpointLocation", ckp).outputMode("append").start()
         q.processAllAvailable()
@@ -852,7 +838,7 @@ object SparkEntry {
           "v_user", "c_user", "vts", "cts", windowMs = 3600000L)
         .select(col("view_id"), col("click_id"),
           (unix_millis(col("cts")) - unix_millis(col("vts"))).as("delta_ms"))
-      withStreamParts(s, streamStateParts(srcV, srcC)) {
+      withStreamParts(s, streamStateParts(s, srcV, srcC)) {
         val q = joined.writeStream.format("parquet").option("path", out)
           .option("checkpointLocation", ckp).outputMode("append").start()
         q.processAllAvailable()
@@ -1786,8 +1772,7 @@ object SparkEntry {
       // (endpoint walk, member reversal as needed) and emits the ring in
       // canonical orientation — which the oracle recomputes in pure SQL
       // (rotation + direction choice via window functions).
-      val arcs = Synth.osmRelArcs(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val arcs = graft.io.Checkpoints.cached(Synth.osmRelArcs(s, dir))
       Osm.assembleRelations(Synth.osmNodes(s, dir), arcs,
         Synth.osmRelationsFromArcs(arcs))
     }),
@@ -2548,12 +2533,12 @@ object SparkEntry {
       import org.apache.spark.sql.expressions.Window
       val docs = s.read.parquet(s"$dir/documents.parquet")
       // scored feeds BOTH the threshold branch and the final probe join —
-      // persist it or the token explode + model join + doc agg runs twice
+      // cache it or the token explode + model join + doc agg runs twice
       // per action (the file's two-consumer convention)
       val scored = Quality.unigramSurprisal(docs, "doc_id", "text")
         .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
         .select(col("doc_id"), col("lang"), col("score_milli"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.io.Checkpoints.cached)
       val hist = scored.groupBy("lang", "score_milli").agg(count(lit(1)).as("cnt"))
       val cum = hist
         .withColumn("cum", sum(col("cnt")).over(
@@ -3158,7 +3143,7 @@ object SparkEntry {
       // rules learned over the corpus, each iteration counting adjacent
       // symbol pairs weighted by word frequency and merging the argmax
       // (freq desc, lhs asc, rhs asc). 100-TB shape: the corpus collapses
-      // to the persisted distinct-word dictionary in ONE hash agg; each
+      // to the cached distinct-word dictionary in ONE hash agg; each
       // iteration is a vocab-sized pair agg + a ONE-ROW collect (the
       // q170 kmeans literal-re-bake pattern); merge application is a
       // map-side replace() chain whose left-to-right non-overlapping
@@ -3187,9 +3172,9 @@ object SparkEntry {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       // OPTIMIZATION r6: ONE dict build shared by training and encoding
       // (the old train/encodedDict pair each tokenized the corpus and
-      // re-aggregated the dictionary). Bench's per-query cache clear
-      // releases the persist.
-      val d0 = Bpe.dict(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // re-aggregated the dictionary). The cached dictionary belongs to
+      // the result, which frees it once dropped.
+      val d0 = graft.io.Checkpoints.cached(Bpe.dict(docs))
       val rules = Bpe.trainOn(d0, 6)
       val enc = Bpe.encodedDictFrom(d0, rules)
       val tok = graft.core.Par.fan(docs).select(col("doc_id"), posexplode(
@@ -4271,7 +4256,7 @@ object SparkEntry {
           coalesce(unix_millis(col("cts")) - unix_millis(col("vts")), lit(-1L))
             .as("delta_ms"))
       // 8 state stores, scoped to the streaming query (q154 rationale)
-      withStreamParts(s, streamStateParts(srcV, srcC)) {
+      withStreamParts(s, streamStateParts(s, srcV, srcC)) {
         val q = joined.writeStream.format("parquet").option("path", out)
           .option("checkpointLocation", ckp).outputMode("append").start()
         q.processAllAvailable()
@@ -4310,7 +4295,7 @@ object SparkEntry {
       // query terms are literals, so filter the token ARRAY map-side and
       // explode only matches; dl/stats come from the same tiny projection
       // (fan: single-split source, guide §2.5). `tk` is 3 narrow columns
-      // per doc — persisting it makes the stats action + both rankings
+      // per doc — caching it makes the stats action + both rankings
       // share one tokenize.
       val qtermList = Seq("spark", "table", "hash", "join", "merge", "vector", "stream")
       val docs = graft.core.Par.fan(s.read.parquet(s"$dir/documents.parquet"))
@@ -4320,7 +4305,7 @@ object SparkEntry {
         .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
           expr(s"filter(toks, t -> t IN (${qtermList.map("'" + _ + "'").mkString(",")}))")
             .as("mt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.io.Checkpoints.cached)
       val st = tk.agg(sum(col("dl")).as("s"), count(lit(1)).as("n")).head()
       val sTot = st.getLong(0); val nDocs = st.getLong(1)
       val qterms = Seq(
@@ -4337,7 +4322,7 @@ object SparkEntry {
         .join(dl, "doc_id").join(broadcast(qterms), "term")
         .withColumn("idf_milli",
           expr(s"(1000L * (2L * (${nDocs}L - df) + 1L)) div (2L * df + 1L)"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.io.Checkpoints.cached)
       val bm25 = base
         .withColumn("tfp_micro", expr(
           s"(36L * tf * ${sTot}L * 1000000L) div " +
@@ -4386,7 +4371,7 @@ object SparkEntry {
              ELSE array() END""")).as("b"))
         .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
       val c12 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.io.Checkpoints.cached)
       val ntypes = c12.count()
       val c1 = c12.groupBy("w1")
         .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1p_fwd"))
@@ -5030,7 +5015,7 @@ object SparkEntry {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       // OPTIMIZATION r6: ONE dict build shared by training and encoding
       // (q216 rationale)
-      val d0 = Bpe.dict(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val d0 = graft.io.Checkpoints.cached(Bpe.dict(docs))
       val rules = Bpe.trainOn(d0, 6)
       val enc = Bpe.encodedDictFrom(d0, rules)
       val tok = docs.select(col("lang"), explode(
@@ -5366,7 +5351,7 @@ object SparkEntry {
           split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")).as("term"))
         .where(col("term") =!= "")
       val dom = toks.groupBy("source", "term").agg(count(lit(1)).as("o"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.io.Checkpoints.cached)
       val corp = dom.groupBy("term").agg(sum(col("o")).as("c"))
       val nd = dom.groupBy("source").agg(sum(col("o")).as("nd"))
       val nTotal = corp.agg(sum(col("c"))).collect()(0).getLong(0)

@@ -70,11 +70,10 @@ object GeomIO {
     * re-prepared the polygon (~1 µs vs ~50 ns; measured ~2× wall on the
     * q11–q60 family at sf0.1). JTS ≥ 1.18 PreparedPolygon lazy index
     * getters are synchronized, so sharing instances across threads is
-    * safe. Env-tunable GRAFT_PREP_CACHE (default 65536 entries ≈ tens of
-    * MB for typical dimension polygons); past the cap new geometries are
-    * prepared uncached — graceful degradation, no eviction churn. */
-  private final val CacheMax =
-    sys.env.getOrElse("GRAFT_PREP_CACHE", "65536").toInt
+    * safe. The cache holds up to 65536 entries (≈ tens of MB for typical
+    * dimension polygons); an insert at the cap clears the whole cache and
+    * starts a new epoch, so the current hot set is re-prepared once. */
+  private final val CacheMax = 65536
   private val prepCache =
     new java.util.concurrent.ConcurrentHashMap[java.nio.ByteBuffer, PreparedGeometry](1024)
 

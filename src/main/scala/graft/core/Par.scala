@@ -24,7 +24,7 @@ import org.apache.spark.sql.graftshim.Frames
   * only leaf is a deterministic Project, Filter, Generate or
   * SubqueryAlias, the repartition goes directly above that leaf, so the
   * caller's explodes and parses already run in p tasks (Catalyst still
-  * prunes columns and pushes filters below it). A persisted input is an
+  * prunes columns and pushes filters below it). A cached input is an
   * InMemoryRelation leaf there, so it is never re-read. Any other plan
   * (a non-deterministic column, a union of scans) is repartitioned on top.
   *

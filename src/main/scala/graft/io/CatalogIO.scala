@@ -33,7 +33,12 @@ object CatalogIO {
     * Runs exactly the data write's Spark job(s): the row count and the
     * lineage entries come from listing `data/` and reading each part
     * file's parquet footer on the driver. A failed write removes its temp
-    * dir and leaves the stage uncommitted. */
+    * dir and leaves the stage uncommitted.
+    *
+    * The committed files replace `df`'s cached intermediates, so they are
+    * released after the write: Spark's listener bus keeps the last event
+    * it delivered, and the write's end event holds its plan, so the
+    * ContextCleaner could not free them before the next event. */
   def commitStage(spark: SparkSession, df: DataFrame, root: String,
                   jobId: String, stage: String): Long = {
     val dir = Paths.get(root, jobId, stage)
@@ -52,14 +57,14 @@ object CatalogIO {
             s""""lineage":${lineage.mkString("[", ",", "]")}}"""
         Files.writeString(tmp.resolve("MANIFEST.json"), manifestTxt, StandardCharsets.UTF_8)
         // atomic publish
-        if (Files.exists(dir)) deleteRec(dir)
+        if (Files.exists(dir)) LocalDirs.delete(dir)
         Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
         rows
       } catch {
         case e: Throwable =>
-          try deleteRec(tmp) catch { case d: Throwable => e.addSuppressed(d) }
+          try LocalDirs.delete(tmp) catch { case d: Throwable => e.addSuppressed(d) }
           throw e
-      }
+      } finally Checkpoints.release(df)
     }
   }
 
@@ -269,13 +274,5 @@ object CatalogIO {
       }
     }
     out.result()
-  }
-
-  private def deleteRec(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val it = Files.list(p).iterator()
-      while (it.hasNext) deleteRec(it.next())
-    }
-    Files.deleteIfExists(p)
   }
 }

@@ -1,9 +1,18 @@
 package graft.io
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.graftshim.Frames
+import org.apache.spark.storage.StorageLevel
 
-/** Reliable (cluster-safe) checkpoints and the round driver for
-  * iterative operators.
+/** Cached intermediates, reliable (cluster-safe) checkpoints, and the
+  * round driver for iterative operators.
+  *
+  * [[cached]] keeps every operator's and query's intermediates. A cached
+  * relation belongs to the frames built on it, as a GDAL block belongs to
+  * its band (gcore/gdalrasterband.cpp :: GDALRasterBand::FlushCache):
+  * nothing is registered session-wide, and Spark's ContextCleaner frees
+  * the blocks once no frame references them.
   *
   * The kNN ring-doubling loop checkpoints every round with [[reliable]];
   * the fixpoint loops run on [[iterate]] (Network.shortestPaths and the
@@ -33,37 +42,26 @@ object Checkpoints {
   def reliable(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
     if (sc.getCheckpointDir.isEmpty) lock.synchronized {
-      if (sc.getCheckpointDir.isEmpty) {
-        val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          def rm(p: java.io.File): Unit = {
-            val kids = p.listFiles(); if (kids != null) kids.foreach(rm)
-            p.delete(): Unit
-          }
-          rm(dir.toFile)
-        }))
-        sc.setCheckpointDir(dir.toString)
-      }
+      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(LocalDirs.temp("graft-ckpt").toString)
     }
     df.checkpoint() // eager: materializes now, truncates lineage
   }
 
-  /** Persisted copy of `df`: the first action over the returned frame
-    * computes `df` once into a MEMORY_AND_DISK InternalRow RDD, later
-    * actions read its blocks, and the returned plan starts at that RDD
-    * (graftshim.Frames). Building the RDD plans `df`, which under AQE
-    * runs its shuffle stages at once; only the final stage waits. Unlike
-    * `Dataset.persist`, whose CacheManager entry lives until an explicit
-    * unpersist, only the returned frame and the frames built on it
-    * reference the RDD, so Spark's ContextCleaner unpersists it once they
-    * are all unreachable. Lost blocks recompute from the kept lineage. */
-  def cached(df: DataFrame): DataFrame = persisted(df)._1
+  /** `df` cached as the InMemoryRelation `df.persist(MEMORY_AND_DISK)`
+    * would register (graftshim.Frames), so storage format, laziness,
+    * measured statistics and physical plan are `Dataset.persist`'s (but
+    * for a column-renaming Project, which stays above the relation). It
+    * is registered in no CacheManager: only the returned frame and the
+    * frames built on it read it, and the ContextCleaner unpersists it
+    * once they are all unreachable. */
+  def cached(df: DataFrame): DataFrame =
+    Frames.ofPlan(df.sparkSession, Frames.inMemoryRelation(df, StorageLevel.MEMORY_AND_DISK))
 
-  /** [[cached]] together with its RDD, for a caller that unpersists it. */
-  private def persisted(df: DataFrame) = {
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (org.apache.spark.sql.graftshim.Frames.ofInternal(df.sparkSession, rdd, df.schema), rdd)
+  /** Frees now the blocks of every [[cached]] relation in `df`'s plan,
+    * for a caller that will not read them again; a later read recomputes. */
+  private[graft] def release(df: DataFrame): Unit = df.queryExecution.analyzed.foreach {
+    case r: InMemoryRelation => r.cacheBuilder.clearCache(blocking = false)
+    case _ => ()
   }
 
   /** Rounds between the reliable checkpoints of [[iterate]]/[[repeat]]:
@@ -120,9 +118,17 @@ object Checkpoints {
     while (!converged && round < maxRounds) {
       beforeRound.value(round)
       val next = step(cur)
+      // a row RDD, not [[cached]], whose lazy relation would move the
+      // round's shuffle stages into the next action (LoopSpec pins the
+      // job, stage and task counts of this cut)
       val (cut, rdd) =
         if (round % ReliableEvery == ReliableEvery - 1) (reliable(next), null)
-        else persisted(next)
+        else {
+          val rdd = next.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+          (Frames.ofInternal(next.sparkSession, rdd, next.schema), rdd)
+        }
+      // released by hand: each round's RDD is in the lineage of every later
+      // round, so the ContextCleaner would free none before the result goes
       if (kept != null) kept.unpersist(false): Unit
       cur = cut
       kept = rdd

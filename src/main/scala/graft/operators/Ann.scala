@@ -268,9 +268,9 @@ object Ann {
     val sp = math.max(1,
       data.sparkSession.sparkContext.defaultParallelism / math.max(kCells, 1))
     // squared norms once per vector, not per pair (r6); mn feeds both join
-    // sides, so persist the small (corpus-row-count) table
+    // sides, so cache the small (corpus-row-count) table
     val mn = m.withColumn("__n2", F.fixed_dot(col("v"), col("v"), fixedScale))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val a = mn.select(col("cluster"), col("id").as("id_a"), col("v").as("va"),
         col("__n2").as("na2"))
       .withColumn("__ps", pmod(hash(col("id_a")), lit(sp)))
@@ -314,15 +314,15 @@ object Ann {
       : (DataFrame, Array[Array[Long]]) = {
     // fan: single-split embedding sources put every per-vector HOF pass
     // (k x dim distance transforms, per iteration) on one core (guide §2.5)
-    // persist: q feeds the init collect, every iteration's pair agg AND
+    // cache: q feeds the init collect, every iteration's pair agg AND
     // the final assignment — without it each consumer re-runs the scan,
     // the quantization transform and the fan repartition (q181 runs FOUR
-    // sub-kmeans: 16 re-evaluations measured). Vocab-sized; the session's
-    // per-query cache clear (or a caller unpersist) releases it.
+    // sub-kmeans: 16 re-evaluations measured). Vocab-sized; the returned
+    // assignments own it, so it is freed once they are dropped.
     val q = graft.core.Par.fan(data.select(col(idCol).as("id"), expr(
       s"transform($vecCol, __x -> CAST(floor((CAST(__x AS DOUBLE) + 2.0D) * 1048576.0D) AS BIGINT))")
       .as("qv")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     // init: the k smallest ids, centroid index = rank by id (k rows)
     var cents: Array[Array[Long]] = q.orderBy(col("id")).limit(k).collect()
       .map(_.getSeq[Long](1).toArray)

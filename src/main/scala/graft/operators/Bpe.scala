@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * 100-TB shape (the reason BPE training is feasible at corpus scale):
   *  - the corpus collapses to the distinct-WORD dictionary in ONE hash
   *    agg (vocab ≪ corpus; the corpus text is touched exactly once);
-  *  - the dictionary is persisted and every training iteration runs
+  *  - the dictionary is cached and every training iteration runs
   *    against it: one vocab-sized pair agg + a ONE-ROW bounded collect
   *    (the argmax pair) per iteration — the kmeans (q170) literal-re-bake
   *    pattern;
@@ -74,15 +74,14 @@ object Bpe {
     split(substr(syms, lit(2), length(syms) - 2), "\\.\\.")
 
   /** Train `k` merge rules over the corpus. Each iteration recomputes the
-    * current symbolization from the PERSISTED dictionary (i map-side
+    * current symbolization from the CACHED dictionary (i map-side
     * replaces at iteration i — O(k²·vocab) total map work, zero extra
-    * shuffles) and collects exactly one row. */
-  def train(docs: DataFrame, k: Int): Seq[Rule] = {
-    val d0 = dict(docs).persist()
-    try trainOn(d0, k) finally { d0.unpersist(); () }
-  }
+    * shuffles) and collects exactly one row. The cache is freed once
+    * training returns and nothing references it. */
+  def train(docs: DataFrame, k: Int): Seq[Rule] =
+    trainOn(graft.io.Checkpoints.cached(dict(docs)), k)
 
-  /** Training loop over an already-persisted dictionary (OPTIMIZATION r6:
+  /** Training loop over an already-cached dictionary (OPTIMIZATION r6:
     * lets a caller that also needs the encoded dictionary build `dict`
     * ONCE instead of once for training and once for encoding — one fewer
     * full corpus tokenize + hash agg per query). */

@@ -142,7 +142,7 @@ object Contour {
     // for rasters up to 2^31 px wide / 2^30 tall (zoom ≈ 24 at 64-px tiles)
     val withId = segs.withColumn("seg_id",
       shiftleft(shiftleft(col("gy"), 31) + col("gx"), 2) + col("seg_idx"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     def key(xn: String, xd: String, yn: String, yd: String) =
       concat_ws(":", col(xn), col(xd), col(yn), col(yd))
     val e0 = withId.select(col("seg_id"), key("x0n", "x0d", "y0n", "y0d").as("pt"))

@@ -157,7 +157,7 @@ object Dedup {
     val bsh = benchmark.select(
       explode(call_function("shingles64", col(benchTextCol), lit(k))).as("sh"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val words = bsh
       .select(explode(array(expr(pos1("sh")), expr(pos2("sh")))).as("p"))
       .distinct()
@@ -225,7 +225,7 @@ object Dedup {
     // any consistent total order keeps the prefix filter complete — or
     // (b) add a spurious intersection element, probability ~|A|·|B|/2^64
     // ≈ 1e-15 per pair (the same bound round-1 accepted for the verify).
-    // persist (recomputable, spills to disk) rather than eager
+    // cache (recomputable, spills to disk) rather than eager
     // localCheckpoint: on a real cluster a local checkpoint dies with its
     // executor and poisons the lineage, and the eager materialization of
     // the exploded gram table was the memory cliff behind the driver
@@ -235,11 +235,11 @@ object Dedup {
         s"""transform(array_distinct(transform(
               sequence(1, length(norm) - ${k - 1}), i -> substring(norm, i, $k))),
             s -> xxhash64(s))""")).as("gh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     // global rarity order (document frequency asc, gram-hash asc — a
     // deterministic total order; PPJoin is complete under ANY total order)
     val gdf = grams.groupBy("gh").agg(count(lit(1)).as("df"))
-    // regime selection: |vocab| is ONE cheap global agg over the persisted
+    // regime selection: |vocab| is ONE cheap global agg over the cached
     // gram table — the only driver-side value the branch needs
     val vocabN = gdf.count()
     if (vocabN <= denseVocabMax) return denseJaccardJoin(
@@ -250,14 +250,14 @@ object Dedup {
     // sorted array is the identical (df, gh) order materialized per doc by
     // a hash aggregate — prefix membership = the first
     // n - ceil(t·n) + 1 slots, and the verify array is the same array
-    // with df projected away. One persist, one row per doc.
+    // with df projected away. One cache, one row per doc.
     val docs = grams.join(gdf, Seq("gh"))
       .groupBy("blk", "id")
       .agg(sort_array(collect_list(struct(col("df"), col("gh")))).as("sarr"))
       .withColumn("n", size(col("sarr")).cast("long"))
       .withColumn("plen",
         (col("n") - ceil(lit(minJaccard) * col("n")) + 1).cast("int"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val prefix = docs.select(col("blk"), col("id"), col("n"),
       posexplode(slice(col("sarr"), lit(1), col("plen"))).as(Seq("pos", "e")))
       .select(col("blk"), col("id"), col("n"),
@@ -280,7 +280,7 @@ object Dedup {
       .select("id_a", "id_b").distinct()
     // exact verify per candidate pair via array_intersect on the per-doc
     // gram-hash arrays (codegen'd hash intersection) — O(|A|+|B|) per pair
-    // with NO pair×gram shuffle. The arrays come from the SAME persisted
+    // with NO pair×gram shuffle. The arrays come from the SAME cached
     // per-doc aggregate that fed the prefix (df field projected away;
     // array_intersect ignores order). The per-doc gram table is O(corpus)
     // and must NEVER be unconditionally broadcast (round 1 did, and the
@@ -326,12 +326,14 @@ object Dedup {
         expr(s"coalesce(element_at(m, $w), 0L)").as(s"w$w")): _*)
       .withColumn("n", expr((0 until W).map(w =>
         s"CAST(bit_count(w$w) AS BIGINT)").mkString(" + ")))
-      // ONE bitmap row per doc, fed to BOTH join sides: persist it, or the
+      // ONE bitmap row per doc, fed to BOTH join sides: cache it, or the
       // gram->bitmap chain (explode + two aggs + window join) is planned
       // and executed twice — measured 26 s vs 6 s at sf0.1
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     bits.count(): Unit // materialize, then the gram table can go
-    grams.unpersist(false)
+    // released early: `bits`' plan still references the gram table, so the
+    // ContextCleaner would free it only with the result (q23 is memory-bound)
+    graft.io.Checkpoints.release(grams)
     // triangle blocking: doc in bucket p is LEFT for keys (p, j >= p) and
     // RIGHT for keys (i <= p, p); every unordered pair meets on exactly
     // one (bi, bj) key (same-bucket dupes removed by id_a < id_b)
@@ -426,9 +428,9 @@ object Dedup {
                 fingerprint64(array_join(slice(lines, i + 1, $spanLines), ' ')) AS fp))"""))
         .as("s"))
       .select(col("doc_id"), col("s.start").as("start"), col("s.fp").as("fp"))
-      // feeds BOTH the keeper agg and the removal join below — persist so
+      // feeds BOTH the keeper agg and the removal join below — cache so
       // the span explode + fingerprint runs once (OPTIMIZATION r6)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val keepers = spans.groupBy("fp").agg(
       count(lit(1)).as("cnt"),
       min(struct(col("doc_id"), col("start"))).as("keeper"))
@@ -438,7 +440,7 @@ object Dedup {
           col("start") === col("keeper.start")))
       .select("doc_id", "start")
       // feeds the removed-span count AND the covered-line agg (r6)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val remAgg = removed.groupBy("doc_id")
       .agg(count(lit(1)).as("removed_spans"))
     val covAgg = removed

@@ -64,16 +64,16 @@ object Knn {
       if (round >= maxRounds && r < coveringR) r = coveringR
       covered = r >= coveringR
       val guarantee = r.toDouble * cellSize
-      // cand feeds BOTH kth and resolved — persist so the ring join runs
-      // once per round instead of twice (round-3 verdict); released below
-      // once the round's outputs are checkpoint-materialized
+      // cand feeds BOTH kth and resolved — cache it so the ring join runs
+      // once per round instead of twice (round-3 verdict); the checkpoints
+      // below cut the lineage to it, so it is freed with this round's frames
       val cand = pending
         .withColumn("__cell", explode(F.cell_disk(col("__qcell"), lit(r))))
         .join(pts.withColumnRenamed("__pcell", "__cell"), Seq("__cell"), "inner")
         .withColumn("__dist2", dist2)
         .withColumn("__rank", row_number().over(w))
         .where(col("__rank") <= k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.io.Checkpoints.cached)
       // a query is resolved iff it has k candidates and the k-th is within
       // the guarantee radius (otherwise a closer point may hide outside);
       // on the covering round the disk holds every point, so accept
@@ -86,10 +86,10 @@ object Knn {
           .select("__qid")
       // RELIABLE eager checkpoint of both round outputs: truncates the
       // cross-round lineage chain (pending otherwise re-derives every
-      // prior ring join at the final action) and lets cand release NOW —
-      // resolved/pending are tiny (≤ k rows per query / unresolved query
-      // keys) next to the candidate set. Reliable, not localCheckpoint:
-      // blocks survive executor loss on a real cluster (io/Checkpoints).
+      // prior ring join at the final action) — resolved/pending are tiny
+      // (≤ k rows per query / unresolved query keys) next to the candidate
+      // set. Reliable, not localCheckpoint: blocks survive executor loss on
+      // a real cluster (io/Checkpoints).
       val resolved = graft.io.Checkpoints.reliable(
         cand.join(kth, Seq("__qid"), "left_semi")
           .select("__qid", "__pid", "__dist2", "__rank"))
@@ -97,7 +97,6 @@ object Knn {
       if (!covered)
         pending = graft.io.Checkpoints.reliable(
           pending.join(kth, Seq("__qid"), "left_anti"))
-      cand.unpersist(false)
       r *= 2
       round += 1
     }

@@ -221,12 +221,12 @@ object Media {
       s"shiftright(dhash, ${offsets(i)}) & $mask"
     }.mkString("array(", ", ", ")")
     val h = dhash(decoded, gridW)
-    // both self-join legs read the chunked hash table; persisting it keeps
+    // both self-join legs read the chunked hash table; caching it keeps
     // the codec (encode/decode UDF) lineage from executing once per leg —
     // (img_id, dhash, chunk) is ~25 B/row × (maxHamming+1), tiny vs pixels
     val chunked = h.select(col("img_id"), col("dhash"),
       posexplode(expr(chunkExpr)).as(Seq("chunk_i", "chunk")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val a = chunked.select(col("img_id").as("id_a"), col("dhash").as("h_a"),
       col("chunk_i"), col("chunk"))
     val b = chunked.select(col("img_id").as("id_b"), col("dhash").as("h_b"),

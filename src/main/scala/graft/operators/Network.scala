@@ -57,8 +57,7 @@ object Network {
     * nodes: (node: long); edges: (src, dst) — weights ignored. */
   def pagerankInt(edges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
     val outd = edges.groupBy("src").agg(count(lit(1)).as("od"))
-    val e = edges.select("src", "dst").join(outd, "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = graft.io.Checkpoints.cached(edges.select("src", "dst").join(outd, "src"))
     val ec = e.count()
     withGraphParts(e, ec) {
     val m = graft.io.Checkpoints.repeat(
@@ -69,7 +68,6 @@ object Network {
       nodes.select(col("node")).join(contrib, Seq("node"), "left")
         .select(col("node"), (lit(150000L) + coalesce(col("cs"), lit(0L))).as("m"))
     }
-    e.unpersist(false)
     m.select(col("node"), col("m").as("rank_micro"))
     }
   }
@@ -80,8 +78,7 @@ object Network {
   def shortestPaths(edges: DataFrame, source: Long, maxRounds: Int = 200): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src"), col("dst"), col("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = graft.io.Checkpoints.cached(edges.select(col("src"), col("dst"), col("w")))
     val ec = e.count()
     withGraphParts(e, ec) {
     // Probing only every second round is exact: the signature is
@@ -100,7 +97,6 @@ object Network {
       prev = sig
       same
     }
-    e.unpersist(false)
     dist.select(col("node"), col("d").as("dist"))
     }
   }

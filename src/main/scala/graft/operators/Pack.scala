@@ -52,7 +52,7 @@ object Pack {
     val w = Window.partitionBy("pid").orderBy("fp", "doc_id")
     val local = parts
       .withColumn("run", sum(col("n_tokens")).over(w) - col("n_tokens"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     // phase 3: per-partition totals — bounded collect (numPartitions rows)
     val totals = local.groupBy("pid").agg(sum("n_tokens").as("t"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
@@ -103,7 +103,7 @@ object Pack {
     val w = Window.partitionBy("pid", "bucket").orderBy("doc_id")
     val local = parts
       .withColumn("lrank", row_number().over(w).cast("long") - 1L)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val totals = local.groupBy("pid", "bucket").agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
       .sortBy(t => (t._2, t._1)) // per bucket, in pid (= range) order

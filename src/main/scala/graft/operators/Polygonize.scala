@@ -261,7 +261,7 @@ object Polygonize {
                  dnOf: Double => Double = identity,
                  conn8: Boolean = false): DataFrame = {
     val emits = emitLocal(tiles, w, h, gridW, gridH, mask, dnOf, conn8).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val comps = emits.where(col("kind") === 0)
       .select(col("lbl"), col("dn"), col("n"),
         col("minGx"), col("maxGx"), col("minGy"), col("maxGy"))
@@ -352,7 +352,7 @@ object Polygonize {
     val spark = tiles.sparkSession
     import spark.implicits._
     val emits = emitLocal(tiles, w, h, gridW, gridH, mask, dnOf).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val comps = emits.where(col("kind") === 0).select(col("lbl"), col("dn"))
     val rep = resolveLabels(comps.select(col("lbl").as("node")), seams(emits))
     // pixel-level emission (second pass; only rows that polygonize)
@@ -434,19 +434,19 @@ object Polygonize {
             dnOf: Double => Double = identity,
             conn8: Boolean = false): DataFrame = {
     val emits = emitLocal(tiles, w, h, gridW, gridH, mask, dnOf, conn8).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val comps = emits.where(col("kind") === 0)
       .select(col("lbl"), col("dn"), col("n"),
         col("minGx"), col("maxGx"), col("minGy"), col("maxGy"))
     val rep = resolveLabels(comps.select(col("lbl").as("node")), seams(emits))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     // global components + their pairwise adjacency (any DN)
     val globalComps = comps.join(rep, comps("lbl") === rep("node"))
       .groupBy(col("rep").as("label"))
       .agg(first(col("dn")).as("dn"), sum(col("n")).as("n_pixels"),
         min(col("minGx")).as("min_gx"), max(col("maxGx")).as("max_gx"),
         min(col("minGy")).as("min_gy"), max(col("maxGy")).as("max_gy"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val localNbr = emits.where(col("kind") === 3).select(col("lbl").as("a"), col("other").as("b"))
     // cross-tile different-DN adjacency: seam join WITHOUT dn equality
     val outE = emits.where(col("kind") === 1).select(col("gx"), col("gy"), col("lbl").as("a"))

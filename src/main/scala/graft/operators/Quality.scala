@@ -141,7 +141,7 @@ object Quality {
         split(trim(regexp_replace(lower(col(textCol)), "\\s+", " ")), " ")).as("term"))
       .where(col("term") =!= "")
     val model = toks.groupBy("term").agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val total = model.agg(sum(col("cnt"))).collect()(0).getLong(0)
     require(total < Long.MaxValue / 1000L,
       s"unigramSurprisal: total token count $total would overflow the milli scale")
@@ -184,10 +184,10 @@ object Quality {
       .where(col("term") =!= "")
     val seq = toks.withColumn("prev",
         lag(col("term"), 1).over(Window.partitionBy("doc_id").orderBy("pos")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val mtoks = seq.where(col("in_model"))
     val uni = mtoks.groupBy("term").agg(count(lit(1)).as("cnt1"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val n = uni.agg(sum(col("cnt1"))).collect()(0).getLong(0)
     require(n > 0, "bigramBackoff: empty model corpus")
     require(n < Long.MaxValue / 1000L,

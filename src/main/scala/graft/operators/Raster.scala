@@ -206,11 +206,11 @@ object Raster {
     var out = cur
     var z = baseZoom
     while (z > toZoom) {
-      // persist each level: it feeds BOTH the output union and the next
+      // cache each level: it feeds BOTH the output union and the next
       // coarser level — without it level z-k re-executes the whole chain
       // from base (O(levels²) work)
       cur = pyramidUp(cur, method)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.io.Checkpoints.cached)
       out = out.unionByName(cur)
       z -= 1
     }
@@ -966,7 +966,7 @@ object Raster {
         col("bands")(0)("pixels").as("__r"),
         col("bands")(1)("pixels").as("__g"),
         col("bands")(2)("pixels").as("__b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val sh = 8 - quantBits
     def q(c: String, i: String) =
       s"shiftleft(shiftright(CAST(element_at($c, $i + 1) AS INT), $sh), $sh)"
@@ -1104,23 +1104,23 @@ object Raster {
     val mask = rasterize(cut.withColumn("__burn", lit(1.0)), geomCol, "__burn", zoom, mode = "max")
       .select(col("tx"), col("ty"), col("pixels").as("__m"))
     // feeds the edge focal, the comb zip AND the final weight join —
-    // persist so the rasterize chain runs once (OPTIMIZATION r6)
+    // cache so the rasterize chain runs once (OPTIMIZATION r6)
     val maskFull = tiles
       .select(col("tx").cast("long").as("tx"), col("ty").cast("long").as("ty"))
       .join(mask, Seq("tx", "ty"), "left")
       .withColumn("pixels",
         coalesce(col("__m"), expr(s"array_repeat(CAST(0.0 AS DOUBLE), ${w * h})")))
       .select("tx", "ty", "pixels")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     val edge = Focal.focal(maskFull, w, h, nxTiles, nyTiles, "edge8")
       .select(col("tx"), col("ty"), col("pixels").as("__e"))
     // comb per pixel: 2·mask + edge ∈ {0 out, 1 out-boundary, 2 in, 3 in-boundary}
     val comb = maskFull.join(edge, Seq("tx", "ty"))
       .withColumn("pixels", expr("zip_with(pixels, __e, (m, e) -> m * 2.0D + e)"))
       .select("tx", "ty", "pixels")
-      // probed by BOTH distance passes (outer + inner blend) — persist so
+      // probed by BOTH distance passes (outer + inner blend) — cache so
       // the mask + edge-focal chain runs once (OPTIMIZATION r6)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.io.Checkpoints.cached)
     // sparse (gx, gy, d2) boundary-distance rows re-keyed and AGGREGATED to
     // per-tile DENSE arrays (-1 at untouched indexes): the join probe side
     // stays ONE ROW PER TILE instead of one row per pixel — at 100-TB

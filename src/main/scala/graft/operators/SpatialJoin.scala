@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.F
+import graft.io.Checkpoints
 
 /** Distributed spatial join — the engine's centerpiece (SURVEY.md §3.3 J2/J3).
   *
@@ -67,7 +67,7 @@ object SpatialJoin {
   /** The geometry side of every join: one row per (geometry, covering
     * cell) keyed `__cell`, with the geometry's envelope in `envCol` —
     * computed ONCE per geometry, before the explode — for the codegen'd
-    * envelope gate. Persisted: the plan-time [[coverZooms]] action
+    * envelope gate. Cached: the plan-time [[coverZooms]] action
     * materializes the cover anyway, so the join's second read is free.
     * fan: the sf inputs are single-row-group parquet (one scan split), so
     * without a repartition the WKT parse/cover explode — and, when the
@@ -83,7 +83,7 @@ object SpatialJoin {
     graft.core.Par.fan(df)
       .withColumn(envCol, F.st_env_bounds(col(geomCol)))
       .withColumn("__cell", explode(cells))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(Checkpoints.cached)
   }
 
   /** The point side: each point's `__cell` on the same grid as `cov`,
@@ -124,7 +124,7 @@ object SpatialJoin {
     probe.join(broadcast(build), Seq("__cell"), "inner")
 
   /** Whether `build` fits under `spark.sql.autoBroadcastJoinThreshold`.
-    * Every build here is a cover persisted and materialized by the
+    * Every build here is a cover cached and materialized by the
     * plan-time [[coverZooms]] collect, so its size is the measured size
     * of the cached rows, not an estimate (a zoom-ladder re-key on top is
     * sized as Spark's planner sizes it for its own broadcast choice). */
@@ -138,7 +138,7 @@ object SpatialJoin {
     * is [[broadcastCellJoin]]: a broadcast hash join never groups probe
     * rows by cell, so no cell can be hot (Spark's AQE splits skew only in
     * shuffled joins for the same reason), and the probe is neither
-    * persisted nor counted.
+    * cached nor counted.
     *
     * Otherwise a pre-agg counts probe rows per cell; only cells over
     * `hotThreshold` take the [[saltedJoin]], the cold remainder joins
@@ -148,10 +148,10 @@ object SpatialJoin {
     * bloat the plan.
     *
     * `probe` feeds three consumers (pre-agg, cold join, hot join), so it
-    * is persisted: without it each one re-runs the full upstream scan
+    * is cached: without it each one re-runs the full upstream scan
     * (measured 479 s vs 260 s at 128M docs). MEMORY_AND_DISK spills,
     * never recomputes. The hot-cell table is tiny but referenced by four
-    * joins, so it is persisted too.
+    * joins, so it is cached too. Both belong to the returned join.
     *
     * OPTIMIZATION r6 (guide §2.5 — AQE-style plan-time adaptivity): when
     * the bounded `isEmpty` probe finds NO hot cell, the split is four
@@ -164,14 +164,12 @@ object SpatialJoin {
                        hotThreshold: Long): DataFrame =
     if (broadcastable(build)) broadcastCellJoin(probe, build)
     else {
-      val p = probe.persist(StorageLevel.MEMORY_AND_DISK)
+      val p = Checkpoints.cached(probe)
       val hotCells = p.groupBy("__cell").count()
         .where(col("count") > hotThreshold).select("__cell")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (hotCells.isEmpty) {
-        hotCells.unpersist(false)
-        p.join(build, Seq("__cell"), "inner")
-      } else {
+        .transform(Checkpoints.cached)
+      if (hotCells.isEmpty) p.join(build, Seq("__cell"), "inner")
+      else {
         val hot = broadcast(hotCells)
         val cold = p.join(hot, Seq("__cell"), "left_anti")
           .join(build.join(hot, Seq("__cell"), "left_anti"), Seq("__cell"))
@@ -221,7 +219,7 @@ object SpatialJoin {
     val cov = cover(polys, polyGeom, zoom, "__env")
     // fan the points too: a broadcast cover runs the whole candidate +
     // refine pipeline in point-side tasks (and so do the cold/hot joins of
-    // a shuffled cover's split, whose persisted probe is read three times)
+    // a shuffled cover's split, whose cached probe is read three times)
     val pts = keyPoints(graft.core.Par.fan(points), lonCol, latCol, zoom, cov)
     skewJoin(pts, cov, hash(col(lonCol), col(latCol)), saltFactor, hotThreshold)
       .where(pipRefine(polyGeom, lonCol, latCol)).drop("__cell", "__env")
@@ -253,7 +251,7 @@ object SpatialJoin {
 
   /** Self-join variant (OPTIMIZATION r6, guide §2.4 "two operations keyed
     * the same way can share one exchange" applied to the cover build): a
-    * geometry table joined against ITSELF used to build, persist and
+    * geometry table joined against ITSELF used to build, cache and
     * zoom-probe two byte-identical covers; one cover now feeds both join
     * sides through renames. Join logic, salting and refine are exactly
     * [[geomJoin]]'s — the output rows are identical by construction. */

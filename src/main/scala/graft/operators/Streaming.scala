@@ -12,40 +12,6 @@ import graft.functions.F
   */
 object Streaming {
 
-  /** Persisted static polygon covers created by streamPointInPolygon, so
-    * callers can release them when their streaming query stops (caches
-    * would otherwise live for the session: a cover must outlive every
-    * micro-batch, so the operator cannot unpersist it itself). */
-  private val staticCovers =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Unpersist every static cover cached by streamPointInPolygon. Called
-    * automatically by the termination listener below once NO streaming
-    * query is active; public so callers with their own lifecycle can
-    * release early. */
-  def releaseStaticCovers(): Unit = {
-    var df = staticCovers.poll()
-    while (df != null) { df.unpersist(); df = staticCovers.poll() }
-  }
-
-  /** Ties cover lifetime to query termination (VERDICT r4 / ADVICE r3):
-    * when any streaming query terminates and no other query is still
-    * active, every cached cover is unpersisted. Conservative under
-    * concurrency — covers live while ANY streaming query runs, since the
-    * queue does not track which query uses which cover — but nothing
-    * outlives the last active query anymore. */
-  private val releaseListenerOn = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def ensureReleaseListener(spark: SparkSession): Unit =
-    if (releaseListenerOn.compareAndSet(false, true)) {
-      import org.apache.spark.sql.streaming.StreamingQueryListener
-      spark.streams.addListener(new StreamingQueryListener {
-        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-          if (spark.streams.active.isEmpty) releaseStaticCovers()
-      })
-    }
-
   /** File-source stream of events with event-time watermark + tumbling
     * window counts — the streaming twin of the q09 batch query. */
   def eventWindowCounts(spark: SparkSession, schema: StructType, path: String,
@@ -82,15 +48,12 @@ object Streaming {
   def streamPointInPolygon(points: DataFrame, polys: DataFrame,
                            polyGeom: String, lonCol: String, latCol: String,
                            zoom: Int): DataFrame = {
-    ensureReleaseListener(points.sparkSession)
-    // the cover is persisted like the batch operator's, and here it
-    // matters more: the static side is re-joined by EVERY micro-batch of a
-    // long-running stream. Lifecycle: the termination listener
-    // (ensureReleaseListener) unpersists covers once the last active
-    // streaming query stops; releaseStaticCovers() remains for callers
-    // that want to free earlier.
+    // the cover is cached like the batch operator's, and here it matters
+    // more: the static side is re-joined by EVERY micro-batch of a
+    // long-running stream. The returned frame owns it, and through that
+    // frame the streaming query started on it: once the query is stopped
+    // and dropped, Spark's ContextCleaner frees the cover
     val cov = SpatialJoin.cover(polys, polyGeom, zoom, "__env")
-    staticCovers.add(cov)
     // `polys` is STATIC, so the mixed-zoom ladder is computable at plan
     // time exactly like the batch operator: if any polygon's capped cover
     // coarsened below `zoom`, the streaming point side must re-key to

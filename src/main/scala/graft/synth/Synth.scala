@@ -173,7 +173,7 @@ object Synth {
 
   /** Relations (rel_id, members array<struct<way_id, role>>): both arcs of
     * each split way as role=outer members. Takes the arcs DataFrame so a
-    * caller can persist ONE arc derivation and feed both the member-way
+    * caller can cache ONE arc derivation and feed both the member-way
     * table and the relation table (separate lineages would recompute the
     * whole window + join pipeline twice). */
   def osmRelationsFromArcs(arcs: DataFrame): DataFrame =

@@ -4,7 +4,10 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** Package-access shim (the Register/Columns seam pattern): build
   * DataFrames the public API cannot. [[ofInternal]] rebuilds one from an
@@ -26,4 +29,19 @@ object Frames {
   def ofPlan(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** The relation `Dataset.persist` would register for `df` at `level`,
+    * planned as `CacheManager.cacheQuery` plans it (in a session with the
+    * same configs off), but registered nowhere. Building it runs no job. */
+  def inMemoryRelation(df: DataFrame, level: StorageLevel): InMemoryRelation = {
+    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val off = SQLConf.AUTO_BUCKETED_SCAN_ENABLED +:
+      (if (session.sessionState.conf.getConf(SQLConf.CAN_CHANGE_CACHED_PLAN_OUTPUT_PARTITIONING)) Nil
+       else Seq(SQLConf.ADAPTIVE_EXECUTION_APPLY_FINAL_STAGE_SHUFFLE_OPTIMIZATIONS))
+    val planner = org.apache.spark.sql.classic.SparkSession
+      .getOrCloneSessionWithConfigsOff(session, off)
+    planner.withActive {
+      InMemoryRelation(level, planner.sessionState.executePlan(df.queryExecution.analyzed), None)
+    }
+  }
 }

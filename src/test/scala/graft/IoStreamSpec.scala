@@ -319,4 +319,23 @@ class IoStreamSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((10L, 21L), (10L, 22L)))
   }
+
+  test("streaming state stores are sized through the Hadoop FileSystem of the source URI") {
+    // a 1 GiB sparse file: setLength writes no data blocks
+    val dir = java.nio.file.Files.createTempDirectory("graft-parts")
+    val f = dir.resolve("big.bin")
+    val raf = new java.io.RandomAccessFile(f.toFile, "rw")
+    try raf.setLength(1L << 30) finally raf.close()
+    try {
+      // 1 GiB at ~64 MB per store
+      assert(SparkEntry.streamStateParts(spark, f.toString) == 16)
+      assert(SparkEntry.streamStateParts(spark, f.toUri.toString) == 16)
+      assert(SparkEntry.streamStateParts(spark, dir.toUri.toString) == 16)
+    } finally graft.io.LocalDirs.delete(dir)
+  }
+
+  test("the warmup probes run without raising") {
+    // no catch around the call: a failing probe fails the spec
+    SparkEntry.warmupProbes(spark)
+  }
 }

@@ -219,7 +219,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("span-sequence invariant: pipeline output reconstructs input spans exactly") {
     F.ensureRegistered(spark)
-    val docs = Synth.docs(spark, TestSpark.SfSmall).cache()
+    val docs = graft.io.Checkpoints.cached(Synth.docs(spark, TestSpark.SfSmall))
     // a pipeline: explode -> enrich (tile assign + lang of text) -> reassemble
     val exploded = docs
       .select(col("doc_id"), posexplode(col("spans")).as(Seq("pos", "span")))
@@ -489,9 +489,7 @@ class PipelineSpec extends AnyFunSuite {
     // built and consumed inside a method, so no local keeps the result alive
     def run(): Set[Int] = {
       val out = Dedup.clusters(Seq((2L, 1L), (2L, 3L)).toDF("id_a", "id_b"))
-      assert(out.queryExecution.withCachedData.collectFirst {
-        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
-      }.isEmpty, "the result must not read a CacheManager entry")
+      assert(spark.sharedState.cacheManager.isEmpty, "the edges must not be a CacheManager entry")
       assert(out.count() == 3L)
       TestBus.rddsWithBlocks(sc) -- before
     }

@@ -1,7 +1,9 @@
 package org.apache.spark
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
+import org.apache.spark.storage.RDDBlockId
 
 /** The listener bus is private to Spark; specs drain it so that a listener
   * has seen every event of the code under test before it is read. */
@@ -47,6 +49,26 @@ object TestBus {
     sc.env.blockManager.master
       .getMatchingBlockIds(_.isRDD, askStorageEndpoints = true)
       .collect { case b: org.apache.spark.storage.RDDBlockId => b.rddId }.toSet
+
+  /** Runs `body` and returns its result with the ids of the RDDs that
+    * stored a block while it ran. */
+  def rddsCached[T](sc: SparkContext)(body: => T): (T, Set[Int]) = {
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId match {
+          case b: RDDBlockId if e.blockUpdatedInfo.storageLevel.isValid => ids.add(b.rddId): Unit
+          case _ => ()
+        }
+    }
+    drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      drain(sc)
+      (out, scala.jdk.CollectionConverters.SetHasAsScala(ids).asScala.toSet)
+    } finally sc.removeSparkListener(listener)
+  }
 
   private def count[T](sc: SparkContext, listen: AtomicInteger => SparkListener)
                       (body: => T): (T, Int) = {
