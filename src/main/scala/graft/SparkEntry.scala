@@ -169,8 +169,7 @@ object SparkEntry {
       .select(col("doc_id"), col("span.offset").as("offset"),
         F.st_geomfromwkt(col("span.text")).as("g"))
       .withColumn("lon", F.st_x(col("g"))).withColumn("lat", F.st_y(col("g")))
-    val polys = Synth.regionWkt(spark, dir)
-      .withColumn("geom", F.st_geomfromwkt(col("wkt")))
+    val polys = Synth.regionGeoms(spark, dir)
     SpatialJoin.pointInPolygon(polys, "geom", pts, "lon", "lat", zoom = 5)
       .withColumn("tile", F.cell_encode(col("lon"), col("lat"), lit(12)))
       .select("doc_id", "offset", "region_id", "tile")
@@ -306,7 +305,7 @@ object SparkEntry {
     // ------------- spatial engine (SURVEY.md §3.3 J2/J3/J4, §2.4) ---------
     "q11_pip_broadcast" -> ((s, dir) => {
       F.ensureRegistered(s)
-      val polys = Synth.regionWkt(s, dir).withColumn("geom", F.st_geomfromwkt(col("wkt")))
+      val polys = Synth.regionGeoms(s, dir)
       // project-before-exchange (guide §2.3): only pt_id/lon/lat survive
       // to the output, so don't carry the other six point columns through
       // the broadcast probe pipeline
@@ -317,7 +316,7 @@ object SparkEntry {
     }),
     "q12_pip_salted" -> ((s, dir) => {
       F.ensureRegistered(s)
-      val polys = Synth.regionWkt(s, dir).withColumn("geom", F.st_geomfromwkt(col("wkt")))
+      val polys = Synth.regionGeoms(s, dir)
       SpatialJoin.pointInPolygon(polys, "geom",
         Synth.points(s, dir).select("pt_id", "lon", "lat"), "lon", "lat",
         zoom = 7, broadcastPolys = false, saltFactor = 8)
@@ -325,12 +324,12 @@ object SparkEntry {
     }),
     "q52_pip_adaptive" -> ((s, dir) => {
       // adaptive skew handling: a region cover under the broadcast
-      // threshold broadcasts (no cell can be hot); a larger one, like this
-      // one with its WKT text from sf0.01 up, salts only the cells the
-      // pre-agg flags hot (here the 0.5° hot-spot cluster); identical row
-      // set to q11
+      // threshold broadcasts (no cell can be hot), as this (region_id,
+      // geom) cover does up to sf0.01 (5.5 MB); a larger one (55 MB at
+      // sf0.1) salts only the cells the pre-agg flags hot (here the 0.5°
+      // hot-spot cluster); identical row set to q11
       F.ensureRegistered(s)
-      val polys = Synth.regionWkt(s, dir).withColumn("geom", F.st_geomfromwkt(col("wkt")))
+      val polys = Synth.regionGeoms(s, dir)
       SpatialJoin.pointInPolygonAdaptive(polys, "geom",
         Synth.points(s, dir).select("pt_id", "lon", "lat"), "lon", "lat",
         zoom = 7, saltFactor = 8, hotThreshold = 2000L)
@@ -379,7 +378,7 @@ object SparkEntry {
     }),
     "q15_zonal_stats" -> ((s, dir) => {
       F.ensureRegistered(s)
-      val polys = Synth.regionWkt(s, dir).withColumn("geom", F.st_geomfromwkt(col("wkt")))
+      val polys = Synth.regionGeoms(s, dir)
       // project-before-probe (guide §2.3, the q11 discipline): the agg
       // reads pt_id/l_quantity only — drop the other six point columns
       // before the broadcast probe pipeline
@@ -762,7 +761,7 @@ object SparkEntry {
       val ptsBatch = Synth.points(s, dir).select(col("pt_id"), col("lon"), col("lat"))
       ptsBatch.write.mode("overwrite").parquet(src)
       val stream = s.readStream.schema(ptsBatch.schema).parquet(src)
-      val polys = Synth.regionWkt(s, dir).withColumn("geom", F.st_geomfromwkt(col("wkt")))
+      val polys = Synth.regionGeoms(s, dir)
       val q = Streaming.streamPointInPolygon(stream, polys, "geom", "lon", "lat", zoom = 7)
         .select(col("region_id").cast("long").as("box_id"), col("pt_id"))
         .writeStream.format("parquet").option("path", out)
@@ -1673,7 +1672,7 @@ object SparkEntry {
       // mercator-side cover). Exact refine unchanged -> identical row set,
       // so the geodetic DuckDB oracle applies verbatim.
       F.ensureRegistered(s)
-      val polys = Synth.regionWkt(s, dir).withColumn("geom", F.st_geomfromwkt(col("wkt")))
+      val polys = Synth.regionGeoms(s, dir)
       SpatialJoin.pointInPolygon(polys, "geom",
         Synth.points(s, dir).select("pt_id", "lon", "lat"), "lon", "lat",
         zoom = 7, broadcastPolys = true, mercator = true)
@@ -3201,7 +3200,7 @@ object SparkEntry {
       // packed max_by key cnt*100 - cls (cls < 100). Same PIP plan as
       // q15 + one extra keyed agg.
       F.ensureRegistered(s)
-      val polys = Synth.regionWkt(s, dir).withColumn("geom", F.st_geomfromwkt(col("wkt")))
+      val polys = Synth.regionGeoms(s, dir)
       // project-before-probe (guide §2.3): only l_quantity feeds the
       // majority agg — drop the unused point columns before the probe
       SpatialJoin.pointInPolygon(polys, "geom",

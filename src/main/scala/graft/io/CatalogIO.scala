@@ -1,7 +1,9 @@
 package graft.io
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -80,10 +82,21 @@ object CatalogIO {
     path.getFileSystem(conf).listStatus(path).toSeq
       .map(st => (st, st.getPath.getName)).sortBy(_._2)
       .collect { case (st, name @ PartFile(pid)) if st.isFile =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-        val rows = try reader.getRecordCount finally reader.close()
-        DataFile(name, pid.toInt, rows, st.getLen)
+        DataFile(name, pid.toInt, footer(st, conf).rows, st.getLen)
       }
+  }
+
+  /** A parquet file's row count and row-group count. */
+  private[graft] final case class Footer(rows: Long, rowGroups: Int)
+
+  /** Reads `st`'s parquet footer on the driver. The read options come
+    * from `conf` (the session's `newHadoopConf()`): the one-argument
+    * `ParquetFileReader.open` builds a fresh Hadoop `Configuration` per
+    * file, which re-parses the `core-*.xml` resources each time. */
+  private[graft] def footer(st: FileStatus, conf: Configuration): Footer = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+      HadoopReadOptions.builder(conf).build())
+    try Footer(reader.getRecordCount, reader.getRowGroups.size) finally reader.close()
   }
 
   private val mapper = new ObjectMapper()

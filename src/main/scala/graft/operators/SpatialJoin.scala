@@ -69,11 +69,10 @@ object SpatialJoin {
     * computed ONCE per geometry, before the explode — for the codegen'd
     * envelope gate. Cached: the plan-time [[coverZooms]] action
     * materializes the cover anyway, so the join's second read is free.
-    * fan: the sf inputs are single-row-group parquet (one scan split), so
-    * without a repartition the WKT parse/cover explode — and, when the
-    * cover is broadcast, the whole candidate join + JTS refine — would
-    * run on one core (guide §2.5). Identity when the scan is already
-    * parallel. Registers the engine functions: every join starts here. */
+    * fan: a small input is one scan split, so without [[graft.core.Par.fan]]
+    * the WKT parse and cover explode would run on one core (guide §2.5).
+    * Identity when the scan is already parallel. Registers the engine
+    * functions: every join starts here. */
   private[operators] def cover(df: DataFrame, geomCol: String, zoom: Int, envCol: String,
                                mercator: Boolean = false): DataFrame = {
     F.ensureRegistered(df.sparkSession)
@@ -219,7 +218,9 @@ object SpatialJoin {
     val cov = cover(polys, polyGeom, zoom, "__env")
     // fan the points too: a broadcast cover runs the whole candidate +
     // refine pipeline in point-side tasks (and so do the cold/hot joins of
-    // a shuffled cover's split, whose cached probe is read three times)
+    // a shuffled cover's split, whose cached probe is read three times).
+    // A point scan of at least p parquet row groups is read in p splits;
+    // any other single-split input takes a round-robin exchange
     val pts = keyPoints(graft.core.Par.fan(points), lonCol, latCol, zoom, cov)
     skewJoin(pts, cov, hash(col(lonCol), col(latCol)), saltFactor, hotThreshold)
       .where(pipRefine(polyGeom, lonCol, latCol)).drop("__cell", "__env")

@@ -3,6 +3,7 @@ package graft.synth
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.F
 
 /** Deterministic synthesis of the engine's spatial inputs from the driver's
   * parquet tables (TESTDATA.md). No external data, no RNG: every value is
@@ -71,6 +72,14 @@ object Synth {
         col("xmin"), col("ymin"), col("xmax"), col("ymin"),
         col("xmax"), col("ymax"), col("xmin"), col("ymax"),
         col("xmin"), col("ymin")).as("wkt"))
+
+  /** The polygon side of the region joins: `(region_id, geom)`, the
+    * [[regionWkt]] boxes parsed to WKB. Nothing else reaches a join's
+    * cover, so the WKT text is neither cached nor broadcast. */
+  def regionGeoms(spark: SparkSession, sfDir: String): DataFrame = {
+    F.ensureRegistered(spark)
+    regionWkt(spark, sfDir).select(col("region_id"), F.st_geomfromwkt(col("wkt")).as("geom"))
+  }
 
   /** kNN query points — one per supplier row. */
   def queryPoints(spark: SparkSession, sfDir: String): DataFrame = {

@@ -30,6 +30,15 @@ object Frames {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A clone of `spark` with one SQL setting changed (`cloneSession` is
+    * `private[sql]`). The clone shares `spark`'s context and cached data;
+    * the setting leaves `spark` itself unchanged. */
+  def withConf(spark: SparkSession, key: String, value: String): SparkSession = {
+    val clone = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+    clone.sessionState.conf.setConfString(key, value)
+    clone
+  }
+
   /** The relation `Dataset.persist` would register for `df` at `level`,
     * planned as `CacheManager.cacheQuery` plans it (in a session with the
     * same configs off), but registered nowhere. Building it runs no job. */

@@ -111,6 +111,17 @@ class PlanSpec extends AnyFunSuite {
     assertBroadcastCells(saltedSelfJoin(1L))
   }
 
+  test("q52: the persisted region cover holds (region_id, geom) and no WKT text") {
+    graft.functions.F.ensureRegistered(spark)
+    val df = SparkEntry.queries("q52_pip_adaptive")(spark, TestSpark.SfSmall)
+    val cached = df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.output.map(_.name)
+    }
+    val covers = cached.filter(_.contains("__env"))
+    assert(covers.nonEmpty, cached)
+    covers.foreach(c => assert(c.toSet == Set("region_id", "geom", "__env", "__cell"), c))
+  }
+
   test("q01/q09: aggregates are partial+final hash aggregates (map-side combine)") {
     for (q <- Seq("q01_agg_filter", "q09_time_window")) {
       val p = plan(q)
