@@ -12,9 +12,11 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * injects every st_* / cell_* / text expression into each session's
   * FunctionRegistry at build time (the same seam the reference's fixed
   * operator registry fills at link time — reference:
-  * ogr/swq_op_registrar.cpp :: swq_op_registrar::GetOperator). Local tools
-  * and tests use graft.functions.F.ensureRegistered, which registers the
-  * identical builder list per-session.
+  * ogr/swq_op_registrar.cpp :: swq_op_registrar::GetOperator). Without it,
+  * graft.functions.F.ensureRegistered registers the identical builder list
+  * per session: operators and Synth for their own callers,
+  * SparkEntry.queries once per query build, and TestSpark once for the
+  * tests.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -93,6 +93,157 @@ object SparkEntry {
     (s"$base/__par=0", s"$base/__par=1")
   }
 
+  /** The stream-stream join shape of q140/q154/q223/q228. The events
+    * table is split by event_id parity into two file-source streams,
+    * each watermarked on `ts` by `delay`: views (even ids, columns
+    * view_id, v_user, vts) and clicks (odd ids: click_id, c_user, cts).
+    * `join` pairs them, and the result drains into a parquet sink under
+    * [[withStreamParts]]. With `sentinels` (the outer joins), two
+    * far-future sentinel events (ids and user -1, 30 and 31 days after
+    * the last event) then land in both sources, each followed by a
+    * drain, so the min-across-sources watermark passes every real row
+    * and its null-padded row is emitted. Returns the sink, read back. */
+  private def streamJoin(s: SparkSession, dir: String, tag: String, delay: String,
+      sentinels: Boolean)(join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    import s.implicits._
+    val ev = s.read.parquet(s"$dir/events.parquet")
+      .select(col("event_id"), col("user_id"), col("ts").cast("timestamp").as("ts"))
+    val out = scratch(s"${tag}out")
+    val ckp = scratch(s"${tag}ckp")
+    val srcBase = scratch(s"${tag}src")
+    val (srcV, srcC) = writeParitySources(ev, srcBase)
+    val views = s.readStream.schema(ev.schema).parquet(srcV)
+      .withWatermark("ts", delay)
+      .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
+        col("ts").as("vts"))
+    val clicks = s.readStream.schema(ev.schema).parquet(srcC)
+      .withWatermark("ts", delay)
+      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
+        col("ts").as("cts"))
+    val joined = join(views, clicks)
+    withStreamParts(s, streamStateParts(s, srcV, srcC)) {
+      val q = joined.writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckp).outputMode("append").start()
+      q.processAllAvailable()
+      if (sentinels) {
+        val maxMs = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0).getTime
+        // one partitioned append lands the sentinel in BOTH source dirs
+        // in a single job (same rows the two per-side appends wrote)
+        def sentinel(days: Long): Unit = {
+          val t = new java.sql.Timestamp(maxMs + days * 24L * 3600 * 1000)
+          Seq((-1L, -1L, t, 0), (-1L, -1L, t, 1))
+            .toDF("event_id", "user_id", "ts", "__par")
+            .write.partitionBy("__par").mode("append").parquet(srcBase)
+        }
+        sentinel(30); q.processAllAvailable()
+        sentinel(31); q.processAllAvailable()
+      }
+      q.stop()
+    }
+    s.read.parquet(out)
+  }
+
+  /** WKT of the q101/q237/q243 shapes over [[Synth.shapeSeeds]], by
+    * `q_id % 3`: a point, a 3-vertex line, a w×h rectangle. */
+  private val shapeWkt3 =
+    """CASE WHEN q_id % 3 = 0 THEN format_string('POINT(%s %s)', ax, ay)
+       WHEN q_id % 3 = 1 THEN format_string('LINESTRING(%s %s, %s %s, %s %s)',
+         ax, ay, ax + w, ay + h, ax, ay + 2.0D * h)
+       ELSE format_string('POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))',
+         ax, ay, ax + w, ay, ax + w, ay + h, ax, ay + h, ax, ay)
+       END"""
+
+  /** WKT of the q112/q159 shapes, by `q_id % 4`: the [[shapeWkt3]] three
+    * plus a two-part multilinestring. */
+  private val shapeWkt4 =
+    """CASE WHEN q_id % 4 = 0 THEN format_string('POINT(%s %s)', ax, ay)
+       WHEN q_id % 4 = 1 THEN format_string('LINESTRING(%s %s, %s %s, %s %s)',
+         ax, ay, ax + w, ay + h, ax, ay + 2.0D * h)
+       WHEN q_id % 4 = 2 THEN format_string('POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))',
+         ax, ay, ax + w, ay, ax + w, ay + h, ax, ay + h, ax, ay)
+       ELSE format_string('MULTILINESTRING((%s %s, %s %s), (%s %s, %s %s))',
+         ax, ay, ax + w, ay + h, ax, ay + h, ax + w, ay)
+       END"""
+
+  /** The text-driver round trip: write each `wkt` geometry with
+    * `st_as<fmt>` into column `c`, parse `c` back with `st_geomfrom<fmt>`,
+    * and dump the vertex rows (q_id, c, seq, x, y). */
+  private def textRoundTrip(fmt: String, c: String)(df: DataFrame): DataFrame =
+    df.withColumn(c, call_function(s"st_as$fmt",
+        call_function("st_geomfromwkt", col("wkt"))))
+      .select(col("q_id"), col(c),
+        posexplode(call_function("st_points",
+          call_function(s"st_geomfrom$fmt", col(c)))).as(Seq("seq", "p")))
+      .select(col("q_id"), col(c), col("seq").cast("long").as("seq"),
+        col("p.x").as("x"), col("p.y").as("y"))
+
+  /** Forward leg of the projection queries (q73, q80, q85, q249): each
+    * 4326 `(lon, lat)` into the row's `epsg`, quantized to integer cm. */
+  private def forwardCm(df: DataFrame): DataFrame =
+    df.withColumn("u", call_function("st_transform",
+        F.st_point(col("lon"), col("lat")), lit(4326), col("epsg")))
+      .select(col("q_id"), col("epsg"),
+        expr("CAST(floor(st_x(u) * 100.0 + 0.5) AS BIGINT)").as("e_cm"),
+        expr("CAST(floor(st_y(u) * 100.0 + 0.5) AS BIGINT)").as("n_cm"))
+
+  /** Inverse leg (q76, q81, q86, q250): each `(e_m, n_m)` in the row's
+    * `epsg` back to 4326, quantized to 1e-6 degree. */
+  private def inverseE6(df: DataFrame): DataFrame =
+    df.withColumn("u", F.st_transform(
+        F.st_point(col("e_m"), col("n_m")), col("epsg"), lit(4326)))
+      .select(col("q_id"), col("epsg"),
+        expr("CAST(floor(st_x(u) * 1000000.0 + 0.5) AS BIGINT)").as("lon_e6"),
+        expr("CAST(floor(st_y(u) * 1000000.0 + 0.5) AS BIGINT)").as("lat_e6"))
+
+  /** q193/q226: [[Synth.audioClips]] with the header decoded back from
+    * the bytes: sample count `n`, lead `ld` and tail `tl` silence widths. */
+  private def audioHeaders(s: SparkSession, dir: String): DataFrame =
+    Synth.audioClips(s, dir)
+      .withColumn("hdr", expr("CAST(bin AS STRING)"))
+      .withColumn("n", expr("CAST(substring(hdr, 5, 4) AS INT)"))
+      .withColumn("ld", expr("CAST(substring(hdr, 10, 1) AS INT)"))
+      .withColumn("tl", expr("CAST(substring(hdr, 12, 1) AS INT)"))
+
+  /** The q197/q209 warps: the q55 8/5 box resample of the zoom-3 grid
+    * (1024x512 → 640x320) once per reducer in `kernels`, checksummed per
+    * dst tile and tagged with its kernel. */
+  private def warpKernels(s: SparkSession, kernels: String*): DataFrame = {
+    val t = Synth.tiles(s, 3)
+    kernels.map(k =>
+      Raster.regrid(t, 1024, 512, 640, 320, k)
+        .select(lit(k).as("kernel"), col("tx"), col("ty"),
+          F.checksum_px(col("pixels")).as("cks")))
+      .reduce(_ unionByName _)
+  }
+
+  /** The layer-algebra pieces of `ab` (q_id, ga, gb): `op(ga, gb)` as
+    * `g`, tagged `kind`, empty pieces dropped. */
+  private def overlayPieces(ab: DataFrame, op: String, kind: String): DataFrame =
+    ab.withColumn("g", call_function(op, col("ga"), col("gb")))
+      .where(!call_function("st_isempty", col("g")))
+      .select(col("q_id"), lit(kind).as("kind"), col("g"))
+
+  /** The SymDifference leg of q210/q231: each method feature `gb` minus
+    * the union of its region's inputs, folded over the region's (at most
+    * 8) input boxes; a region with no input keeps `gb` whole. */
+  private def methodPieces(a: DataFrame, b: DataFrame): DataFrame = {
+    val cover = a.groupBy("rid").agg(collect_list(col("ga")).as("gas"))
+    b.join(cover, Seq("rid"), "left")
+      .withColumn("g", when(col("gas").isNull, col("gb")).otherwise(
+        call_function("st_difference", col("gb"),
+          expr("aggregate(slice(gas, 2, size(gas) - 1), element_at(gas, 1), (acc, gg) -> st_union(acc, gg))"))))
+      .select((col("rid") - 1000L).as("q_id"), lit("bside").as("kind"), col("g"))
+  }
+
+  /** Area and envelope of each overlay piece `g`: (q_id, kind, area,
+    * xmin, ymin, xmax, ymax). */
+  private def pieceStats(df: DataFrame): DataFrame =
+    df.withColumn("env", call_function("st_env_bounds", col("g")))
+      .select(col("q_id"), col("kind"),
+        call_function("st_area", col("g")).as("area"),
+        element_at(col("env"), 1).as("xmin"), element_at(col("env"), 2).as("ymin"),
+        element_at(col("env"), 3).as("xmax"), element_at(col("env"), 4).as("ymax"))
+
   /** The q263/q269 deterministic road network over the supplier ids:
     * width-10 lattice (right/down edges, weights 1–7/1–5) + two express
     * tiers (+33 w4, +205 w9) that keep the diameter in the tens at any
@@ -227,7 +378,16 @@ object SparkEntry {
   }
   def subsetActive: Boolean = sys.env.contains("GRAFT_ONLY")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every query by name. The function surface is registered on the
+    * caller's session here, once per build, so no builder below does it
+    * itself (registration is idempotent per session; see [[F]]). */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    builders.transform((_, build) => (s: SparkSession, dir: String) => {
+      F.ensureRegistered(s)
+      build(s, dir)
+    })
+
+  private def builders: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ------------- relational core (SURVEY.md §3.2/3.3/3.5/3.6/3.7) -------
     "q01_agg_filter" -> ((s, dir) => {
       s.read.parquet(s"$dir/lineitem.parquet")
@@ -304,7 +464,6 @@ object SparkEntry {
 
     // ------------- spatial engine (SURVEY.md §3.3 J2/J3/J4, §2.4) ---------
     "q11_pip_broadcast" -> ((s, dir) => {
-      F.ensureRegistered(s)
       val polys = Synth.regionGeoms(s, dir)
       // project-before-exchange (guide §2.3): only pt_id/lon/lat survive
       // to the output, so don't carry the other six point columns through
@@ -315,7 +474,6 @@ object SparkEntry {
         .select(col("region_id").cast("long").as("box_id"), col("pt_id"))
     }),
     "q12_pip_salted" -> ((s, dir) => {
-      F.ensureRegistered(s)
       val polys = Synth.regionGeoms(s, dir)
       SpatialJoin.pointInPolygon(polys, "geom",
         Synth.points(s, dir).select("pt_id", "lon", "lat"), "lon", "lat",
@@ -328,7 +486,6 @@ object SparkEntry {
       // geom) cover does up to sf0.01 (5.5 MB); a larger one (55 MB at
       // sf0.1) salts only the cells the pre-agg flags hot (here the 0.5°
       // hot-spot cluster); identical row set to q11
-      F.ensureRegistered(s)
       val polys = Synth.regionGeoms(s, dir)
       SpatialJoin.pointInPolygonAdaptive(polys, "geom",
         Synth.points(s, dir).select("pt_id", "lon", "lat"), "lon", "lat",
@@ -336,7 +493,6 @@ object SparkEntry {
         .select(col("region_id").cast("long").as("box_id"), col("pt_id"))
     }),
     "q13_tile_assign" -> ((s, dir) => {
-      F.ensureRegistered(s)
       Synth.points(s, dir).select(col("pt_id"),
         F.cell_encode(col("lon"), col("lat"), lit(12)).as("cell"))
         .select(col("pt_id"), F.cell_zoom(col("cell")).as("zoom"),
@@ -358,7 +514,6 @@ object SparkEntry {
       // geodetic cell law → oracle-reproducible; one hash agg over the
       // point stream then per-tile map work — at 100 TB the tile
       // inventory is tiny next to the points and never reshuffles.
-      F.ensureRegistered(s)
       val z = 6; val n = 1L << z
       Synth.points(s, dir)
         .select(F.cell_encode(col("lon"), col("lat"), lit(z)).as("cell"))
@@ -377,7 +532,6 @@ object SparkEntry {
           col("n_points"))
     }),
     "q15_zonal_stats" -> ((s, dir) => {
-      F.ensureRegistered(s)
       val polys = Synth.regionGeoms(s, dir)
       // project-before-probe (guide §2.3, the q11 discipline): the agg
       // reads pt_id/l_quantity only — drop the other six point columns
@@ -391,7 +545,6 @@ object SparkEntry {
           min(col("pt_id")).as("min_pt"), max(col("pt_id")).as("max_pt"))
     }),
     "q16_docs_roundtrip" -> ((s, dir) => {
-      F.ensureRegistered(s)
       val docs = Synth.docs(s, dir)
       docs.select(col("doc_id"), posexplode(col("spans")).as(Seq("pos", "span")))
         .groupBy(col("doc_id"))
@@ -403,14 +556,7 @@ object SparkEntry {
             F.st_x(F.st_geomfromwkt(col("span.text"))))).as("min_x"))
     }),
     "q17_rasterize_checksum" -> ((s, dir) => {
-      F.ensureRegistered(s)
-      val geoms = Synth.boxes(s, dir)
-        .where(col("box_id") % 7 === 0)
-        .withColumn("geom", F.st_point(lit(0.0), lit(0.0))) // replaced below
-        .withColumn("geom", F.st_geomfromwkt(format_string(
-          "POLYGON((%.12f %.12f, %.12f %.12f, %.12f %.12f, %.12f %.12f, %.12f %.12f))",
-          col("xmin"), col("ymin"), col("xmax"), col("ymin"),
-          col("xmax"), col("ymax"), col("xmin"), col("ymax"), col("xmin"), col("ymin"))))
+      val geoms = Synth.rasterBoxes(s, dir)
         .withColumn("burn", (col("box_id") % 97 + 1).cast("double"))
       Raster.rasterize(geoms, "geom", "burn", zoom = 4, mode = "add")
         .select(col("zoom"), col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
@@ -421,32 +567,23 @@ object SparkEntry {
       // untouched tiles are all-burn, fully-covered ones all-zero).
       // Coverage reuses the q17 scanline machinery with burn=1/max, so
       // the oracle replays the SAME run arithmetic and complements it.
-      F.ensureRegistered(s)
-      val geoms = Synth.boxes(s, dir)
-        .where(col("box_id") % 7 === 0)
-        .withColumn("geom", F.st_geomfromwkt(format_string(
-          "POLYGON((%.12f %.12f, %.12f %.12f, %.12f %.12f, %.12f %.12f, %.12f %.12f))",
-          col("xmin"), col("ymin"), col("xmax"), col("ymin"),
-          col("xmax"), col("ymax"), col("xmin"), col("ymax"), col("xmin"), col("ymin"))))
+      val geoms = Synth.rasterBoxes(s, dir)
       Raster.rasterizeInvert(geoms, "geom", zoom = 4, burnVal = 5.0,
         nxTiles = 32, nyTiles = 16)
         .select(col("zoom").cast("long").as("zoom"), col("tx"), col("ty"),
           F.checksum_px(col("pixels")).as("cks"))
     }),
     "q18_pyramid_checksum" -> ((s, dir) => {
-      F.ensureRegistered(s)
       Raster.pyramidUp(Synth.tiles(s, zoom = 3), method = "average")
         .select(col("zoom").cast("long").as("zoom"), col("tx"), col("ty"),
           F.checksum_px(col("pixels")).as("cks"))
     }),
     "q19_warp_checksum" -> ((s, dir) => {
-      F.ensureRegistered(s)
       Raster.warpToMercator(Synth.tiles(s, zoom = 3), srcZoom = 3, dstZoom = 3,
         method = "bilinear")
         .select(col("zoom"), col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
     }),
     "q20_mosaic_checksum" -> ((s, dir) => {
-      F.ensureRegistered(s)
       val a = Synth.tiles(s, zoom = 3).withColumn("prio", lit(1))
       val b = Synth.tiles(s, zoom = 3).where(col("tx") % 2 === 0)
         .withColumn("pixels", expr("transform(pixels, p -> p + 1.0)"))
@@ -456,7 +593,6 @@ object SparkEntry {
           F.checksum_px(col("pixels")).as("cks"))
     }),
     "q21_grid_metrics" -> ((s, dir) => {
-      F.ensureRegistered(s)
       // scatter→grid aggregation (reference gdalgrid data metrics):
       // per zoom-6 cell: point count + quantity sum
       Synth.points(s, dir)
@@ -467,7 +603,6 @@ object SparkEntry {
           col("n"), col("sum_qty"))
     }),
     "q199_grid_data_minmax" -> ((s, dir) => {
-      F.ensureRegistered(s)
       // gdal_grid data-metrics algorithms minimum / maximum / range
       // (reference alg/gdalgrid.cpp :: GDALGridDataMetricMinimum /
       // ...Maximum / ...Range): per grid node, the extreme / spread of
@@ -486,7 +621,6 @@ object SparkEntry {
           col("v_min"), col("v_max"), (col("v_max") - col("v_min")).as("v_range"))
     }),
     "q221_grid_nearest" -> ((s, dir) => {
-      F.ensureRegistered(s)
       // gdal_grid NEAREST NEIGHBOR interpolation (reference
       // alg/gdalgrid.cpp :: GDALGridNearestNeighbor) — the one grid
       // algorithm the invdist (q56/q141/q150) and metric (q21/q67/q199)
@@ -554,12 +688,10 @@ object SparkEntry {
           col("neighbor_id"), col("score"))
     }),
     "q27_lang_id" -> ((s, dir) => {
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), F.lang_id(col("text")).as("pred_lang"))
     }),
     "q28_quality" -> ((s, dir) => {
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"),
           floor(F.quality_score(col("text")) * 1000000).cast("long").as("q_micro"))
@@ -625,7 +757,6 @@ object SparkEntry {
       // EXACTLY ONCE (the sink's (fp) multiset equals the distinct set).
       // Oracle replays the rolling-hash fingerprint over the distinct
       // texts.
-      F.ensureRegistered(s)
       val src = scratch("q155src")
       val out = scratch("q155out")
       val ckp = scratch("q155ckp")
@@ -656,54 +787,21 @@ object SparkEntry {
       // range bound on the watermarked columns themselves for outer
       // joins — and the oracle replays it in epoch_us. Null-padded
       // columns surface as -1 sentinels for hash stability.
-      import s.implicits._
-      F.ensureRegistered(s)
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"), col("ts").cast("timestamp").as("ts"))
-      val out = scratch("q154out")
-      val ckp = scratch("q154ckp")
-      val srcBase = scratch("q154src")
-      val (srcV, srcC) = writeParitySources(ev, srcBase)
-      val views = s.readStream.schema(ev.schema).parquet(srcV)
-        .withWatermark("ts", "1 minute")
-        .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-          col("ts").as("vts"))
-      val clicks = s.readStream.schema(ev.schema).parquet(srcC)
-        .withWatermark("ts", "1 minute")
-        .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-          col("ts").as("cts"))
-      val joined = views.join(clicks, expr(
-          "v_user = c_user AND cts >= vts AND cts <= vts + interval 1 hour"),
-          "leftOuter")
-        .select(col("view_id"), col("v_user"),
-          coalesce(col("click_id"), lit(-1L)).as("click_id"),
-          coalesce(unix_millis(col("cts")) - unix_millis(col("vts")), lit(-1L))
-            .as("delta_ms"))
       // outer-join state lives in ONE store PER SHUFFLE PARTITION per
       // side; at this data volume 8 stores beat 32 (stores are the
       // per-micro-batch fixed cost, and every batch touches all of
       // them). The setting binds at query START, so scope it to the
       // streaming query and restore for whoever runs next; results are
       // partition-count-independent (the 7-core gate already varies it).
-      import s.implicits._
-      withStreamParts(s, streamStateParts(s, srcV, srcC)) {
-        val q = joined.writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckp).outputMode("append").start()
-        q.processAllAvailable()
-        val maxMs = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0).getTime
-        // one partitioned append lands the sentinel in BOTH source dirs
-        // in a single job (same rows the two per-side appends wrote)
-        def sentinel(days: Long): Unit = {
-          val t = new java.sql.Timestamp(maxMs + days * 24L * 3600 * 1000)
-          Seq((-1L, -1L, t, 0), (-1L, -1L, t, 1))
-            .toDF("event_id", "user_id", "ts", "__par")
-            .write.partitionBy("__par").mode("append").parquet(srcBase)
-        }
-        sentinel(30); q.processAllAvailable()
-        sentinel(31); q.processAllAvailable()
-        q.stop()
-      }
-      s.read.parquet(out).where(col("v_user") >= 0)
+      streamJoin(s, dir, "q154", "1 minute", sentinels = true) { (views, clicks) =>
+        views.join(clicks, expr(
+            "v_user = c_user AND cts >= vts AND cts <= vts + interval 1 hour"),
+            "leftOuter")
+          .select(col("view_id"), col("v_user"),
+            coalesce(col("click_id"), lit(-1L)).as("click_id"),
+            coalesce(unix_millis(col("cts")) - unix_millis(col("vts")), lit(-1L))
+              .as("delta_ms"))
+      }.where(col("v_user") >= 0)
         .select(col("view_id"), col("click_id"), col("delta_ms"))
     }),
     "q143_stream_window_agg" -> ((s, dir) => {
@@ -754,7 +852,6 @@ object SparkEntry {
       // STATELESS, so one processAllAvailable drains everything
       // deterministically — the row set must equal the batch operator's
       // (same oracle SQL as q11).
-      F.ensureRegistered(s)
       val src = scratch("q121src")
       val out = scratch("q121out")
       val ckp = scratch("q121ckp")
@@ -781,32 +878,13 @@ object SparkEntry {
       // the complete, deterministic row set — no sentinel protocol. The
       // range bound sits on the raw watermarked ts columns so
       // state-eviction watermarks stay derivable.
-      F.ensureRegistered(s)
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"), col("ts").cast("timestamp").as("ts"))
-      val out = scratch("q223out")
-      val ckp = scratch("q223ckp")
-      val (srcV, srcC) = writeParitySources(ev, scratch("q223src"))
-      val views = s.readStream.schema(ev.schema).parquet(srcV)
-        .withWatermark("ts", "40 days")
-        .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-          col("ts").as("vts"))
-      val clicks = s.readStream.schema(ev.schema).parquet(srcC)
-        .withWatermark("ts", "40 days")
-        .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-          col("ts").as("cts"))
-      val joined = Streaming.streamIntervalJoin(views, clicks,
-          "v_user", "c_user", "vts", "cts", windowMs = 3600000L,
-          joinType = "leftSemi")
-        .select(col("view_id"), col("v_user"),
-          unix_millis(col("vts")).as("vts_ms"))
-      withStreamParts(s, streamStateParts(s, srcV, srcC)) {
-        val q = joined.writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckp).outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.read.parquet(out).select(col("view_id"), col("v_user"), col("vts_ms"))
+      streamJoin(s, dir, "q223", "40 days", sentinels = false) { (views, clicks) =>
+        Streaming.streamIntervalJoin(views, clicks,
+            "v_user", "c_user", "vts", "cts", windowMs = 3600000L,
+            joinType = "leftSemi")
+          .select(col("view_id"), col("v_user"),
+            unix_millis(col("vts")).as("vts_ms"))
+      }.select(col("view_id"), col("v_user"), col("vts_ms"))
     }),
     "q140_stream_join" -> ((s, dir) => {
       // First stream-STREAM join, ORACLE-adjudicated (§3.9; the q120/q121
@@ -819,31 +897,12 @@ object SparkEntry {
       // the raw watermarked ts columns (micros; oracle replays epoch_us)
       // so state-eviction watermarks are derivable; the delta_ms OUTPUT
       // stays millisecond arithmetic (epoch_ms truncation).
-      F.ensureRegistered(s)
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"), col("ts").cast("timestamp").as("ts"))
-      val out = scratch("q140out")
-      val ckp = scratch("q140ckp")
-      val (srcV, srcC) = writeParitySources(ev, scratch("q140src"))
-      val views = s.readStream.schema(ev.schema).parquet(srcV)
-        .withWatermark("ts", "40 days")
-        .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-          col("ts").as("vts"))
-      val clicks = s.readStream.schema(ev.schema).parquet(srcC)
-        .withWatermark("ts", "40 days")
-        .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-          col("ts").as("cts"))
-      val joined = Streaming.streamIntervalJoin(views, clicks,
-          "v_user", "c_user", "vts", "cts", windowMs = 3600000L)
-        .select(col("view_id"), col("click_id"),
-          (unix_millis(col("cts")) - unix_millis(col("vts"))).as("delta_ms"))
-      withStreamParts(s, streamStateParts(s, srcV, srcC)) {
-        val q = joined.writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckp).outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.read.parquet(out).select(col("view_id"), col("click_id"), col("delta_ms"))
+      streamJoin(s, dir, "q140", "40 days", sentinels = false) { (views, clicks) =>
+        Streaming.streamIntervalJoin(views, clicks,
+            "v_user", "c_user", "vts", "cts", windowMs = 3600000L)
+          .select(col("view_id"), col("click_id"),
+            (unix_millis(col("cts")) - unix_millis(col("vts"))).as("delta_ms"))
+      }.select(col("view_id"), col("click_id"), col("delta_ms"))
     }),
     "q30_sessionize" -> ((s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -856,7 +915,6 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_events"), min(col("event_id")).as("first_event"))
     }),
     "q31_fingerprint" -> ((s, dir) => {
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), F.fingerprint64(col("text")).as("fp"))
     }),
@@ -917,7 +975,6 @@ object SparkEntry {
       // boundary reset, documented in core/Dither.scala): zoom-2 mask
       // values scaled ×17 into the byte range; all-integer truncating
       // error flow makes the DuckDB list_reduce oracle bit-exact
-      F.ensureRegistered(s)
       Synth.maskTiles(s, 2)
         .withColumn("bits", call_function("dither_fs",
           expr("transform(pixels, v -> v * 17.0D)"), lit(8), lit(8)))
@@ -1018,7 +1075,6 @@ object SparkEntry {
       // arithmetic is exact on both engines. The lookup is a tile
       // equi-join + O(1) element_at: the raster never shuffles per pixel,
       // and the join broadcasts whichever side is small.
-      F.ensureRegistered(s)
       val pts = s.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey").as("q_id"))
         .withColumn("x", expr("-32.0D + CAST((q_id * 7919) % 4096 AS DOUBLE) / 32.0D"))
@@ -1070,7 +1126,6 @@ object SparkEntry {
       // iteration = one O(perimeter) halo exchange; out-of-grid neighbors
       // excluded (divisor = in-grid count). Oracle replays the row-major
       // IEEE accumulation with coalesce(+0.0) for absent cells.
-      F.ensureRegistered(s)
       val orig = Synth.maskTiles(s, 2)
       val filled = Raster.fillNodata(orig, 8, 8, 8, 4, _ < 1.0, radiusPx = 4)
       val withMask = filled.join(orig.select(col("tx"), col("ty"), expr(
@@ -1104,7 +1159,6 @@ object SparkEntry {
       // becomes its own BAND of the stacked output in argument order
       // (band stacking, vs mosaic's compositing) — a union with band
       // renumber; per-band checksums must equal each source's own.
-      F.ensureRegistered(s)
       val a = Synth.tiles(s, 3).withColumn("band", lit(1))
       val b = Synth.tiles(s, 3)
         .withColumn("pixels", expr("transform(pixels, p -> (p * 3.0 + 7.0) % 256.0)"))
@@ -1121,7 +1175,6 @@ object SparkEntry {
       // unionByName(allowMissingColumns) IS the field-union law — plain
       // scan→project→union, shuffle-free, and at 100 TB this merges
       // without touching either source's partitioning.
-      F.ensureRegistered(s)
       val a = Synth.boxes(s, dir).where(col("box_id") % 3 === 0)
         .select(lit("layer_a").as("src_layer"), col("box_id").as("fid"),
           format_string("name_%d", col("box_id")).as("name"),
@@ -1152,7 +1205,6 @@ object SparkEntry {
       // weight sum). Per-pixel rows, UNQUANTIZED: the weighted sums are
       // exact integer doubles in any add order and the one division is
       // the same IEEE op in both engines.
-      F.ensureRegistered(s)
       Raster.pyramidGauss(Synth.tiles(s, 3))
         .select(col("tx"), col("ty"), posexplode(col("pixels")).as(Seq("i", "val")))
         .select((col("tx") * 64 + col("i") % 64).as("pgx"),
@@ -1181,7 +1233,6 @@ object SparkEntry {
       // from the synth closed form at its GLOBAL coordinates, so a
       // misplaced strip (wrong dx0/dy sort, off-by-one slice) breaks the
       // order-sensitive checksum. ONE exchange (PlanSpec-pinned).
-      F.ensureRegistered(s)
       Raster.retile(Synth.tiles(s, 3), 16, 8, 160, 96)
         .select(col("tx"), col("ty"), col("w"), col("h"),
           F.checksum_px(col("pixels")).as("cks"))
@@ -1194,7 +1245,6 @@ object SparkEntry {
       // for downstream focal ops without a halo exchange). Offsets
       // 0,144,…,1008 × 0,80,…,480 → 8×7 tiles, edge tiles clipped. Same
       // single strips→exchange→assembly plan as q129.
-      F.ensureRegistered(s)
       Raster.retile(Synth.tiles(s, 3), 16, 8, 160, 96, overlap = 16)
         .select(col("tx"), col("ty"), col("w"), col("h"),
           F.checksum_px(col("pixels")).as("cks"))
@@ -1207,13 +1257,7 @@ object SparkEntry {
       // every pixel boundary by the 2^-12-offset construction), so the
       // oracle grades fill+DDA union against ground truth, not against a
       // second DDA.
-      F.ensureRegistered(s)
-      val geoms = Synth.boxes(s, dir)
-        .where(col("box_id") % 7 === 0)
-        .withColumn("geom", F.st_geomfromwkt(format_string(
-          "POLYGON((%.12f %.12f, %.12f %.12f, %.12f %.12f, %.12f %.12f, %.12f %.12f))",
-          col("xmin"), col("ymin"), col("xmax"), col("ymin"),
-          col("xmax"), col("ymax"), col("xmin"), col("ymax"), col("xmin"), col("ymin"))))
+      val geoms = Synth.rasterBoxes(s, dir)
         .withColumn("burn", (col("box_id") % 97 + 1).cast("double"))
       Raster.rasterize(geoms, "geom", "burn", zoom = 4, mode = "max", allTouched = true)
         .select(col("zoom"), col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
@@ -1227,7 +1271,6 @@ object SparkEntry {
       // and the per-tile priority mosaic picks fine-where-present,
       // upsampled-coarse elsewhere. Oracle: z3 closed form west, z2
       // closed form at (gx div 2, gy div 2) east.
-      F.ensureRegistered(s)
       val cols = Seq("zoom", "tx", "ty", "band", "pixels", "prio").map(col)
       val fine = Synth.tiles(s, 3).where(col("tx") < 8)
         .withColumn("prio", lit(2)).select(cols: _*)
@@ -1244,7 +1287,6 @@ object SparkEntry {
       // (dyadic shoelace products < 2^53), so the oracle recomputes area
       // as (xmax-xmin)*(ymax-ymin) from the generating arithmetic —
       // bit-exact, UNQUANTIZED.
-      F.ensureRegistered(s)
       val layer = Synth.regionWkt(s, dir)
         .withColumn("geom", F.st_geomfromwkt(col("wkt")))
       OgrSql.registerLayer(layer, "regions_layer", "geom", "region_id")
@@ -1260,7 +1302,6 @@ object SparkEntry {
       // pixels can never tie — the engine decides 2v < e_i + e_{i+1}, the
       // oracle the hand-derived v <= 15/63/127/191 thresholds
       // (independent formulations of the same rule).
-      F.ensureRegistered(s)
       val ramp = Seq((0, 0, 0, 128), (31, 0, 128, 0), (96, 255, 255, 0),
         (159, 128, 64, 0), (224, 255, 255, 255))
       Raster.colorRelief(Synth.tiles(s, 3), ramp, mode = "nearest")
@@ -1283,15 +1324,7 @@ object SparkEntry {
       // candidate generation + EXACT rational fixed-point verify — no
       // cross join anywhere (round 1 brute-forced an even-id subset).
       // Brute == bucketed equality is pinned in PipelineSpec.
-      F.ensureRegistered(s)
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val base = e.select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      val pert = e.select((col("vec_id") + lit(10000000L)).as("vec_id"),
-        expr("transform(sequence(1, 64), i -> " +
-          "(floor(CAST(element_at(embedding, i) AS DOUBLE) * 1000.0) " +
-          "+ ((vec_id * 31 + i) % 13) - 6) / 1000.0)").as("v"))
-      Ann.cosineDupPairs(base.unionByName(pert), "vec_id", "v",
+      Ann.cosineDupPairs(Synth.twinEmbeddings(s, dir), "vec_id", "v",
         minCosNum = 4L, minCosDen = 5L, fixedScale = 1000)
     }),
     "q45_ann_lsh" -> ((s, dir) => {
@@ -1310,7 +1343,6 @@ object SparkEntry {
       // the reference's OGRDataSource::ExecuteSQL path: SQL TEXT over a
       // registered layer with injected st_*/cell_* functions — parse →
       // analyze → optimize all Catalyst (SURVEY.md §4.1)
-      F.ensureRegistered(s)
       Synth.regionWkt(s, dir).createOrReplaceTempView("regions_v")
       s.sql("""
         SELECT region_id,
@@ -1324,13 +1356,11 @@ object SparkEntry {
 
     // ------------- translate / band algebra / mode pyramid ----------------
     "q47_translate" -> ((s, dir) => {
-      F.ensureRegistered(s)
       Raster.translate(Synth.tiles(s, 3), 64, 64, x0 = 100, y0 = 50,
         outW = 300, outH = 200, scale = 2.0, offset = 1.0, clampMin = 0.0, clampMax = 255.0)
         .select(col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
     }),
     "q48_calc" -> ((s, dir) => {
-      F.ensureRegistered(s)
       val a = Synth.tiles(s, 3)
       val b = Synth.tiles(s, 3)
         .withColumn("pixels", expr("transform(pixels, p -> (p * 3.0 + 1.0) % 128.0)"))
@@ -1346,7 +1376,6 @@ object SparkEntry {
       // codegen path, booleans cast to 0/1 doubles exactly as numpy does.
       // Map-only after the one tile equi-join — at 100 TB this stays the
       // calc family's join-then-HOF shape.
-      F.ensureRegistered(s)
       val a = Synth.tiles(s, 3)
       val b = Synth.tiles(s, 3)
         .withColumn("pixels", expr("transform(pixels, p -> (p * 3.0 + 1.0) % 128.0)"))
@@ -1356,7 +1385,6 @@ object SparkEntry {
           F.checksum_px(col("pixels")).as("cks"))
     }),
     "q49_pyramid_mode" -> ((s, dir) => {
-      F.ensureRegistered(s)
       Raster.pyramidUp(Synth.tiles(s, 3), method = "mode")
         .select(col("zoom").cast("long").as("zoom"), col("tx"), col("ty"),
           F.checksum_px(col("pixels")).as("cks"))
@@ -1369,7 +1397,6 @@ object SparkEntry {
       // transcendental-free root there is — so the DuckDB oracle's
       // identical expression lands on the identical double. Same one
       // hash-agg regroup per parent cell as every pyramid level.
-      F.ensureRegistered(s)
       Raster.pyramidUp(Synth.tiles(s, 3), method = "rms")
         .select(col("zoom").cast("long").as("zoom"), col("tx"), col("ty"),
           F.checksum_px(col("pixels")).as("cks"))
@@ -1380,7 +1407,6 @@ object SparkEntry {
       // reference's layer-algebra Intersection): cell equi-join prune →
       // pair dedup → exact JTS refine → overlay area. Axis-aligned inputs
       // make the overlay area exact arithmetic → oracle-matched.
-      F.ensureRegistered(s)
       val r = Synth.regionWkt(s, dir).withColumn("g", F.st_geomfromwkt(col("wkt")))
       // adaptive hot-cell salting armed: the synthetic giant boxes
       // (region_id % 97) are exactly the hot-cell case at 100× scale;
@@ -1399,7 +1425,6 @@ object SparkEntry {
       // scalar geometry surface: boundary length (perimeter), envelope
       // area, type, validity, point distance — all exact arithmetic on
       // 2^-12-aligned coords, so doubles compare bit-exactly vs the oracle
-      F.ensureRegistered(s)
       val r = Synth.regionWkt(s, dir).withColumn("g", F.st_geomfromwkt(col("wkt")))
       r.select(col("region_id"),
         F.st_length(call_function("st_boundary", col("g"))).as("perimeter"),
@@ -1417,7 +1442,6 @@ object SparkEntry {
       // center. All coords are 2^-12 dyadic and the center is 2^-13
       // dyadic, so every shoelace product/sum is exact — area_before
       // cancels to exactly 0, area_after is exactly w*h/2
-      F.ensureRegistered(s)
       val g = Synth.boxes(s, dir).select(col("box_id"),
         F.st_geomfromwkt(format_string(
           "POLYGON((%.12f %.12f, %.12f %.12f, %.12f %.12f, %.12f %.12f, %.12f %.12f))",
@@ -1440,7 +1464,6 @@ object SparkEntry {
       // integer centimeters with floor(x*100 + 0.5) — the oracle
       // replicates the arithmetic op-for-op, so only transcendental ULP
       // gaps remain, absorbed by the cm quantum (q39/q19 trick)
-      F.ensureRegistered(s)
       Synth.queryPoints(s, dir)
         // clamp like Utm.lonZone: lon = 180.0 exactly is legal WGS84 and
         // would otherwise compute zone 61 / EPSG 32661, which st_transform
@@ -1448,11 +1471,7 @@ object SparkEntry {
         .withColumn("zone", least(lit(60L), (floor((col("lon") + 180.0) / 6.0) + 1).cast("long")))
         .withColumn("epsg", when(col("lat") >= 0, col("zone") + 32600)
           .otherwise(col("zone") + 32700).cast("int"))
-        .withColumn("u", call_function("st_transform",
-          F.st_point(col("lon"), col("lat")), lit(4326), col("epsg")))
-        .select(col("q_id"), col("epsg"),
-          expr("CAST(floor(st_x(u) * 100.0 + 0.5) AS BIGINT)").as("e_cm"),
-          expr("CAST(floor(st_y(u) * 100.0 + 0.5) AS BIGINT)").as("n_cm"))
+        .transform(forwardCm)
     }),
     "q76_utm_inverse" -> ((s, dir) => {
       // inverse leg of the general-SRS surface (reference ogr/ogrct.cpp ::
@@ -1463,7 +1482,6 @@ object SparkEntry {
       // (OracleHashSql.q76UtmInv) replays the series op-for-op so only
       // transcendental ULPs remain, absorbed by the quantum (q73 trick).
       // Plan is scan → project, shuffle-free, like q73.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("q_id"))
         .withColumn("zone", col("q_id") % 60 + 1)
@@ -1474,11 +1492,7 @@ object SparkEntry {
         .withColumn("__nr", (col("q_id") * 16807) % 9000001)
         .withColumn("n_m", when(col("north"), col("__nr"))
           .otherwise(lit(10000000L) - col("__nr")).cast("double"))
-        .withColumn("u", F.st_transform(
-          F.st_point(col("e_m"), col("n_m")), col("epsg"), lit(4326)))
-        .select(col("q_id"), col("epsg"),
-          expr("CAST(floor(st_x(u) * 1000000.0 + 0.5) AS BIGINT)").as("lon_e6"),
-          expr("CAST(floor(st_y(u) * 1000000.0 + 0.5) AS BIGINT)").as("lat_e6"))
+        .transform(inverseE6)
     }),
     "q80_lcc_forward" -> ((s, dir) => {
       // second general-SRS family (reference ogr/ogrct.cpp :: OGRProj4CT
@@ -1488,15 +1502,10 @@ object SparkEntry {
       // oracle (OracleHashSql.q80Lcc) replays the Snyder chain op-for-op
       // with the engine's derived constants as literals (q73 trick).
       // Plan: scan → project, shuffle-free.
-      F.ensureRegistered(s)
       Synth.queryPoints(s, dir)
         .withColumn("epsg", when(col("q_id") % 2 === 0, lit(2154))
           .otherwise(lit(3978)).cast("int"))
-        .withColumn("u", call_function("st_transform",
-          F.st_point(col("lon"), col("lat")), lit(4326), col("epsg")))
-        .select(col("q_id"), col("epsg"),
-          expr("CAST(floor(st_x(u) * 100.0 + 0.5) AS BIGINT)").as("e_cm"),
-          expr("CAST(floor(st_y(u) * 100.0 + 0.5) AS BIGINT)").as("n_cm"))
+        .transform(forwardCm)
     }),
     "q81_lcc_inverse" -> ((s, dir) => {
       // LCC 2SP inverse leg: deterministic integer-meter easting/northing
@@ -1504,7 +1513,6 @@ object SparkEntry {
       // core/Lcc.inverse — spherical seed + the φ fixed-point iteration
       // unrolled to exactly 5 steps so the oracle can replay the same
       // chain. 1e-6-degree quantization (q76 trick). Shuffle-free.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("q_id"))
         .withColumn("epsg", when(col("q_id") % 2 === 0, lit(2154))
@@ -1515,11 +1523,7 @@ object SparkEntry {
           (((col("q_id") * 48271) % 2000001).cast("double") - 1000000.0))
         .withColumn("n_m", col("fn") +
           (((col("q_id") * 16807) % 3000001).cast("double") - 1500000.0))
-        .withColumn("u", F.st_transform(
-          F.st_point(col("e_m"), col("n_m")), col("epsg"), lit(4326)))
-        .select(col("q_id"), col("epsg"),
-          expr("CAST(floor(st_x(u) * 1000000.0 + 0.5) AS BIGINT)").as("lon_e6"),
-          expr("CAST(floor(st_y(u) * 1000000.0 + 0.5) AS BIGINT)").as("lat_e6"))
+        .transform(inverseE6)
     }),
     "q196_transform_pipeline" -> ((s, dir) => {
       // gdaltransform chained coordinate pipeline (apps/gdaltransform.cpp
@@ -1532,7 +1536,6 @@ object SparkEntry {
       // (exact doubles, the q76 law); cm-quantized output; the oracle
       // replays both legs op-for-op. Plan: scan → project, shuffle-free —
       // at 100 TB this is a map-only projection like every SRS query.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("q_id"))
         .withColumn("zone", col("q_id") % 60 + 1)
@@ -1565,13 +1568,7 @@ object SparkEntry {
       // shuffle-once-then-map shape as every other warp. Integer sources
       // keep min/max/sum exact; checksum per dst tile, kernel column
       // disambiguates.
-      F.ensureRegistered(s)
-      val t = Synth.tiles(s, 3)
-      Seq("min", "max", "sum").map(k =>
-        Raster.regrid(t, 1024, 512, 640, 320, k)
-          .select(lit(k).as("kernel"), col("tx"), col("ty"),
-            F.checksum_px(col("pixels")).as("cks")))
-        .reduce(_ unionByName _)
+      warpKernels(s, "min", "max", "sum")
     }),
     "q209_warp_quantiles" -> ((s, dir) => {
       // gdalwarp -r med / -r q1 / -r q3 (reference:
@@ -1583,18 +1580,11 @@ object SparkEntry {
       // dst-tile regroup as q55/q197; the 8/5 scale yields windows of
       // 1/2/4 centers, so the n=1 passthrough, n=2 lower-pick and n=4
       // interior-pick branches all fire.
-      F.ensureRegistered(s)
-      val t = Synth.tiles(s, 3)
-      Seq("med", "q1", "q3").map(k =>
-        Raster.regrid(t, 1024, 512, 640, 320, k)
-          .select(lit(k).as("kernel"), col("tx"), col("ty"),
-            F.checksum_px(col("pixels")).as("cks")))
-        .reduce(_ unionByName _)
+      warpKernels(s, "med", "q1", "q3")
     }),
 
     // ------------- multimodal resolver ------------------------------------
     "q44_media_mean" -> ((s, dir) => {
-      F.ensureRegistered(s)
       // 1-in-20 doc subset: the synthetic resolver must REGENERATE every
       // referenced 64x64 tile, which at full sf0.1 dominates the query
       val docs = Synth.docs(s, dir)
@@ -1624,7 +1614,6 @@ object SparkEntry {
       // pixel math are exact doubles and the closed-form DDA walk is
       // reproduced bit-for-bit by the DuckDB oracle). mode=add: pixel value
       // = sum of burns of the lines touching it.
-      F.ensureRegistered(s)
       val c = 45.0 / 128.0
       val lines = s.read.parquet(s"$dir/part.parquet")
         .select(col("p_partkey"),
@@ -1643,7 +1632,6 @@ object SparkEntry {
       // (1024x512 px): non-power-of-two 8/5 scale — NOT expressible by the
       // 2x2 pyramid — box kernel with pure-integer center-inclusion tests,
       // so the mean of integer sources is bit-exact vs the DuckDB oracle
-      F.ensureRegistered(s)
       Raster.regrid(Synth.tiles(s, 3), 1024, 512, 640, 320, "average")
         .select(col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
     }),
@@ -1655,14 +1643,12 @@ object SparkEntry {
       // synthetic grid's v==0 pixels (~1/256) are the nodata set, and the
       // 8/5 scale's single-center windows make all-excluded fallbacks
       // actually fire. Integer-exact mean, checksum per dst tile.
-      F.ensureRegistered(s)
       Raster.regrid(Synth.tiles(s, 3), 1024, 512, 640, 320, "average",
         nodata = Some(0.0))
         .select(col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
     }),
     "q58_warp_mode" -> ((s, dir) => {
       // same re-grid with -r mode (majority vote, ties -> smallest value)
-      F.ensureRegistered(s)
       Raster.regrid(Synth.tiles(s, 3), 1024, 512, 640, 320, "mode")
         .select(col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
     }),
@@ -1671,7 +1657,6 @@ object SparkEntry {
       // native prune for post-warp EPSG:3857-tiled data (round 1 had no
       // mercator-side cover). Exact refine unchanged -> identical row set,
       // so the geodetic DuckDB oracle applies verbatim.
-      F.ensureRegistered(s)
       val polys = Synth.regionGeoms(s, dir)
       SpatialJoin.pointInPolygon(polys, "geom",
         Synth.points(s, dir).select("pt_id", "lon", "lat"), "lon", "lat",
@@ -1693,7 +1678,6 @@ object SparkEntry {
       // boxes on the integer zoom-3 pixel grid (dyadic 45/128-degree
       // coords → exact), mask = scanline burn, outside pixels zeroed,
       // untouched tiles dropped (nodata analog)
-      F.ensureRegistered(s)
       Raster.cutline(Synth.tiles(s, 3), cutBoxes(s), "geom", zoom = 3)
         .select(col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
     }),
@@ -1703,7 +1687,6 @@ object SparkEntry {
       // are exact integer d²; the milli-weight floor is over IEEE-exact
       // sqrt arithmetic the oracle replicates op-for-op, so the per-tile
       // fixed-point checksum is bit-exact
-      F.ensureRegistered(s)
       Raster.cutlineBlend(Synth.tiles(s, 3), cutBoxes(s), "geom", zoom = 3,
           w = 64, h = 64, nxTiles = 16, nyTiles = 8, blendPx = 6)
         .groupBy("tx", "ty")
@@ -1716,13 +1699,8 @@ object SparkEntry {
       // scale=10 (not the operator's default 1000) keeps per-pixel values
       // <= 7650 so the checksum's 32-bit masked accumulator never wraps
       // (the SQL oracle sums unmasked)
-      F.ensureRegistered(s)
       val pan = Synth.tiles(s, 3)
-      val ms = (1 to 3).map { b =>
-        Synth.tiles(s, 2).withColumn("band", lit(b))
-          .withColumn("pixels", expr(s"transform(pixels, v -> (v * $b + $b * 17) % 256)"))
-      }.reduce(_ unionByName _)
-      Raster.pansharpen(pan, ms, nBands = 3, scale = 10)
+      Raster.pansharpen(pan, Synth.panBands(s), nBands = 3, scale = 10)
         .select(col("band"), col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
     }),
     "q137_pansharpen_weights" -> ((s, dir) => {
@@ -1730,13 +1708,8 @@ object SparkEntry {
       // q62 corpus with pseudo_pan = (ms1 + 2·ms2 + ms3)/4 — ratio
       // ms·pan·4·scale div (ms1 + 2·ms2 + ms3) in pure BIGINT. Max pixel
       // value pan·40 = 10200 keeps the checksum accumulator < 2^32.
-      F.ensureRegistered(s)
       val pan = Synth.tiles(s, 3)
-      val ms = (1 to 3).map { b =>
-        Synth.tiles(s, 2).withColumn("band", lit(b))
-          .withColumn("pixels", expr(s"transform(pixels, v -> (v * $b + $b * 17) % 256)"))
-      }.reduce(_ unionByName _)
-      Raster.pansharpen(pan, ms, nBands = 3, scale = 10, weights = Seq(1L, 2L, 1L))
+      Raster.pansharpen(pan, Synth.panBands(s), nBands = 3, scale = 10, weights = Seq(1L, 2L, 1L))
         .select(col("band"), col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
     }),
     "q63_mediancut" -> ((s, dir) => {
@@ -1747,13 +1720,7 @@ object SparkEntry {
       // index = rank, reproduced bit-for-bit by the oracle. (The general
       // path — fewer palette entries than colors, 5-bit bins — is pinned
       // in RasterSpec.)
-      F.ensureRegistered(s)
-      val ms = Seq((1, "v"), (2, "(v * 2 + 5) % 256"), (3, "(v * 7 + 11) % 256"))
-        .map { case (b, e) =>
-          Synth.tiles(s, 3).withColumn("band", lit(b))
-            .withColumn("pixels", expr(s"transform(pixels, v -> $e)"))
-        }.reduce(_ unionByName _)
-      val (mapped, _) = Raster.rgb2pct(ms, paletteSize = 256, quantBits = 8,
+      val (mapped, _) = Raster.rgb2pct(Synth.rgbBands(s, 3), paletteSize = 256, quantBits = 8,
         allowLargePalette = true) // corpus has exactly 256 colors by construction
       mapped.select(col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
     }),
@@ -1785,14 +1752,7 @@ object SparkEntry {
       // the DuckDB oracle. Plan: point-side cell_disk(2) explode -> exact
       // radius filter -> one partial+final hash aggregate per cell; no
       // shuffle of the grid, no per-cell point scan.
-      val S = 1L << 34
-      gridCandidates(s, dir)
-        .withColumn("w", expr(s"${S}L div greatest(d2, 1L)"))
-        .groupBy("tx", "ty")
-        .agg(count(lit(1)).as("n"),
-          sum(col("v") * col("w")).as("num"), sum(col("w")).as("den"))
-        .select(col("tx"), col("ty"), col("n"),
-          expr("(num * 1000L) div den").as("idw_milli"))
+      gridIdw(s, dir, s"${1L << 34}L div greatest(d2, 1L)")
     }),
     "q141_grid_idw_smoothing" -> ((s, dir) => {
       // gdalgrid invdist:power=2:smoothing=2 (alg/gdalgrid.cpp adds
@@ -1800,14 +1760,7 @@ object SparkEntry {
       // — the smoothing floor also removes the d2=0 snap entirely. Same
       // one-agg plan as q56, different weight law; every weight differs
       // from q56's wherever d2 != 4194304 - greatest(d2,1).
-      val S = 1L << 34
-      gridCandidates(s, dir)
-        .withColumn("w", expr(s"${S}L div (d2 + 4194304L)"))
-        .groupBy("tx", "ty")
-        .agg(count(lit(1)).as("n"),
-          sum(col("v") * col("w")).as("num"), sum(col("w")).as("den"))
-        .select(col("tx"), col("ty"), col("n"),
-          expr("(num * 1000L) div den").as("idw_milli"))
+      gridIdw(s, dir, s"${1L << 34}L div (d2 + 4194304L)")
     }),
     "q150_grid_idw_p1" -> ((s, dir) => {
       // gdalgrid invdist:power=1 — weight 1/d instead of 1/d2: the
@@ -1816,22 +1769,14 @@ object SparkEntry {
       // d2 <= 2^26 keeps sqrt(m^2-1) a full 6e-5 below the next integer
       // (IEEE sqrt is correctly rounded, so floor can never flip).
       // d2 = 0 snaps to 1 like q56.
-      val S1 = 1L << 30
-      gridCandidates(s, dir)
-        .withColumn("w", expr(
-          s"${S1}L div greatest(CAST(floor(sqrt(CAST(d2 AS DOUBLE))) AS BIGINT), 1L)"))
-        .groupBy("tx", "ty")
-        .agg(count(lit(1)).as("n"),
-          sum(col("v") * col("w")).as("num"), sum(col("w")).as("den"))
-        .select(col("tx"), col("ty"), col("n"),
-          expr("(num * 1000L) div den").as("idw_milli"))
+      gridIdw(s, dir,
+        s"${1L << 30}L div greatest(CAST(floor(sqrt(CAST(d2 AS DOUBLE))) AS BIGINT), 1L)")
     }),
     "q66_color_relief" -> ((s, dir) => {
       // gdaldem color-relief (the one gdaldem mode outside the focal
       // family): 5-entry elevation->RGB ramp folded into a codegen'd CASE
       // chain, integer round-half-up interpolation with sign/|dc| baked
       // per segment so truncating div matches DuckDB's // exactly
-      F.ensureRegistered(s)
       val ramp = Seq((0, 0, 0, 128), (64, 0, 128, 0), (128, 255, 255, 0),
         (192, 128, 64, 0), (255, 255, 255, 255))
       Raster.colorRelief(Synth.tiles(s, 3), ramp)
@@ -1845,7 +1790,6 @@ object SparkEntry {
       // (hue/saturation = channel ratios, preserved under uniform scale;
       // see Raster.hsvMerge). ONE band-regroup agg + ONE tile equi-join,
       // per-band checksums graded.
-      F.ensureRegistered(s)
       val ramp = Seq((0, 0, 0, 128), (64, 0, 128, 0), (128, 255, 255, 0),
         (192, 128, 64, 0), (255, 255, 255, 255))
       val rgb = Raster.colorRelief(Synth.tiles(s, 3), ramp)
@@ -1858,13 +1802,7 @@ object SparkEntry {
       // pct2rgb o rgb2pct round-trip on the q63 corpus (256 distinct
       // colors at quantBits=8/paletteSize=256 -> exact inverse): per-band
       // checksums must equal the ORIGINAL multispectral bands'
-      F.ensureRegistered(s)
-      val ms = Seq((1, "v"), (2, "(v * 2 + 5) % 256"), (3, "(v * 7 + 11) % 256"))
-        .map { case (b, e) =>
-          Synth.tiles(s, 3).withColumn("band", lit(b))
-            .withColumn("pixels", expr(s"transform(pixels, v -> $e)"))
-        }.reduce(_ unionByName _)
-      val (mapped, pal) = Raster.rgb2pct(ms, paletteSize = 256, quantBits = 8,
+      val (mapped, pal) = Raster.rgb2pct(Synth.rgbBands(s, 3), paletteSize = 256, quantBits = 8,
         allowLargePalette = true) // corpus has exactly 256 colors by construction
       Raster.pct2rgb(mapped, pal)
         .select(col("band"), col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
@@ -1875,7 +1813,6 @@ object SparkEntry {
       // over 368640x184320 units -> gx = ix div 360); the engine goes
       // through the real tile equi-join + element_at, the oracle through
       // the closed-form pixel function
-      F.ensureRegistered(s)
       val qp = Synth.queryPoints(s, dir)
         .withColumn("ix", ((col("lon") + 180.0) * 1024).cast("long"))
         .withColumn("iy", ((lit(90.0) - col("lat")) * 1024).cast("long"))
@@ -1890,7 +1827,6 @@ object SparkEntry {
       // REAL format decode (S3): zoom-3 tiles -> JDK PNG encode (binary
       // column, actual DEFLATE) -> decode -> checksum; lossless, so the
       // oracle checksums the ORIGINAL closed-form pixels
-      F.ensureRegistered(s)
       Media.decodePng(Media.encodePng(Synth.tiles(s, 3)))
         .select(col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
     }),
@@ -1898,7 +1834,6 @@ object SparkEntry {
       // GeoTIFF-shaped S3 path (reference frmts/gtiff/geotiff.cpp): same
       // round-trip as q68 but through the JDK's baseline TIFF writer —
       // a second real container format, decoded by magic-byte sniffing
-      F.ensureRegistered(s)
       Media.decodeTiff(Media.encodeTiff(Synth.tiles(s, 3)))
         .select(col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
     }),
@@ -1910,7 +1845,6 @@ object SparkEntry {
       // exactly and per-pixel |err| stays within the DCT-rounding bound
       // (measured max 1 on this corpus; bound 2 carries 2x margin). The
       // original pixels ride along as a column — no join, shuffle-free.
-      F.ensureRegistered(s)
       val withOrig = Synth.tiles(s, 3).withColumn("orig", col("pixels"))
       Media.decodeJpeg(Media.encodeJpeg(withOrig))
         .select(col("tx"), col("ty"),
@@ -1926,7 +1860,6 @@ object SparkEntry {
       // (pixels (7p+31)%256, nodata 50, LUT 0->0, 128->64, 255->255).
       // Per-pixel priority coalesce; background 0 where both nodata.
       // Pure arithmetic end to end, so the oracle replica is bit-exact.
-      F.ensureRegistered(s)
       val base = Synth.tiles(s, 3)
       val s1 = base.withColumn("src_id", lit(1))
       val s2 = base.where(col("tx") % 2 === 0).withColumn("src_id", lit(2))
@@ -1950,7 +1883,6 @@ object SparkEntry {
       // nearest-samples the zoom-3 source grid via Long floorDiv. The
       // oracle solves the SAME Cramer system from the GCP literals in SQL
       // and replays the integer sampling bit-for-bit.
-      F.ensureRegistered(s)
       Raster.warpGcpNear(Synth.tiles(s, 3),
         Seq((0L, 0L, 7L, 11L), (64L, 0L, 87L, 27L), (0L, 64L, -9L, 75L)),
         srcW = 1024, srcH = 512, dstW = 1024, dstH = 512)
@@ -1966,7 +1898,6 @@ object SparkEntry {
       // broadcasts into warpPointNear's dst-driven routing, and the
       // oracle replays the SAME printed op sequence (pure +,· — bit
       // exact, no quantization needed) + floor sampling.
-      F.ensureRegistered(s)
       Raster.warpPolyNear(Synth.tiles(s, 3), graft.core.Gcp.demo2,
         srcW = 1024, srcH = 512, dstW = 1024, dstH = 512)
         .select(col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
@@ -2017,7 +1948,6 @@ object SparkEntry {
       // At 100-TB scale a pathological mega-stratum would sort wide —
       // exact allocation requires it; the approximate alternative
       // (per-row Bernoulli on the hash) is q145's bucket split.
-      F.ensureRegistered(s)
       val w = Window.partitionBy("lang", "source").orderBy(col("fp"), col("doc_id"))
       val wc = Window.partitionBy("lang", "source")
       s.read.parquet(s"$dir/documents.parquet")
@@ -2084,7 +2014,6 @@ object SparkEntry {
       // of one video are one group — no global sort; at 100 TB each
       // video's frames hash to one task and the window is per-group
       // sort-free beyond its own frames). Output: per-video cut census.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("vid"))
         .withColumn("bin", expr(
@@ -2118,17 +2047,7 @@ object SparkEntry {
       // computes the peak-normalized energy in exact integers
       // (amp -> abs(amp)*127 div peak). Pure per-row HOFs: map-only at
       // 100 TB, no shuffle until the driver's own output sort.
-      F.ensureRegistered(s)
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("aid"))
-        .withColumn("bin", expr(
-          """CAST(format_string('AUD:%04d:%01d:%01d:',
-             64 + aid % 129, aid % 7, aid % 5) AS BINARY)"""))
-        .select(col("aid"), col("bin")) // widths live ONLY in the bytes
-        .withColumn("hdr", expr("CAST(bin AS STRING)"))
-        .withColumn("n", expr("CAST(substring(hdr, 5, 4) AS INT)"))
-        .withColumn("ld", expr("CAST(substring(hdr, 10, 1) AS INT)"))
-        .withColumn("tl", expr("CAST(substring(hdr, 12, 1) AS INT)"))
+      audioHeaders(s, dir)
         .withColumn("smp", expr(
           """transform(sequence(0, n - 1), i ->
                CASE WHEN i < ld OR i >= n - tl THEN 0
@@ -2158,7 +2077,6 @@ object SparkEntry {
       // by a codegen'd zip_with — at 100 TB the two rasters are
       // co-partitioned by tile key and pixels never shuffle except
       // inside their own tile row.
-      F.ensureRegistered(s)
       val golden = graft.synth.Synth.tiles(s, 2)
       val perturbed = graft.synth.Synth.tiles(s, 2).withColumn("pixels",
         expr("""transform(pixels, (x, i) ->
@@ -2190,7 +2108,6 @@ object SparkEntry {
       // sum (4096-row result, broadcast into the per-doc join by AQE);
       // the only full-width shuffle carries (doc_id, bucket, tf) longs —
       // text never shuffles, the vocabulary never materializes.
-      F.ensureRegistered(s)
       val toks = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("source"), col("lang"), explode(
           split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")).as("term"))
@@ -2239,7 +2156,6 @@ object SparkEntry {
       // census of verbatim cross-doc substrings. A deterministic slogan
       // is planted on doc_id % 10 = 0 docs so the repeated branch
       // genuinely fires beyond natural corpus repeats.
-      F.ensureRegistered(s)
       val d = s.read.parquet(s"$dir/documents.parquet")
         .withColumn("norm", expr(
           """concat(trim(lower(regexp_replace(text, '\\s+', ' '))),
@@ -2259,7 +2175,6 @@ object SparkEntry {
       // slogan docs share spans 0-1 and only doc 0 keeps them). 100-TB
       // shape: see Dedup.substrDedup — span hashes shuffle as 16 B rows,
       // text is rebuilt map-side from the removed-index set.
-      F.ensureRegistered(s)
       val d = s.read.parquet(s"$dir/documents.parquet")
         .withColumn("norm", expr(
           """concat(CASE WHEN doc_id % 10 = 0
@@ -2275,13 +2190,7 @@ object SparkEntry {
       // rows; the oracle rebuilds the ENTIRE block text and the
       // vertices. Branches: POINT, PLINE, PLINE MULTIPLE (two
       // sections), REGION with a HOLE (two rings). Shuffle-free.
-      F.ensureRegistered(s)
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 4.0D"))
-        .withColumn("ay", expr("CAST((q_id * 104729) % 512 AS DOUBLE)"))
-        .withColumn("w", expr("1.0D + CAST(q_id % 7 AS DOUBLE) / 2.0D"))
-        .withColumn("h", expr("2.0D + CAST(q_id % 5 AS DOUBLE)"))
+      Synth.shapeSeeds(s, dir)
         .withColumn("wkt", expr(
           """CASE WHEN q_id % 4 = 0 THEN format_string('POINT(%s %s)', ax, ay)
              WHEN q_id % 4 = 1 THEN format_string('LINESTRING(%s %s, %s %s, %s %s)',
@@ -2294,13 +2203,7 @@ object SparkEntry {
                ax + w, ay + h, ax + 2.0D*w, ay + h, ax + 2.0D*w, ay + 2.0D*h,
                ax + w, ay + 2.0D*h, ax + w, ay + h)
              END"""))
-        .withColumn("mif", call_function("st_asmif",
-          call_function("st_geomfromwkt", col("wkt"))))
-        .select(col("q_id"), col("mif"),
-          posexplode(call_function("st_points",
-            call_function("st_geomfrommif", col("mif")))).as(Seq("seq", "p")))
-        .select(col("q_id"), col("mif"), col("seq").cast("long").as("seq"),
-          col("p.x").as("x"), col("p.y").as("y"))
+        .transform(textRoundTrip("mif", "mif"))
     }),
     "q203_dxf_driver" -> ((s, dir) => {
       // OGR DXF driver analog (ogr/ogrsf_frmts/dxf): eighth text format
@@ -2311,13 +2214,7 @@ object SparkEntry {
       // Branches: POINT, LINE (2-pt special form), LWPOLYLINE open
       // (4 vertices), LWPOLYLINE closed (polygon shell, closing vertex
       // dropped on write and restored on parse). Shuffle-free.
-      F.ensureRegistered(s)
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 4.0D"))
-        .withColumn("ay", expr("CAST((q_id * 104729) % 512 AS DOUBLE)"))
-        .withColumn("w", expr("1.0D + CAST(q_id % 7 AS DOUBLE) / 2.0D"))
-        .withColumn("h", expr("2.0D + CAST(q_id % 5 AS DOUBLE)"))
+      Synth.shapeSeeds(s, dir)
         .withColumn("wkt", expr(
           """CASE WHEN q_id % 4 = 0 THEN format_string('POINT(%s %s)', ax, ay)
              WHEN q_id % 4 = 1 THEN format_string('LINESTRING(%s %s, %s %s)',
@@ -2327,13 +2224,7 @@ object SparkEntry {
              ELSE format_string('POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))',
                ax, ay, ax + 4.0D*w, ay, ax + 4.0D*w, ay + 4.0D*h, ax, ay + 4.0D*h, ax, ay)
              END"""))
-        .withColumn("dxf", call_function("st_asdxf",
-          call_function("st_geomfromwkt", col("wkt"))))
-        .select(col("q_id"), col("dxf"),
-          posexplode(call_function("st_points",
-            call_function("st_geomfromdxf", col("dxf")))).as(Seq("seq", "p")))
-        .select(col("q_id"), col("dxf"), col("seq").cast("long").as("seq"),
-          col("p.x").as("x"), col("p.y").as("y"))
+        .transform(textRoundTrip("dxf", "dxf"))
     }),
     "q222_t5_span_corrupt" -> ((s, dir) => {
       // T5 span-corruption preprocessing (Raffel et al. 2020 §3.1.4:
@@ -2349,7 +2240,6 @@ object SparkEntry {
       // exact denoising pair, not just counts. Map-only at any scale;
       // the token array is bound once per row (evaluate-once HOF
       // discipline), never re-split per lambda call.
-      F.ensureRegistered(s)
       val n = "size(tk)"
       val c = s"((15 * $n) div 100)"
       val nsp = s"greatest(1, $c div 3)"
@@ -2411,7 +2301,6 @@ object SparkEntry {
       // exactly once per document. Output rows are bit-identical: every
       // operation stays BIGINT and empty/NULL-text docs fall out as
       // dot=0/n_dims=0 exactly like the old left-join coalesce.
-      F.ensureRegistered(s)
       graft.core.Par.fan(s.read.parquet(s"$dir/documents.parquet"))
         .select(col("doc_id"), explode(q220HashArr).as("hs"))
         .select(col("doc_id"),
@@ -2429,7 +2318,6 @@ object SparkEntry {
       // by hash64 mod 32, sign from hash bit 5, doc vector = signed tf
       // sums. 100-TB shape: one (doc,term) tf agg + one (doc,dim) agg —
       // the vocabulary NEVER materializes and there is no model state.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), explode(
           split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")).as("term"))
@@ -2455,7 +2343,6 @@ object SparkEntry {
       // line array are bound via transform(array(e), v -> …)[1] so they
       // evaluate once per row instead of once per lambda call after
       // CollapseProject inlines them into HOF bodies.
-      F.ensureRegistered(s)
       Synth.tiles(s, 2)
         .withColumn("aai", expr(
           """element_at(transform(array(pixels), px ->
@@ -2486,7 +2373,6 @@ object SparkEntry {
       // encode → REAL codec decode → 56-bit dHash (exact integer block
       // means) → pigeonhole-banded hamming pairs. The codec legs are
       // lossless, so the oracle replays the hash from the pixel law.
-      F.ensureRegistered(s)
       val dec = Media.decodePng(Media.encodePng(Synth.tiles(s, 3))).drop("png")
       Media.dhashPairs(dec, maxHamming = 4)
     }),
@@ -2499,7 +2385,6 @@ object SparkEntry {
       // oracle-replayable stand-in for the learned patch embedding).
       // Map-only; the decode UDF runs ONCE per image (evaluate-once HOF
       // binding — see Media.patchify), 16 patch rows explode after.
-      F.ensureRegistered(s)
       Media.patchify(
         Media.decodePng(Media.encodePng(Synth.tiles(s, 3))).drop("png"))
     }),
@@ -2565,7 +2450,6 @@ object SparkEntry {
       // deterministic fractional epoch via (doc_id·7919) % 1000. 100-TB
       // shape: ONE lang agg (collect bounded by #languages), driver
       // waterfilling over L rows, broadcast join back, map-side copies.
-      F.ensureRegistered(s)
       import s.implicits._
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val sizes = docs.groupBy("lang").agg(sum(col("n_chars")).as("sz"))
@@ -2612,15 +2496,7 @@ object SparkEntry {
       // near-dup-RICH derived corpus (each vector + a perturbed twin at
       // cos ≈ 0.9999) so the drop branch genuinely fires; the graded
       // surface is the per-vector (cluster, kept) verdict.
-      F.ensureRegistered(s)
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val base = e.select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      val pert = e.select((col("vec_id") + lit(10000000L)).as("vec_id"),
-        expr("transform(sequence(1, 64), i -> " +
-          "(floor(CAST(element_at(embedding, i) AS DOUBLE) * 1000.0) " +
-          "+ ((vec_id * 31 + i) % 13) - 6) / 1000.0)").as("v"))
-      Ann.semDedup(base.unionByName(pert), "vec_id", "v",
+      Ann.semDedup(Synth.twinEmbeddings(s, dir), "vec_id", "v",
         kCells = 8, iters = 2, minCosNum = 4L, minCosDen = 5L)
     }),
     "q181_pq_quantize" -> ((s, dir) =>
@@ -2660,7 +2536,6 @@ object SparkEntry {
       // natural cross-doc dups fire beside the structural ones. Lines
       // are plain 5-word chunks (no decoration), spans are hashed
       // map-side; keeper = lexicographic min (doc_id, start).
-      F.ensureRegistered(s)
       val base = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"),
           split(trim(regexp_replace(col("text"), "\\s+", " ")), " ").as("w"))
@@ -2715,7 +2590,6 @@ object SparkEntry {
       // (integer re²+im², correctly-rounded IEEE sqrt, same double on
       // both engines); PHASE is mrad-quantized with the boundary census
       // pinned in CoreSpec (only 256 distinct complex values occur).
-      F.ensureRegistered(s)
       Synth.tiles(s, 3)
         .withColumn("re", expr("transform(pixels, v -> CAST(v AS BIGINT) - 128L)"))
         .withColumn("im", expr("transform(pixels, v -> (CAST(v AS BIGINT) * 7L + 31L) % 256L - 128L)"))
@@ -2738,7 +2612,6 @@ object SparkEntry {
       // recursive CTE. q84 keeps the exact path — the pair is the
       // reference's own exact-vs-approx contract, and the bench delta
       // is the approx win measured on identical inputs.
-      F.ensureRegistered(s)
       Raster.warpTpsApproxNear(Synth.tiles(s, 3), graft.core.Tps.demo, 0.25,
         srcW = 1024, srcH = 512, dstW = 1024, dstH = 512)
         .select(col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
@@ -2754,7 +2627,6 @@ object SparkEntry {
       // aggregate. All integer math (positions scaled by 32²) — the
       // oracle regenerates the grid from the same templates and replays
       // scatter, snap and checksum bit-for-bit.
-      F.ensureRegistered(s)
       Raster.geolocBackmapWarp(Synth.tiles(s, 3),
         dgxSql = "((5 * GI + 11 * GJ) % 7) - 3",
         dgySql = "((3 * GI + 13 * GJ) % 7) - 3",
@@ -2769,7 +2641,6 @@ object SparkEntry {
       // denominator >= 0.99) and floor-samples the zoom-3 source grid.
       // The transform is pure +,*,/ in a fixed order, so the oracle
       // replays it bit-for-bit — no quantization margin needed.
-      F.ensureRegistered(s)
       Raster.warpRpcNear(Synth.tiles(s, 3), graft.core.Rpc.demo,
         srcW = 1024, srcH = 512, dstW = 1024, dstH = 512,
         lon0 = -180.0, lonStep = 0.3515625, lat0 = 90.0, latStep = -0.3515625)
@@ -2787,7 +2658,6 @@ object SparkEntry {
       // — integer heights the oracle replays op-for-op. The height jumps
       // at DEM cell edges move samp/line well under 1 px for the demo
       // H-coefficients, so the router's 4 px pad holds (require() loud).
-      F.ensureRegistered(s)
       val dem: (Double, Double) => Double = (lon, lat) => {
         val cx = math.floor((lon + 180.0) / 2.8125).toLong
         val cy = math.floor((90.0 - lat) / 2.8125).toLong
@@ -2804,7 +2674,6 @@ object SparkEntry {
       // st_distance_sphere, mm-quantized — the oracle replays the
       // haversine op-for-op (sin/cos/asin ULPs absorbed by the mm
       // quantum). Shuffle-free scan → project.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("q_id"))
         .withColumn("lon1", expr("CAST((q_id * 7919) % 368640 AS DOUBLE) / 1024.0 - 180.0"))
@@ -2825,7 +2694,6 @@ object SparkEntry {
       // round-trip is exact (q92 precedent) — the oracle replays the
       // generating arithmetic bit-for-bit, no quantization. Shuffle-free
       // scan → project → generate ×2.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("q_id"))
         .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 64.0"))
@@ -2858,7 +2726,6 @@ object SparkEntry {
       // three JDK codecs emit their signatures AND that identification is
       // container-only (no decode). Oracle: the closed-form tx % 3 census
       // of the zoom-3 tile grid.
-      F.ensureRegistered(s)
       val t = Synth.tiles(s, 3)
       val png = Media.encodePng(t.where(col("tx") % 3 === 0))
         .select(col("png").as("media"))
@@ -2877,7 +2744,6 @@ object SparkEntry {
       // lives on the 1/16 lattice offset so no edge can coincide with
       // 180 exactly; every part is a full-dimensional rectangle whose
       // envelope and area are closed-form, NO quantization. Shuffle-free.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("q_id"))
         .withColumn("ax", expr("170.0625D + CAST((q_id * 7919) % 160 AS DOUBLE) / 8.0D"))
@@ -2906,15 +2772,7 @@ object SparkEntry {
       // transcendentals — so the oracle replays every double BIT-exactly
       // with no quantization (LineRefOps' pinned op order). Shuffle-free
       // scan → project → generate.
-      F.ensureRegistered(s)
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 64.0"))
-        .withColumn("ay", expr("CAST((q_id * 104729) % 1024 AS DOUBLE) / 64.0"))
-        .withColumn("bx", expr("ax + 1.0 + CAST(q_id % 13 AS DOUBLE) / 2.0"))
-        .withColumn("by", expr("ay + CAST(q_id % 7 AS DOUBLE) / 4.0"))
-        .withColumn("cx", expr("bx - CAST(q_id % 5 AS DOUBLE) / 2.0"))
-        .withColumn("cy", expr("by + 2.0 + CAST(q_id % 11 AS DOUBLE) / 8.0"))
+      Synth.triangles(s, dir)
         .withColumn("step", expr("0.5 + CAST(q_id % 4 AS DOUBLE) / 8.0"))
         .withColumn("wkt", format_string("LINESTRING(%s %s, %s %s, %s %s)",
           col("ax"), col("ay"), col("bx"), col("by"), col("cx"), col("cy")))
@@ -2940,15 +2798,7 @@ object SparkEntry {
       // inside the window — both the within-one-segment and the
       // spanning cases fire on this corpus, and the oracle rebuilds the
       // same vertex list closed-form. NO quantization. Shuffle-free.
-      F.ensureRegistered(s)
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 64.0"))
-        .withColumn("ay", expr("CAST((q_id * 104729) % 1024 AS DOUBLE) / 64.0"))
-        .withColumn("bx", expr("ax + 1.0 + CAST(q_id % 13 AS DOUBLE) / 2.0"))
-        .withColumn("by", expr("ay + CAST(q_id % 7 AS DOUBLE) / 4.0"))
-        .withColumn("cx", expr("bx - CAST(q_id % 5 AS DOUBLE) / 2.0"))
-        .withColumn("cy", expr("by + 2.0 + CAST(q_id % 11 AS DOUBLE) / 8.0"))
+      Synth.triangles(s, dir)
         .withColumn("wkt", format_string("LINESTRING(%s %s, %s %s, %s %s)",
           col("ax"), col("ay"), col("bx"), col("by"), col("cx"), col("cy")))
         .withColumn("g", call_function("st_geomfromwkt", col("wkt")))
@@ -2970,29 +2820,9 @@ object SparkEntry {
       // UNQUANTIZED. The q_id%4==3 branch routes a MULTILINESTRING
       // through <MultiGeometry> and the parser's homogeneous-promotion.
       // Shuffle-free scan → project → generate.
-      F.ensureRegistered(s)
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 4.0D"))
-        .withColumn("ay", expr("CAST((q_id * 104729) % 512 AS DOUBLE)"))
-        .withColumn("w", expr("1.0D + CAST(q_id % 7 AS DOUBLE) / 2.0D"))
-        .withColumn("h", expr("2.0D + CAST(q_id % 5 AS DOUBLE)"))
-        .withColumn("wkt", expr(
-          """CASE WHEN q_id % 4 = 0 THEN format_string('POINT(%s %s)', ax, ay)
-             WHEN q_id % 4 = 1 THEN format_string('LINESTRING(%s %s, %s %s, %s %s)',
-               ax, ay, ax + w, ay + h, ax, ay + 2.0D * h)
-             WHEN q_id % 4 = 2 THEN format_string('POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))',
-               ax, ay, ax + w, ay, ax + w, ay + h, ax, ay + h, ax, ay)
-             ELSE format_string('MULTILINESTRING((%s %s, %s %s), (%s %s, %s %s))',
-               ax, ay, ax + w, ay + h, ax, ay + h, ax + w, ay)
-             END"""))
-        .withColumn("kml", call_function("st_askml",
-          call_function("st_geomfromwkt", col("wkt"))))
-        .select(col("q_id"), col("kml"),
-          posexplode(call_function("st_points",
-            call_function("st_geomfromkml", col("kml")))).as(Seq("seq", "p")))
-        .select(col("q_id"), col("kml"), col("seq").cast("long").as("seq"),
-          col("p.x").as("x"), col("p.y").as("y"))
+      Synth.shapeSeeds(s, dir)
+        .withColumn("wkt", expr(shapeWkt4))
+        .transform(textRoundTrip("kml", "kml"))
     }),
     "q175_gpx" -> ((s, dir) => {
       // OGR GPX driver analog (ogr/ogrsf_frmts/gpx/ogrgpxlayer.cpp):
@@ -3006,13 +2836,7 @@ object SparkEntry {
       // bit-exact UNQUANTIZED. Branches: waypoint, single-segment track,
       // TWO-segment track (MultiLineString ↔ multiple <trkseg>), and
       // MultiPoint ↔ a <gpx> waypoint layer. Shuffle-free.
-      F.ensureRegistered(s)
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 4.0D"))
-        .withColumn("ay", expr("CAST((q_id * 104729) % 512 AS DOUBLE)"))
-        .withColumn("w", expr("1.0D + CAST(q_id % 7 AS DOUBLE) / 2.0D"))
-        .withColumn("h", expr("2.0D + CAST(q_id % 5 AS DOUBLE)"))
+      Synth.shapeSeeds(s, dir)
         .withColumn("wkt", expr(
           """CASE WHEN q_id % 4 = 0 THEN format_string('POINT(%s %s)', ax, ay)
              WHEN q_id % 4 = 1 THEN format_string('LINESTRING(%s %s, %s %s, %s %s)',
@@ -3022,13 +2846,7 @@ object SparkEntry {
              ELSE format_string('MULTIPOINT(%s %s, %s %s)',
                ax, ay, ax + w, ay + h)
              END"""))
-        .withColumn("gpx", call_function("st_asgpx",
-          call_function("st_geomfromwkt", col("wkt"))))
-        .select(col("q_id"), col("gpx"),
-          posexplode(call_function("st_points",
-            call_function("st_geomfromgpx", col("gpx")))).as(Seq("seq", "p")))
-        .select(col("q_id"), col("gpx"), col("seq").cast("long").as("seq"),
-          col("p.x").as("x"), col("p.y").as("y"))
+        .transform(textRoundTrip("gpx", "gpx"))
     }),
     "q147_tfidf_topk" -> ((s, dir) => {
       // TF-IDF top-3 terms per document — the classic two-agg + window
@@ -3037,7 +2855,6 @@ object SparkEntry {
       // a (score desc, term asc) row_number top-k. 100-TB shape: two hash
       // aggs on (doc,term)/(term) plus one window by doc — no driver
       // loop except the scalar corpus count.
-      F.ensureRegistered(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val n = docs.count()
       val terms = docs
@@ -3067,7 +2884,6 @@ object SparkEntry {
       // just the span arithmetic. Map-only: split + bounded
       // sequence-explode per doc, text never shuffles — at 100 TB this
       // is a pure scan→generate pass.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/documents.parquet")
         .withColumn("toks", split(trim(lower(regexp_replace(col("text"), "\\s+", " "))), " "))
         .withColumn("n", size(col("toks")))
@@ -3091,7 +2907,6 @@ object SparkEntry {
       // broadcasts back against the token stream, one (doc) agg scores —
       // the q147/q202 model-build pattern; the corpus text never joins
       // anything bigger than the 256-row vocab.
-      F.ensureRegistered(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val terms = docs
         .select(col("doc_id"), explode(
@@ -3122,7 +2937,6 @@ object SparkEntry {
       // hash agg (vocab ≪ corpus), pairs explode off the DICTIONARY (not
       // the corpus), one more agg, then TakeOrderedAndProject for the
       // top-32 cut — corpus text is touched exactly once, map-side.
-      F.ensureRegistered(s)
       val words = s.read.parquet(s"$dir/documents.parquet")
         .select(explode(
           split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")).as("term"))
@@ -3148,7 +2962,6 @@ object SparkEntry {
       // map-side replace() chain whose left-to-right non-overlapping
       // semantics ARE the greedy single-pass merge law — the oracle
       // unrolls the six levels and replays replace() op-for-op.
-      F.ensureRegistered(s)
       import s.implicits._
       val rules = Bpe.train(s.read.parquet(s"$dir/documents.parquet"), 6)
       rules.zipWithIndex
@@ -3167,7 +2980,6 @@ object SparkEntry {
       // corpus encodes by broadcasting the ENCODED DICTIONARY against the
       // token stream (text joins nothing bigger than the vocab) and one
       // per-doc agg assembles the stream.
-      F.ensureRegistered(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       // OPTIMIZATION r6: ONE dict build shared by training and encoding
       // (the old train/encodedDict pair each tokenized the corpus and
@@ -3199,7 +3011,6 @@ object SparkEntry {
       // among contained points, ties to the SMALLEST class via the
       // packed max_by key cnt*100 - cls (cls < 100). Same PIP plan as
       // q15 + one extra keyed agg.
-      F.ensureRegistered(s)
       val polys = Synth.regionGeoms(s, dir)
       // project-before-probe (guide §2.3): only l_quantity feeds the
       // majority agg — drop the unused point columns before the probe
@@ -3224,7 +3035,6 @@ object SparkEntry {
       // the documented decodeStub class; no video codec exists in-JVM).
       // A wrong byte-level parse changes row counts AND features. The
       // oracle replays header arithmetic + the rolling-hash feature.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("vid"))
         .withColumn("bin", expr(
@@ -3251,7 +3061,6 @@ object SparkEntry {
       // WINDOW features — energy = Σ s², peak = max|s| — in exact
       // integers via sequence/aggregate/transform HOFs. Short final
       // windows are real (n % 16 != 0 for most rows).
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("aid"))
         .withColumn("bin", expr(
@@ -3290,7 +3099,6 @@ object SparkEntry {
       // ((sum + 2) div 4 — rint's half-even would diverge from the
       // oracle), the 32x32 result RE-ENCODES to PNG, decodes again, and
       // checksums — grading codec -> resample -> codec end-to-end.
-      F.ensureRegistered(s)
       val dec = Media.decodePng(Media.encodePng(Synth.tiles(s, 3))).drop("png")
       val down = dec.withColumn("pixels", expr(
         """transform(sequence(0, 1023), i ->
@@ -3312,7 +3120,6 @@ object SparkEntry {
       // render, so a span out of order, a wrong placeholder, or a
       // formatting drift breaks the compare. Shuffle = the one docs()
       // assembly agg; the render itself is a codegen'd transform+join.
-      F.ensureRegistered(s)
       Synth.docs(s, dir)
         .withColumn("render", expr(
           """array_join(transform(spans, sp ->
@@ -3357,7 +3164,6 @@ object SparkEntry {
       // so IDENTICAL texts always land in the same split and an exact
       // duplicate can never straddle train/test. 0-89 train, 90-94 val,
       // 95-99 test. Pure expression, shuffle-free.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/documents.parquet")
         .withColumn("bucket", expr("fingerprint64(text) % 100"))
         .select(col("doc_id"),
@@ -3373,7 +3179,6 @@ object SparkEntry {
       // regex and DuckDB RE2 (no backrefs, no anchors, literal '.' in a
       // class). Output: redacted text + per-doc redaction counts, so a
       // missed or over-eager match breaks the compare.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/documents.parquet")
         .withColumn("raw", when(col("doc_id") % 5 === 0,
           concat(col("text"), format_string(" call 555%07d or mail u%d@ex%d.com now",
@@ -3393,7 +3198,6 @@ object SparkEntry {
       // TextCore currency the minhash family uses, so the oracle replays
       // them in HUGEINT SplitMix arithmetic (q24's machinery); the join
       // is a LEFT-SEMI on 8-byte keys — text never shuffles.
-      F.ensureRegistered(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Dedup.decontaminate(docs, "doc_id", "text",
         docs.where(col("doc_id") % 97 === 0), "text", k = 3)
@@ -3404,7 +3208,6 @@ object SparkEntry {
       // confirm join only on survivors). mBits = 32768 is sized so the
       // false-positive branch measurably fires on this corpus (FP docs
       // appear as bloom_hit=1 / exact_hit=0 rows and are graded).
-      F.ensureRegistered(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Dedup.decontaminateBloom(docs, "doc_id", "text",
         docs.where(col("doc_id") % 97 === 0), "text", k = 3, mBits = 32768)
@@ -3420,13 +3223,7 @@ object SparkEntry {
       // quarters are exact), so the oracle rebuilds the ENTIRE record
       // string — writer, escaper, splitter, and WKT round-trip are all
       // graded bit-exact UNQUANTIZED. Shuffle-free scan->project->generate.
-      F.ensureRegistered(s)
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 4.0D"))
-        .withColumn("ay", expr("CAST((q_id * 104729) % 512 AS DOUBLE)"))
-        .withColumn("w", expr("1.0D + CAST(q_id % 7 AS DOUBLE) / 2.0D"))
-        .withColumn("h", expr("2.0D + CAST(q_id % 5 AS DOUBLE)"))
+      Synth.shapeSeeds(s, dir)
         .withColumn("wkt", expr(
           """CASE WHEN q_id % 3 = 0 THEN format_string('POINT(%.2f %.2f)', ax, ay)
              WHEN q_id % 3 = 1 THEN format_string('LINESTRING(%.2f %.2f, %.2f %.2f)',
@@ -3454,29 +3251,9 @@ object SparkEntry {
       // under the GeoJson.fmt number contract AND the vertices from the
       // generating arithmetic — writer and parser bit-exact UNQUANTIZED.
       // Shuffle-free scan → project → generate.
-      F.ensureRegistered(s)
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 4.0D"))
-        .withColumn("ay", expr("CAST((q_id * 104729) % 512 AS DOUBLE)"))
-        .withColumn("w", expr("1.0D + CAST(q_id % 7 AS DOUBLE) / 2.0D"))
-        .withColumn("h", expr("2.0D + CAST(q_id % 5 AS DOUBLE)"))
-        .withColumn("wkt", expr(
-          """CASE WHEN q_id % 4 = 0 THEN format_string('POINT(%s %s)', ax, ay)
-             WHEN q_id % 4 = 1 THEN format_string('LINESTRING(%s %s, %s %s, %s %s)',
-               ax, ay, ax + w, ay + h, ax, ay + 2.0D * h)
-             WHEN q_id % 4 = 2 THEN format_string('POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))',
-               ax, ay, ax + w, ay, ax + w, ay + h, ax, ay + h, ax, ay)
-             ELSE format_string('MULTILINESTRING((%s %s, %s %s), (%s %s, %s %s))',
-               ax, ay, ax + w, ay + h, ax, ay + h, ax + w, ay)
-             END"""))
-        .withColumn("gml", call_function("st_asgml",
-          call_function("st_geomfromwkt", col("wkt"))))
-        .select(col("q_id"), col("gml"),
-          posexplode(call_function("st_points",
-            call_function("st_geomfromgml", col("gml")))).as(Seq("seq", "p")))
-        .select(col("q_id"), col("gml"), col("seq").cast("long").as("seq"),
-          col("p.x").as("x"), col("p.y").as("y"))
+      Synth.shapeSeeds(s, dir)
+        .withColumn("wkt", expr(shapeWkt4))
+        .transform(textRoundTrip("gml", "gml"))
     }),
     "q162_shapefile" -> ((s, dir) => {
       // OGR Shapefile driver analog — the FIRST binary-format driver
@@ -3494,14 +3271,8 @@ object SparkEntry {
       // dbf padding are all graded bit-exact UNQUANTIZED. Shuffle-free
       // scan → project → generate; whole-file images (.shp/.shx/.dbf
       // headers) are composed in Shp.writeFile and graded in ShpSpec.
-      F.ensureRegistered(s)
       val dbfSpec = "id:N8,name:C16"
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 4.0D"))
-        .withColumn("ay", expr("CAST((q_id * 104729) % 512 AS DOUBLE)"))
-        .withColumn("w", expr("1.0D + CAST(q_id % 7 AS DOUBLE) / 2.0D"))
-        .withColumn("h", expr("2.0D + CAST(q_id % 5 AS DOUBLE)"))
+      Synth.shapeSeeds(s, dir)
         .withColumn("wkt", expr(
           """CASE WHEN q_id % 4 = 0 THEN format_string('POINT(%s %s)', ax, ay)
              WHEN q_id % 4 = 1 THEN format_string('LINESTRING(%s %s, %s %s, %s %s)',
@@ -3546,28 +3317,7 @@ object SparkEntry {
       // L whose shoelace area and envelope are closed-form: the oracle
       // replays both UNQUANTIZED from the generating arithmetic,
       // including the covered-strip envelope collapse cases.
-      F.ensureRegistered(s)
-      val a = s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("rid", expr("q_id % 32"))
-        .withColumn("x0", expr("CAST(rid * 32 AS DOUBLE) + 2.0 + CAST((q_id * 7919) % 96 AS DOUBLE) / 4.0"))
-        .withColumn("y0", expr("2.0 + CAST((q_id * 104729) % 96 AS DOUBLE) / 4.0"))
-        .withColumn("x1", expr("x0 + 1.0 + CAST(q_id % 14 AS DOUBLE) / 4.0"))
-        .withColumn("y1", expr("y0 + 1.0 + CAST(q_id % 11 AS DOUBLE) / 4.0"))
-        .withColumn("ga", call_function("st_geomfromwkt", format_string(
-          "POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))",
-          col("x0"), col("y0"), col("x1"), col("y0"), col("x1"), col("y1"),
-          col("x0"), col("y1"), col("x0"), col("y0"))))
-      val b = s.range(32)
-        .select(col("id").as("rid"))
-        .withColumn("u0", expr("CAST(rid * 32 AS DOUBLE) + 6.125 + CAST(rid % 3 AS DOUBLE)"))
-        .withColumn("v0", expr("6.125 + CAST(rid % 5 AS DOUBLE)"))
-        .withColumn("u1", expr("u0 + 14.0")).withColumn("v1", expr("v0 + 12.0"))
-        .withColumn("gb", call_function("st_geomfromwkt", format_string(
-          "POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))",
-          col("u0"), col("v0"), col("u1"), col("v0"), col("u1"), col("v1"),
-          col("u0"), col("v1"), col("u0"), col("v0"))))
-        .select(col("rid"), col("gb"))
+      val (a, b) = Synth.overlayRects(s, dir)
       a.join(broadcast(b), Seq("rid"))
         .select(col("q_id"), explode(array(
           struct(lit("int").as("kind"),
@@ -3588,39 +3338,11 @@ object SparkEntry {
       // as-is ('upd') plus each input feature's outside piece
       // (st_difference, 'keep'; empty pieces dropped). Same corpus,
       // broadcast region join and closed-form rect/L oracle as q118.
-      F.ensureRegistered(s)
-      val a = s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("rid", expr("q_id % 32"))
-        .withColumn("x0", expr("CAST(rid * 32 AS DOUBLE) + 2.0 + CAST((q_id * 7919) % 96 AS DOUBLE) / 4.0"))
-        .withColumn("y0", expr("2.0 + CAST((q_id * 104729) % 96 AS DOUBLE) / 4.0"))
-        .withColumn("x1", expr("x0 + 1.0 + CAST(q_id % 14 AS DOUBLE) / 4.0"))
-        .withColumn("y1", expr("y0 + 1.0 + CAST(q_id % 11 AS DOUBLE) / 4.0"))
-        .withColumn("ga", call_function("st_geomfromwkt", format_string(
-          "POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))",
-          col("x0"), col("y0"), col("x1"), col("y0"), col("x1"), col("y1"),
-          col("x0"), col("y1"), col("x0"), col("y0"))))
-      val b = s.range(32)
-        .select(col("id").as("rid"))
-        .withColumn("u0", expr("CAST(rid * 32 AS DOUBLE) + 6.125 + CAST(rid % 3 AS DOUBLE)"))
-        .withColumn("v0", expr("6.125 + CAST(rid % 5 AS DOUBLE)"))
-        .withColumn("u1", expr("u0 + 14.0")).withColumn("v1", expr("v0 + 12.0"))
-        .withColumn("gb", call_function("st_geomfromwkt", format_string(
-          "POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))",
-          col("u0"), col("v0"), col("u1"), col("v0"), col("u1"), col("v1"),
-          col("u0"), col("v1"), col("u0"), col("v0"))))
-      val keeps = a.join(broadcast(b.select(col("rid"), col("gb"))), Seq("rid"))
-        .withColumn("g", call_function("st_difference", col("ga"), col("gb")))
-        .where(!call_function("st_isempty", col("g")))
-        .select(col("q_id"), lit("keep").as("kind"), col("g"))
+      val (a, b) = Synth.overlayRects(s, dir)
+      val keeps = overlayPieces(a.join(broadcast(b), Seq("rid")), "st_difference", "keep")
       val upds = b.select((col("rid") - 1000L).as("q_id"), lit("upd").as("kind"),
         col("gb").as("g"))
-      keeps.unionByName(upds)
-        .withColumn("env", call_function("st_env_bounds", col("g")))
-        .select(col("q_id"), col("kind"),
-          call_function("st_area", col("g")).as("area"),
-          element_at(col("env"), 1).as("xmin"), element_at(col("env"), 2).as("ymin"),
-          element_at(col("env"), 3).as("xmax"), element_at(col("env"), 4).as("ymax"))
+      pieceStats(keeps.unionByName(upds))
     }),
     "q210_layer_erase_symdiff" -> ((s, dir) => {
       // ogr_layer_algebra Erase + SymDifference (reference
@@ -3641,24 +3363,10 @@ object SparkEntry {
       // the loop the reference runs per feature). Contained /
       // edge-crossed / disjoint input branches all fire. UNQUANTIZED:
       // every coordinate is dyadic and every shoelace product exact.
-      F.ensureRegistered(s)
-      val (a, b) = algebraRects(s, dir)
-      val erase = a.join(broadcast(b), Seq("rid"))
-        .withColumn("g", call_function("st_difference", col("ga"), col("gb")))
-        .where(!call_function("st_isempty", col("g")))
-        .select(col("q_id"), lit("erase").as("kind"), col("g"))
-      val cover = a.groupBy("rid").agg(collect_list(col("ga")).as("gas"))
-      val bside = b.join(cover, Seq("rid"), "left")
-        .withColumn("g", when(col("gas").isNull, col("gb")).otherwise(
-          call_function("st_difference", col("gb"),
-            expr("aggregate(slice(gas, 2, size(gas) - 1), element_at(gas, 1), (acc, gg) -> st_union(acc, gg))"))))
-        .select((col("rid") - 1000L).as("q_id"), lit("bside").as("kind"), col("g"))
-      erase.unionByName(bside)
-        .withColumn("env", call_function("st_env_bounds", col("g")))
-        .select(col("q_id"), col("kind"),
-          call_function("st_area", col("g")).as("area"),
-          element_at(col("env"), 1).as("xmin"), element_at(col("env"), 2).as("ymin"),
-          element_at(col("env"), 3).as("xmax"), element_at(col("env"), 4).as("ymax"))
+      val (a, b) = Synth.algebraRects(s, dir)
+      val erase = overlayPieces(a.join(broadcast(b), Seq("rid")), "st_difference", "erase")
+      val bside = methodPieces(a, b)
+      pieceStats(erase.unionByName(bside))
     }),
     "q111_simplify" -> ((s, dir) => {
       // ogr2ogr -simplify (reference ogr/ogrgeometry.cpp ::
@@ -3672,7 +3380,6 @@ object SparkEntry {
       // are bit-exact originals. The oracle rebuilds the vertex list
       // from the generating arithmetic — grading the simplifier against
       // ground truth, NOT against a second simplifier. Shuffle-free.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("q_id"))
         .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 64.0"))
@@ -3701,7 +3408,6 @@ object SparkEntry {
       // this corpus, checked at authoring). Two bands: full-range
       // exp 1.5, and a clamping (2..13 → 10..250) exp 0.8 window.
       // Shuffle-free scan → generate → codegen'd project.
-      F.ensureRegistered(s)
       Synth.maskTiles(s, 2)
         .select(col("tx"), col("ty"), posexplode(col("pixels")).as(Seq("i", "v")))
         .select((col("tx") * 8 + col("i") % 8).as("gx"),
@@ -3721,7 +3427,6 @@ object SparkEntry {
       // full-dimensional rectangle whose corners mix the two inputs'
       // exact dyadic coordinates, making area and envelope closed-form
       // oracle-replayable with NO quantization. Shuffle-free.
-      F.ensureRegistered(s)
       val clip = "POLYGON((0.125 0.125, 256.125 0.125, 256.125 128.125, " +
         "0.125 128.125, 0.125 0.125))"
       s.read.parquet(s"$dir/supplier.parquet")
@@ -3753,27 +3458,9 @@ object SparkEntry {
       // writer AND parser bit-exactly — shortest-round-trip decimals
       // parse back to the same doubles. Shuffle-free scan → project →
       // generate.
-      F.ensureRegistered(s)
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 4.0D"))
-        .withColumn("ay", expr("CAST((q_id * 104729) % 512 AS DOUBLE)"))
-        .withColumn("w", expr("1.0D + CAST(q_id % 7 AS DOUBLE) / 2.0D"))
-        .withColumn("h", expr("2.0D + CAST(q_id % 5 AS DOUBLE)"))
-        .withColumn("wkt", expr(
-          """CASE WHEN q_id % 3 = 0 THEN format_string('POINT(%s %s)', ax, ay)
-             WHEN q_id % 3 = 1 THEN format_string('LINESTRING(%s %s, %s %s, %s %s)',
-               ax, ay, ax + w, ay + h, ax, ay + 2.0D * h)
-             ELSE format_string('POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))',
-               ax, ay, ax + w, ay, ax + w, ay + h, ax, ay + h, ax, ay)
-             END"""))
-        .withColumn("gjson", call_function("st_asgeojson",
-          call_function("st_geomfromwkt", col("wkt"))))
-        .select(col("q_id"), col("gjson"),
-          posexplode(call_function("st_points",
-            call_function("st_geomfromgeojson", col("gjson")))).as(Seq("seq", "p")))
-        .select(col("q_id"), col("gjson"), col("seq").cast("long").as("seq"),
-          col("p.x").as("x"), col("p.y").as("y"))
+      Synth.shapeSeeds(s, dir)
+        .withColumn("wkt", expr(shapeWkt3))
+        .transform(textRoundTrip("geojson", "gjson"))
     }),
     "q92_segmentize" -> ((s, dir) => {
       // ogr2ogr -segmentize (reference ogr/ogrgeometry.cpp ::
@@ -3782,15 +3469,7 @@ object SparkEntry {
       // pipeline is −,·,/,sqrt,ceil — exactly rounded IEEE ops, zero
       // transcendentals — so the oracle reproduces the output doubles
       // BIT-exactly with no quantization. Shuffle-free scan → generate.
-      F.ensureRegistered(s)
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 64.0"))
-        .withColumn("ay", expr("CAST((q_id * 104729) % 1024 AS DOUBLE) / 64.0"))
-        .withColumn("bx", expr("ax + 1.0 + CAST(q_id % 13 AS DOUBLE) / 2.0"))
-        .withColumn("by", expr("ay + CAST(q_id % 7 AS DOUBLE) / 4.0"))
-        .withColumn("cx", expr("bx - CAST(q_id % 5 AS DOUBLE) / 2.0"))
-        .withColumn("cy", expr("by + 2.0 + CAST(q_id % 11 AS DOUBLE) / 8.0"))
+      Synth.triangles(s, dir)
         .withColumn("ml", expr("0.5 + CAST(q_id % 4 AS DOUBLE) / 8.0"))
         .withColumn("wkt", format_string("LINESTRING(%s %s, %s %s, %s %s)",
           col("ax"), col("ay"), col("bx"), col("by"), col("cx"), col("cy")))
@@ -3806,7 +3485,6 @@ object SparkEntry {
       // buckets over a 20-class domain (4 provably empty — dropped).
       // Per-tile partial rows via codegen'd HOFs (20 rows/tile, never
       // per-pixel), one hash agg, exact BIGINT sums.
-      F.ensureRegistered(s)
       Raster.rat(Synth.tiles(s, 3), nClasses = 20, classWidth = 16.0)
     }),
     "q122_gdal2xyz" -> ((s, dir) =>
@@ -3857,7 +3535,6 @@ object SparkEntry {
       // style_tool/style_params, emit one row per (q_id, param). The
       // LABEL branch exercises quoted values (quotes stripped, inner
       // spaces kept). Shuffle-free scan → project → generate.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("q_id"))
         .withColumn("style",
@@ -3884,7 +3561,6 @@ object SparkEntry {
       // step; vertex rows via st_points + posexplode, 1e-6-quantized.
       // Variants by q_id % 3: cw half, ccw half, ccw three-quarter arc.
       // Shuffle-free scan → project → generate.
-      F.ensureRegistered(s)
       val arc = "CIRCULARSTRING(%s %s, %s %s, %s %s)"
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("q_id"))
@@ -3915,7 +3591,6 @@ object SparkEntry {
       // oracle replays the full 4-stage chain op-for-op with every
       // derived constant embedded as the engine's runtime double.
       // Shuffle-free scan → project.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("q_id"))
         .withColumn("lon", expr("CAST((q_id * 7919) % 12288 AS DOUBLE) / 1024.0 - 8.0"))
@@ -3931,7 +3606,6 @@ object SparkEntry {
       // extent back to WGS84 through TM-inverse → Airy geocentric →
       // reverse-sign Helmert → WGS84 geodetic (core/Bng.inverse);
       // 1e-6-deg quantization (q76 trick). Shuffle-free.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("q_id"))
         .withColumn("e_m", expr("CAST(100000 + (q_id * 48271) % 500001 AS DOUBLE)"))
@@ -3949,15 +3623,10 @@ object SparkEntry {
       // (odd, north aspect) via core/Ps.forward, cm-quantized; the oracle
       // replays the chain op-for-op with the single derived constant
       // k = a·mF/tF embedded per CRS (q73/q80 trick). Shuffle-free.
-      F.ensureRegistered(s)
       Synth.queryPoints(s, dir)
         .withColumn("epsg", when(col("q_id") % 2 === 0, lit(3031))
           .otherwise(lit(3413)).cast("int"))
-        .withColumn("u", call_function("st_transform",
-          F.st_point(col("lon"), col("lat")), lit(4326), col("epsg")))
-        .select(col("q_id"), col("epsg"),
-          expr("CAST(floor(st_x(u) * 100.0 + 0.5) AS BIGINT)").as("e_cm"),
-          expr("CAST(floor(st_y(u) * 100.0 + 0.5) AS BIGINT)").as("n_cm"))
+        .transform(forwardCm)
     }),
     "q86_ps_inverse" -> ((s, dir) => {
       // polar stereographic inverse leg: deterministic integer-meter E/N
@@ -3966,18 +3635,13 @@ object SparkEntry {
       // steps (q81 trick), south aspect mirrored through φ→−φ which
       // commutes bit-exactly with the degrees conversion. 1e-6-degree
       // quantization absorbs transcendental ULPs. Shuffle-free.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("q_id"))
         .withColumn("epsg", when(col("q_id") % 2 === 0, lit(3031))
           .otherwise(lit(3413)).cast("int"))
         .withColumn("e_m", (((col("q_id") * 48271) % 6000001) - lit(3000000)).cast("double"))
         .withColumn("n_m", (((col("q_id") * 16807) % 6000001) - lit(3000000)).cast("double"))
-        .withColumn("u", F.st_transform(
-          F.st_point(col("e_m"), col("n_m")), col("epsg"), lit(4326)))
-        .select(col("q_id"), col("epsg"),
-          expr("CAST(floor(st_x(u) * 1000000.0 + 0.5) AS BIGINT)").as("lon_e6"),
-          expr("CAST(floor(st_y(u) * 1000000.0 + 0.5) AS BIGINT)").as("lat_e6"))
+        .transform(inverseE6)
     }),
     "q83_tps_forward" -> ((s, dir) => {
       // TPS transformer forward surface (reference alg/thinplatespline.cpp
@@ -4007,7 +3671,6 @@ object SparkEntry {
       // only transcendental (StrictMath vs libm, ≤1 ulp), and a flip
       // needs samp within ~1e-13 of an integer — absent by construction
       // on this deterministic grid (verified bit-exact).
-      F.ensureRegistered(s)
       Raster.warpTpsNear(Synth.tiles(s, 3), graft.core.Tps.demo,
         srcW = 1024, srcH = 512, dstW = 1024, dstH = 512)
         .select(col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
@@ -4059,7 +3722,6 @@ object SparkEntry {
       // headroom: 36·tf·S·1e6 requires tf·S < 2.5e11 — comfortable
       // through sf10; past that the 1e6 scale constant drops a decade.
       import s.implicits._
-      F.ensureRegistered(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val toks = docs.select(col("doc_id"), expr(
         "filter(split(trim(regexp_replace(lower(text), '\\\\s+', ' ')), ' '), t -> t <> '')")
@@ -4108,7 +3770,6 @@ object SparkEntry {
       // 100-TB shape: map-side rounds (4 hash evaluations/row), then ONE
       // range-partitioned sort per epoch — exactly the shuffle a real
       // dataloader order materialization is; no state, no joins.
-      F.ensureRegistered(s)
       val rounds = (1 to 4).foldLeft(
         s.read.parquet(s"$dir/documents.parquet")
           .select(col("doc_id"),
@@ -4138,17 +3799,7 @@ object SparkEntry {
       // zero). Graded per row: m, sum/min/max AND a base-31 polynomial
       // hash of the resampled stream — one wrong sample breaks the row.
       // Map-only per-row HOFs: zero shuffle at 100 TB.
-      F.ensureRegistered(s)
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("aid"))
-        .withColumn("bin", expr(
-          """CAST(format_string('AUD:%04d:%01d:%01d:',
-             64 + aid % 129, aid % 7, aid % 5) AS BINARY)"""))
-        .select(col("aid"), col("bin")) // widths live ONLY in the bytes
-        .withColumn("hdr", expr("CAST(bin AS STRING)"))
-        .withColumn("n", expr("CAST(substring(hdr, 5, 4) AS INT)"))
-        .withColumn("ld", expr("CAST(substring(hdr, 10, 1) AS INT)"))
-        .withColumn("tl", expr("CAST(substring(hdr, 12, 1) AS INT)"))
+      audioHeaders(s, dir)
         .withColumn("smp", expr(
           """transform(sequence(0, n - 1), i ->
                CASE WHEN i < ld OR i >= n - tl THEN 0L
@@ -4182,7 +3833,6 @@ object SparkEntry {
       // occurrence counts aggregated beside it is exactly how
       // SentencePiece encodes at scale; the map literal constant-folds,
       // so the whole DP is one codegen'd projection after one tf agg.
-      F.ensureRegistered(s)
       val vmap = "map(" + OracleHashSql.unigramVocab
         .map { case (p, c) => s"'$p', ${c}L" }.mkString(", ") + ")"
       s.read.parquet(s"$dir/documents.parquet")
@@ -4230,49 +3880,17 @@ object SparkEntry {
       // pass. Same sentinel protocol as q154 (both streams advance);
       // -1 sentinels for hash stability; range bound on the raw
       // watermarked ts columns so state eviction stays derivable.
-      import s.implicits._
-      F.ensureRegistered(s)
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"), col("ts").cast("timestamp").as("ts"))
-      val out = scratch("q228out")
-      val ckp = scratch("q228ckp")
-      val srcBase = scratch("q228src")
-      val (srcV, srcC) = writeParitySources(ev, srcBase)
-      val views = s.readStream.schema(ev.schema).parquet(srcV)
-        .withWatermark("ts", "1 minute")
-        .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-          col("ts").as("vts"))
-      val clicks = s.readStream.schema(ev.schema).parquet(srcC)
-        .withWatermark("ts", "1 minute")
-        .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-          col("ts").as("cts"))
-      val joined = views.join(clicks, expr(
-          "v_user = c_user AND cts >= vts AND cts <= vts + interval 1 hour"),
-          "fullOuter")
-        .select(coalesce(col("view_id"), lit(-1L)).as("view_id"),
-          coalesce(col("click_id"), lit(-1L)).as("click_id"),
-          coalesce(col("v_user"), col("c_user")).as("u"),
-          coalesce(unix_millis(col("cts")) - unix_millis(col("vts")), lit(-1L))
-            .as("delta_ms"))
       // 8 state stores, scoped to the streaming query (q154 rationale)
-      withStreamParts(s, streamStateParts(s, srcV, srcC)) {
-        val q = joined.writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckp).outputMode("append").start()
-        q.processAllAvailable()
-        val maxMs = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0).getTime
-        // one partitioned append lands the sentinel in BOTH source dirs
-        // in a single job (same rows the two per-side appends wrote)
-        def sentinel(days: Long): Unit = {
-          val t = new java.sql.Timestamp(maxMs + days * 24L * 3600 * 1000)
-          Seq((-1L, -1L, t, 0), (-1L, -1L, t, 1))
-            .toDF("event_id", "user_id", "ts", "__par")
-            .write.partitionBy("__par").mode("append").parquet(srcBase)
-        }
-        sentinel(30); q.processAllAvailable()
-        sentinel(31); q.processAllAvailable()
-        q.stop()
-      }
-      s.read.parquet(out).where(col("u") >= 0)
+      streamJoin(s, dir, "q228", "1 minute", sentinels = true) { (views, clicks) =>
+        views.join(clicks, expr(
+            "v_user = c_user AND cts >= vts AND cts <= vts + interval 1 hour"),
+            "fullOuter")
+          .select(coalesce(col("view_id"), lit(-1L)).as("view_id"),
+            coalesce(col("click_id"), lit(-1L)).as("click_id"),
+            coalesce(col("v_user"), col("c_user")).as("u"),
+            coalesce(unix_millis(col("cts")) - unix_millis(col("vts")), lit(-1L))
+              .as("delta_ms"))
+      }.where(col("u") >= 0)
         .select(col("view_id"), col("click_id"), col("delta_ms"))
     }),
     "q229_rrf_fusion" -> ((s, dir) => {
@@ -4286,7 +3904,6 @@ object SparkEntry {
       // occurrences (broadcast semi-join first), fusion is one hash agg
       // over ≤ 40 rows per query + one top-5 window.
       import s.implicits._
-      F.ensureRegistered(s)
       // OPTIMIZATION r6: ONE tokenization pass instead of three. The old
       // plan tokenized once for the corpus-stats action, once for dl and
       // once for the full-token explode (then filtered 7 literal terms via
@@ -4359,7 +3976,6 @@ object SparkEntry {
       // 100-TB shape: bigrams built MAP-SIDE from the token array (no
       // per-doc lag window), then everything is hash aggs on the bigram
       // table — vocab², tiny beside the corpus.
-      F.ensureRegistered(s)
       val bi = s.read.parquet(s"$dir/documents.parquet")
         .select(expr(
           "filter(split(trim(regexp_replace(lower(text), '\\\\s+', ' ')), ' '), t -> t <> '')")
@@ -4392,29 +4008,12 @@ object SparkEntry {
       // legs are the q118/q126 broadcast region join (32-row method
       // side); the bside leg folds the bounded per-region cover — one
       // broadcast join + one 8-bounded agg, no cartesian anywhere.
-      F.ensureRegistered(s)
-      val (a, b) = algebraRects(s, dir)
+      val (a, b) = Synth.algebraRects(s, dir)
       val ab = a.join(broadcast(b), Seq("rid"))
-      val inter = ab
-        .withColumn("g", call_function("st_intersection", col("ga"), col("gb")))
-        .where(!call_function("st_isempty", col("g")))
-        .select(col("q_id"), lit("int").as("kind"), col("g"))
-      val erase = ab
-        .withColumn("g", call_function("st_difference", col("ga"), col("gb")))
-        .where(!call_function("st_isempty", col("g")))
-        .select(col("q_id"), lit("erase").as("kind"), col("g"))
-      val cover = a.groupBy("rid").agg(collect_list(col("ga")).as("gas"))
-      val bside = b.join(cover, Seq("rid"), "left")
-        .withColumn("g", when(col("gas").isNull, col("gb")).otherwise(
-          call_function("st_difference", col("gb"),
-            expr("aggregate(slice(gas, 2, size(gas) - 1), element_at(gas, 1), (acc, gg) -> st_union(acc, gg))"))))
-        .select((col("rid") - 1000L).as("q_id"), lit("bside").as("kind"), col("g"))
-      inter.unionByName(erase).unionByName(bside)
-        .withColumn("env", call_function("st_env_bounds", col("g")))
-        .select(col("q_id"), col("kind"),
-          call_function("st_area", col("g")).as("area"),
-          element_at(col("env"), 1).as("xmin"), element_at(col("env"), 2).as("ymin"),
-          element_at(col("env"), 3).as("xmax"), element_at(col("env"), 4).as("ymax"))
+      val inter = overlayPieces(ab, "st_intersection", "int")
+      val erase = overlayPieces(ab, "st_difference", "erase")
+      val bside = methodPieces(a, b)
+      pieceStats(inter.unionByName(erase).unionByName(bside))
     }),
     "q233_url_canonicalize" -> ((s, dir) => {
       // URL canonicalization + URL-level dedup — the crawl-pipeline step
@@ -4428,7 +4027,6 @@ object SparkEntry {
       // instr/substring arithmetic (no regex) — map-only, then ONE hash
       // agg on the canonical key; at 100 TB this is the exact shape of
       // crawl dedup (canonical key never exceeds the URL length).
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"))
         .withColumn("url", expr(
@@ -4477,7 +4075,6 @@ object SparkEntry {
       // discipline). Param values live as STRINGS end to end — no
       // float→text formatting divergence between engines can exist.
       import s.implicits._
-      F.ensureRegistered(s)
       val crs = Seq(
         (2154L, "RGF93 / Lambert-93",
           """GEOGCS["RGF93",DATUM["RGF93",SPHEROID["GRS 1980",6378137,298.257222101]],PRIMEM["Greenwich",0],UNIT["degree",0.0174532925199433]]""",
@@ -4535,7 +4132,6 @@ object SparkEntry {
       // order, or a wrong mask boundary breaks the row). Same one-agg
       // shuffle as the docs() assembly; render + mask are codegen'd
       // HOFs — map-only after the span sort at any scale.
-      F.ensureRegistered(s)
       Synth.docs(s, dir)
         .withColumn("turns", expr(
           """transform(spans, sp -> named_struct(
@@ -4575,19 +4171,8 @@ object SparkEntry {
       // identity, so a drift in either writer, either parser, or the
       // canonicalization breaks the row. Shuffle-free map chain — the
       // conversion never leaves the row at any scale.
-      F.ensureRegistered(s)
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 4.0D"))
-        .withColumn("ay", expr("CAST((q_id * 104729) % 512 AS DOUBLE)"))
-        .withColumn("w", expr("1.0D + CAST(q_id % 7 AS DOUBLE) / 2.0D"))
-        .withColumn("h", expr("2.0D + CAST(q_id % 5 AS DOUBLE)"))
-        .withColumn("wkt", expr(
-          """CASE WHEN q_id % 3 = 0 THEN format_string('POINT(%s %s)', ax, ay)
-             WHEN q_id % 3 = 1 THEN format_string('LINESTRING(%s %s, %s %s, %s %s)',
-               ax, ay, ax + w, ay + h, ax, ay + 2.0D * h)
-             ELSE format_string('POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))',
-               ax, ay, ax + w, ay, ax + w, ay + h, ax, ay + h, ax, ay) END"""))
+      Synth.shapeSeeds(s, dir)
+        .withColumn("wkt", expr(shapeWkt3))
         .withColumn("geom", call_function("st_geomfromwkt", col("wkt")))
         .withColumn("gj", call_function("st_asgeojson", col("geom")))
         .withColumn("g2", call_function("st_geomfromgeojson", col("gj")))
@@ -4611,7 +4196,6 @@ object SparkEntry {
       // is a pure scene-CATALOG aggregate (one row per scene, never per
       // pixel) crossed with 3 modes.
       import s.implicits._
-      F.ensureRegistered(s)
       val scenes = s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("sid"))
         .withColumn("px_u", expr("element_at(array(256L, 512L, 1024L, 2048L), CAST(sid % 4 + 1 AS INT))"))
@@ -4658,7 +4242,6 @@ object SparkEntry {
       // row_number() windows + a 3-way self-join. Identical rows: the
       // (margin, doc_id) orderings are total (doc_id unique), so argmax/
       // argmin match rank-1 rows exactly; all arithmetic stays BIGINT.
-      F.ensureRegistered(s)
       val m = graft.core.Par.fan(s.read.parquet(s"$dir/documents.parquet"))
         .select(col("doc_id"), explode(q220HashArr).as("hs"))
         .select(col("doc_id"), expr("doc_id % 32").as("g"),
@@ -4682,7 +4265,6 @@ object SparkEntry {
       // <PRE>p<SUF>s<MID>m and SPM <SUF>s<PRE>p<MID>m — and hash64 of
       // each is graded with the span arithmetic. Docs under 3 tokens
       // pass through uncorrupted (len 0). Map-only HOFs, no shuffle.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/documents.parquet")
         .withColumn("tk", expr(
           "filter(split(trim(regexp_replace(lower(text), '\\\\s+', ' ')), ' '), t -> t <> '')"))
@@ -4709,7 +4291,6 @@ object SparkEntry {
       // not be offset-dominated): squared norms of the full vector and
       // the 16-dim prefix, and the retained-energy ratio in exact milli
       // (n2_16·1000 div n2_64 — bounded 2.8e17, Long-safe). Map-only.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/embeddings.parquet")
         .withColumn("q", expr(
           "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0D) AS BIGINT))"))
@@ -4729,7 +4310,6 @@ object SparkEntry {
       // 1) + 1, 8). 100-TB shape: ONE cell hash agg (16 B rows) + one
       // scalar total; the top-16 window runs over the bounded CELL table
       // (≤ 2^13 rows at z7), never over points.
-      F.ensureRegistered(s)
       val pts = Synth.points(s, dir)
         .select(F.cell_encode(col("lon"), col("lat"), lit(7)).as("cell"))
       val total = pts.count()
@@ -4761,21 +4341,8 @@ object SparkEntry {
       // project → generate; whole-database images (100-byte header,
       // sqlite_master, gpkg_* system tables, 2-level b-trees) are
       // composed by Gpkg.writeFile and graded in SqliteSpec.
-      F.ensureRegistered(s)
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select(col("s_suppkey").as("q_id"))
-        .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 4.0D"))
-        .withColumn("ay", expr("CAST((q_id * 104729) % 512 AS DOUBLE)"))
-        .withColumn("w", expr("1.0D + CAST(q_id % 7 AS DOUBLE) / 2.0D"))
-        .withColumn("h", expr("2.0D + CAST(q_id % 5 AS DOUBLE)"))
-        .withColumn("wkt", expr(
-          """CASE WHEN q_id % 3 = 0 THEN format_string('POINT(%s %s)', ax, ay)
-             WHEN q_id % 3 = 1 THEN format_string('LINESTRING(%s %s, %s %s, %s %s)',
-               ax, ay, ax + w, ay + h, ax, ay + 2.0D * h)
-             ELSE format_string(
-               'POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))',
-               ax, ay, ax + w, ay, ax + w, ay + h, ax, ay + h, ax, ay)
-             END"""))
+      Synth.shapeSeeds(s, dir)
+        .withColumn("wkt", expr(shapeWkt3))
         .withColumn("cell", call_function("gpkg_cell",
           col("q_id").cast("long"), col("q_id").cast("long"),
           format_string("f_%d", col("q_id") % 89),
@@ -4880,7 +4447,6 @@ object SparkEntry {
       // series with explicit parameters (core/Utm.forwardTm/inverseTm).
       // cm + 1e-6-deg quantization absorbs transcendental ULPs; plan is
       // scan → project, shuffle-free.
-      F.ensureRegistered(s)
       Synth.queryPoints(s, dir)
         .withColumn("zone", least(lit(119L),
           greatest(lit(0L), floor((col("lon") + 180.0) / 3.0).cast("long"))))
@@ -4911,15 +4477,10 @@ object SparkEntry {
       // case) — cm-quantized; the oracle replays the Snyder chain
       // op-for-op with the engine's derived constants as literals (q80
       // trick). Plan: scan → project, shuffle-free.
-      F.ensureRegistered(s)
       Synth.queryPoints(s, dir)
         .withColumn("epsg", when(col("q_id") % 2 === 0, lit(5070))
           .otherwise(lit(3577)).cast("int"))
-        .withColumn("u", call_function("st_transform",
-          F.st_point(col("lon"), col("lat")), lit(4326), col("epsg")))
-        .select(col("q_id"), col("epsg"),
-          expr("CAST(floor(st_x(u) * 100.0 + 0.5) AS BIGINT)").as("e_cm"),
-          expr("CAST(floor(st_y(u) * 100.0 + 0.5) AS BIGINT)").as("n_cm"))
+        .transform(forwardCm)
     }),
     "q250_albers_inverse" -> ((s, dir) => {
       // Albers Equal-Area inverse leg: deterministic integer-meter
@@ -4928,18 +4489,13 @@ object SparkEntry {
       // 3-16 Newton step unrolled to exactly 6 iterations so the oracle
       // replays the same chain; the n<0 CRS exercises the sign-reversed
       // atan2. 1e-6-degree quantization (q81 trick). Shuffle-free.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("q_id"))
         .withColumn("epsg", when(col("q_id") % 2 === 0, lit(5070))
           .otherwise(lit(3577)).cast("int"))
         .withColumn("e_m", ((col("q_id") * 69621) % 2000001).cast("double") - 1000000.0)
         .withColumn("n_m", ((col("q_id") * 40692) % 3000001).cast("double") - 1500000.0)
-        .withColumn("u", F.st_transform(
-          F.st_point(col("e_m"), col("n_m")), col("epsg"), lit(4326)))
-        .select(col("q_id"), col("epsg"),
-          expr("CAST(floor(st_x(u) * 1000000.0 + 0.5) AS BIGINT)").as("lon_e6"),
-          expr("CAST(floor(st_y(u) * 1000000.0 + 0.5) AS BIGINT)").as("lat_e6"))
+        .transform(inverseE6)
     }),
     "q266_asof_join" -> ((s, dir) => {
       // AS-OF JOIN (backward, inclusive) — the canonical event-to-
@@ -5010,7 +4566,6 @@ object SparkEntry {
       // aggregated per lang in exact integer milli — fertility =
       // Σ symbols ·1000 div Σ words, plus chars-per-symbol compression.
       // 100-TB shape: vocab-sized broadcast join + ONE lang hash agg.
-      F.ensureRegistered(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       // OPTIMIZATION r6: ONE dict build shared by training and encoding
       // (q216 rationale)
@@ -5044,7 +4599,6 @@ object SparkEntry {
       // rank window (3 partitions — the q225 Feistel permutation is the
       // sort-free scale path for per-bucket ranks, noted there); the
       // schedule arithmetic is codegen'd projection.
-      F.ensureRegistered(s)
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("bucket").orderBy(col("shuf"), col("doc_id"))
       s.read.parquet(s"$dir/documents.parquet")
@@ -5160,7 +4714,6 @@ object SparkEntry {
       // Union is associative+commutative and the grade is the dissolved
       // geometry's exact dyadic area/perimeter — invariant under fold
       // grouping (pinned by GeomCascadeSpec against the single fold).
-      F.ensureRegistered(s)
       Synth.regionWkt(s, dir)
         .withColumn("g", col("region_id") % 16)
         .withColumn("sub", (col("region_id") / 16) % 16)
@@ -5216,7 +4769,6 @@ object SparkEntry {
       // shape: map-side span parsing (no join anywhere), two bounded
       // hash aggs; the doc-distinct level never holds more than one row
       // per (tile, doc).
-      F.ensureRegistered(s)
       val spans = Synth.docs(s, dir)
         .select(col("doc_id"), posexplode(col("spans")).as(Seq("i", "sp")))
         .select(col("doc_id"), col("sp.kind").as("kind"),
@@ -5261,7 +4813,6 @@ object SparkEntry {
       // envelope-area clustering metric (CoreSpec's pin); both facts
       // inform the 100-TB layout choice. All integer, one bounded
       // explode + one per-query agg.
-      F.ensureRegistered(s)
       val morton = (0 until 8).map(b =>
         s"(shiftleft(shiftright(tx, $b) & 1L, ${2 * b + 1}) + shiftleft(shiftright(ty, $b) & 1L, ${2 * b}))")
         .mkString(" + ")
@@ -5288,7 +4839,6 @@ object SparkEntry {
       // with per-cell counts and the per-true-lang recall in exact ppm.
       // 100-TB shape: map-side predict, ONE (true, pred) hash agg
       // (5×6-bounded), a broadcast per-lang total joined back.
-      F.ensureRegistered(s)
       val pred = s.read.parquet(s"$dir/documents.parquet")
         .select(col("lang"), F.lang_id(col("text")).as("pred_lang"))
       val cells = pred.groupBy("lang", "pred_lang").agg(count(lit(1)).as("n"))
@@ -5308,7 +4858,6 @@ object SparkEntry {
       // shape: one pair-distinct agg, a bounded top-k window (fan-in k
       // per group), one group agg; sketches merge by unioning hash sets
       // — the property that makes the family the distributed standard.
-      F.ensureRegistered(s)
       val pairs = s.read.parquet(s"$dir/lineitem.parquet")
         .select(expr("CASE WHEN l_partkey % 2 = 0 THEN l_partkey % 256 ELSE 100000 + l_partkey END").as("grp"), col("l_suppkey")).distinct()
         .withColumn("h", expr("mix64(l_suppkey) & 9007199254740991L"))
@@ -5416,7 +4965,6 @@ object SparkEntry {
       // the SECOND mergeStage call is a manifest no-op (idempotent
       // resume, graded by the read-back being single-merge). Oracle: the
       // full-outer-join law in SQL over the same fingerprint replay.
-      F.ensureRegistered(s)
       val root = scratch("q260merge")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val base = docs.select(col("doc_id"), col("lang"),
@@ -5479,7 +5027,6 @@ object SparkEntry {
       // encoding (100 = GMT, ±15-minute steps: +02:30→110, -05:00→80,
       // +03→112). Writer and parser graded together, all-integer,
       // UNQUANTIZED. Shuffle-free scan → project.
-      F.ensureRegistered(s)
       s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("q_id"))
         .withColumn("y", expr("CAST(1970 + q_id % 55 AS INT)"))
@@ -5514,7 +5061,6 @@ object SparkEntry {
       // quote-aware split → index shuffle → WKT parse-back; %.2f quarter
       // coordinates keep every leg bit-exact UNQUANTIZED (q142 law).
       // Shuffle-free scan → project.
-      F.ensureRegistered(s)
       val vrt = """<?xml version="1.0"?>
 <!-- VRT layer over the per-row CSV source -->
 <OGRVRTDataSource>
@@ -5643,7 +5189,6 @@ object SparkEntry {
       // Z-order (HilbertLocalitySpec quantifies the advantage; the
       // oracle replays the full 8-level integer chain unrolled).
       // Plan: scan → codegen'd projection, shuffle-free.
-      F.ensureRegistered(s)
       Synth.queryPoints(s, dir)
         .withColumn("tx", expr("CAST(floor((lon + 180.0D) / 360.0D * 256.0D) AS BIGINT)"))
         .withColumn("ty", expr("CAST(floor((90.0D - lat) / 180.0D * 256.0D) AS BIGINT)"))
@@ -5671,7 +5216,6 @@ object SparkEntry {
       // top-ks IS the global top-k (every global winner survives its own
       // bucket's cut), so the corpus never sorts on one stratum key and
       // a mega-stratum costs S bounded sorts.
-      F.ensureRegistered(s)
       val k = 10; val salts = 8
       val keyed = s.read.parquet(s"$dir/documents.parquet")
         .withColumn("w", expr(
@@ -6170,41 +5714,6 @@ object SparkEntry {
     * cell-disk explode): zoom-5 grid cells within radius 8192 units
     * (8 deg) of each point, with integer-unit coords and exact d2 —
     * point-side explode, one hash aggregate, no shuffle of the grid. */
-  /** Shared q210/q231 layer-algebra corpus: 256 input boxes confined to
-    * per-(region, slot) 8×8 cells on the quarter lattice (ga) and one
-    * method rectangle per 32-unit region on the eighth lattice (gb) —
-    * every coordinate dyadic, edges never coincide, same-region inputs
-    * disjoint, no input contains a method corner (see q210's Scaladoc for
-    * why each invariant makes the oracle closed-form). */
-  private def algebraRects(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val a = s.read.parquet(s"$dir/supplier.parquet")
-      .select(col("s_suppkey").as("q_id"))
-      .where(col("q_id") < 256) // one input per (region, cell slot)
-      .withColumn("rid", expr("q_id % 32"))
-      .withColumn("k", expr("CAST(q_id div 32 AS INT)"))
-      .withColumn("cx", expr("element_at(array(1, 3, 0, 1, 2, 3, 1, 3), k + 1)"))
-      .withColumn("cy", expr("element_at(array(0, 0, 1, 1, 1, 1, 2, 2), k + 1)"))
-      .withColumn("x0", expr("CAST(rid * 32 + cx * 8 AS DOUBLE) + 0.25 + CAST((q_id * 7919) % 8 AS DOUBLE) / 4.0"))
-      .withColumn("y0", expr("CAST(cy * 8 AS DOUBLE) + 0.25 + CAST((q_id * 104729) % 8 AS DOUBLE) / 4.0"))
-      .withColumn("x1", expr("x0 + 1.0 + CAST(q_id % 14 AS DOUBLE) / 4.0"))
-      .withColumn("y1", expr("y0 + 1.0 + CAST(q_id % 11 AS DOUBLE) / 4.0"))
-      .withColumn("ga", call_function("st_geomfromwkt", format_string(
-        "POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))",
-        col("x0"), col("y0"), col("x1"), col("y0"), col("x1"), col("y1"),
-        col("x0"), col("y1"), col("x0"), col("y0"))))
-    val b = s.range(32)
-      .select(col("id").as("rid"))
-      .withColumn("u0", expr("CAST(rid * 32 AS DOUBLE) + 2.125 + CAST(rid % 3 AS DOUBLE)"))
-      .withColumn("v0", expr("2.125 + CAST(rid % 5 AS DOUBLE)"))
-      .withColumn("u1", expr("u0 + 17.0")).withColumn("v1", expr("v0 + 16.0"))
-      .withColumn("gb", call_function("st_geomfromwkt", format_string(
-        "POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))",
-        col("u0"), col("v0"), col("u1"), col("v0"), col("u1"), col("v1"),
-        col("u0"), col("v1"), col("u0"), col("v0"))))
-      .select(col("rid"), col("gb"))
-    (a, b)
-  }
-
   /** q220/q239 shared fastText-feature law, map-only form (OPTIMIZATION
     * r6): the 1-element outer array binds the token array once, so the
     * tokenize → bigram-concat → hash64 chain evaluates exactly once per
@@ -6229,8 +5738,20 @@ object SparkEntry {
          acc + (CASE WHEN (shiftright(h, 5) & 1) = 0 THEN 1L ELSE -1L END)
              * ((((h % 32) + 32) % 32) * 7919 % 31 - 15))""")
 
+  /** The gdal_grid invdist queries (q56, q141, q150): weight each
+    * [[gridCandidates]] pair by the BIGINT expression `weight` over `d2`,
+    * then one aggregate per cell gives the count and the weighted mean
+    * in thousandths (`idw_milli`). */
+  private def gridIdw(s: SparkSession, dir: String, weight: String): DataFrame =
+    gridCandidates(s, dir)
+      .withColumn("w", expr(weight))
+      .groupBy("tx", "ty")
+      .agg(count(lit(1)).as("n"),
+        sum(col("v") * col("w")).as("num"), sum(col("w")).as("den"))
+      .select(col("tx"), col("ty"), col("n"),
+        expr("(num * 1000L) div den").as("idw_milli"))
+
   private def gridCandidates(s: SparkSession, dir: String): DataFrame = {
-    F.ensureRegistered(s)
     // fan: lineitem is one scan split (single row group), and this whole
     // pipeline — 25-cell disk explode + radius filter + partial agg — is
     // map-side work before the one exchange, i.e. single-core without the
@@ -6263,7 +5784,6 @@ object SparkEntry {
     * no overflow), so the oracle replays it verbatim. The cell_disk
     * explode radius is sized by the LARGER half-axis. */
   private def gridCandidatesEllipse(s: SparkSession, dir: String): DataFrame = {
-    F.ensureRegistered(s)
     graft.core.Par.fan(Synth.points(s, dir)).select( // fan: see gridCandidates
         col("l_quantity").cast("long").as("v"),
         ((col("lon") + 180.0) * 1024).cast("long").as("ix"),
@@ -6741,6 +6261,179 @@ object SparkEntry {
        LEFT JOIN $src n0p ON n0p.gx = p.gx     AND n0p.gy = p.gy + 1
        LEFT JOIN $src npp ON npp.gx = p.gx + 1 AND npp.gy = p.gy + 1)"""
 
+  /** Shared gdal_grid oracle fragment (q56, q67, q138, q141, q150): the
+    * points in integer 1/1024-degree units (`ip`) and each point's
+    * candidate cells in its 5x5 zoom-5 neighborhood (`cand`). */
+  private val gridCandSql =
+    s"""pts AS ($ptsSql),
+         ip AS (
+           SELECT CAST(l_quantity AS BIGINT) AS v,
+             CAST((lon + 180.0) * 1024 AS BIGINT) AS ix,
+             CAST((90.0 - lat) * 1024 AS BIGINT) AS iy
+           FROM pts),
+         cand AS (
+           SELECT (p.ix // 5760 + dx.d) AS tx, (p.iy // 5760 + dy.d) AS ty, p.v, p.ix, p.iy
+           FROM ip p, generate_series(-2, 2) dx(d), generate_series(-2, 2) dy(d)
+           WHERE (p.ix // 5760 + dx.d) BETWEEN 0 AND 63
+             AND (p.iy // 5760 + dy.d) BETWEEN 0 AND 31)"""
+
+  /** Shared text oracle fragment (q147, q184, q205, q212, q224, q229):
+    * every document's whitespace-normalized lowercase tokens, empty
+    * tokens dropped (`t2`). */
+  private val tokensSql =
+    """toks AS (
+           SELECT doc_id,
+             unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term
+           FROM documents),
+         t2 AS (SELECT doc_id, term FROM toks WHERE term <> '')"""
+
+  /** Shared BM25 oracle fragment (q224, q229), after [[tokensSql]]: the
+    * corpus token and document counts (`st`), document lengths (`dl`),
+    * the literal query terms (`q`), and per-term `tf` and `dfq`. */
+  private val bm25TermsSql =
+    """st AS (SELECT (SELECT count(*) FROM t2) AS s,
+                       (SELECT count(*) FROM documents) AS n),
+         dl AS (SELECT doc_id, count(*) AS dl FROM t2 GROUP BY 1),
+         q(qid, term) AS (VALUES
+           ('Q1', 'spark'), ('Q1', 'table'),
+           ('Q2', 'hash'), ('Q2', 'join'), ('Q2', 'merge'),
+           ('Q3', 'vector'), ('Q3', 'stream')),
+         rel AS (SELECT doc_id, term FROM t2
+                 WHERE term IN (SELECT DISTINCT term FROM q)),
+         tf AS (SELECT doc_id, term, count(*) AS tf FROM rel GROUP BY 1, 2),
+         dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM rel GROUP BY 1)"""
+
+  /** Shared surprisal oracle fragment (q184, q205), after [[tokensSql]]:
+    * the unigram model and each document's token count and summed
+    * surprisal surrogate (`sc`). */
+  private val surprisalSql =
+    """model AS (SELECT term, count(*) AS cnt FROM t2 GROUP BY 1),
+         tot AS (SELECT sum(cnt) AS total FROM model),
+         sc AS (
+           SELECT t2.doc_id, count(*) AS n_tokens,
+             sum((tot.total * 1000) // model.cnt) AS surp_sum
+           FROM t2 JOIN model USING (term), tot
+           GROUP BY 1)"""
+
+  /** Shared docs oracle fragment (q158, q235): each span's payload (`sp`)
+    * from the generating arithmetic, as Synth.docs renders it. */
+  private val docPayloadSql =
+    s"""pts AS ($ptsSql),
+         sp AS (
+           SELECT doc_key, line_no, part_key, supp_key,
+             CASE WHEN line_no % 4 <> 0 THEN printf('POINT(%.10f %.10f)', lon, lat)
+             ELSE '<media:tile://8/'
+               || CAST(CAST(floor((lon + 180.0) / 360.0 * 512) AS BIGINT) AS VARCHAR)
+               || '/'
+               || CAST(CAST(floor((90.0 - lat) / 180.0 * 256) AS BIGINT) AS VARCHAR)
+               || '/1>' END AS payload
+           FROM pts)"""
+
+  /** Shared pansharpen oracle fragment (q62, q137): each zoom-3 pan pixel
+    * and the zoom-2 parent value `v2` under nearest upsampling (`px`). */
+  private val panPixelsSql =
+    """px AS (
+           SELECT t.tx, t.ty, i.i AS i,
+             (t.tx*131 + t.ty*173 + (i.i % 64)*7 + (i.i // 64)*11 + 3) % 256 AS pan,
+             ((t.tx // 2)*131 + (t.ty // 2)*173
+               + ((t.tx % 2)*32 + (i.i % 64) // 2)*7
+               + ((t.ty % 2)*32 + (i.i // 64) // 2)*11 + 2) % 256 AS v2
+           FROM (SELECT gx.x AS tx, gy.y AS ty
+                 FROM generate_series(0, 15) gx(x), generate_series(0, 7) gy(y)) t,
+                generate_series(0, 4095) i(i))"""
+
+  /** Shared polygonize oracle fragment (q33, q114, q173): the zoom-2
+    * synthetic grid's pixels `(gx, gy, v)` (`px`). */
+  private val maskPixelsSql =
+    """px AS (
+           SELECT (t.tx * 8 + i.i % 8) AS gx, (t.ty * 8 + i.i // 8) AS gy,
+                  (t.tx*131 + t.ty*173 + (i.i % 8)*7 + (i.i // 8)*11) % 16 AS v
+           FROM (SELECT gx.x AS tx, gy.y AS ty
+                 FROM generate_series(0, 7) gx(x), generate_series(0, 3) gy(y)) t,
+                generate_series(0, 63) i(i))"""
+
+  /** Shared connected-components oracle fragment (q33, q114, q173, q200):
+    * each node's label is the least node id that reaches it over
+    * `edges`, by recursive transitive closure (`lbl`). */
+  private val minLabelSql =
+    """reach AS (
+           WITH RECURSIVE r(id, root) AS (
+             SELECT id, id FROM nodes
+             UNION
+             SELECT e.a, r.root FROM r JOIN edges e ON e.b = r.id WHERE r.root < e.a
+           ) SELECT * FROM r),
+         lbl AS (SELECT id, min(root) AS label FROM reach GROUP BY id)"""
+
+  /** Shared raster oracle fragment (q66, q68, q70, q71, q133, q176): the
+    * closed-form zoom-3 band pixels `(tx, ty, i, v)` (`px`). */
+  private val zoom3PixelsSql =
+    """tiles AS (
+           SELECT gx.x AS tx, gy.y AS ty FROM generate_series(0, 15) gx(x), generate_series(0, 7) gy(y)),
+         px AS (
+           SELECT t.tx, t.ty, i.i AS i,
+             (t.tx*131 + t.ty*173 + (i.i % 64)*7 + (i.i // 64)*11 + 3) % 256 AS v
+           FROM tiles t, generate_series(0, 4095) i(i))"""
+
+  /** The gdal_retile oracle (q129, q204): 160x96 output tiles at stride
+    * `sx` x `sy` over the 1024x512 zoom-3 mosaic, tile columns
+    * 0..`lastTx` and rows 0..`lastTy`, edge tiles clipped to the mosaic;
+    * one checksum per output tile. */
+  private def retileSql(lastTx: Int, lastTy: Int, sx: Int, sy: Int): String =
+    s"""WITH ot AS (
+           SELECT gx.x AS otx, gy.y AS oty
+           FROM generate_series(0, $lastTx) gx(x), generate_series(0, $lastTy) gy(y)),
+         dims AS (
+           SELECT otx, oty, least(160, 1024 - otx * $sx) AS w,
+             least(96, 512 - oty * $sy) AS h FROM ot),
+         px AS (
+           SELECT otx, oty, w, h, i.i AS i,
+             otx * $sx + (i.i % w) AS gx, oty * $sy + (i.i // w) AS gy
+           FROM dims, generate_series(0, 15359) i(i) WHERE i.i < w * h),
+         vals AS (
+           SELECT otx, oty, w, h, i,
+             ((gx // 64) * 131 + (gy // 64) * 173 + (gx % 64) * 7
+              + (gy % 64) * 11 + 3) % 256 AS v
+           FROM px)
+         SELECT CAST(otx AS BIGINT) AS tx, CAST(oty AS BIGINT) AS ty,
+           CAST(w AS INT) AS w, CAST(h AS INT) AS h,
+           CAST(sum(CAST(v AS BIGINT) * (i % 49 + 1)) % 65535 AS INT) AS cks
+         FROM vals GROUP BY 1, 2, 3, 4"""
+
+  /** Shared rasterize oracle fragment (q17, q119, q130): the q17 box set,
+    * the zoom-4 tile and pixel size (`res`), and every tile each box
+    * touches with its west/north corner (`cover`); `burn` carries the
+    * box's burn value. */
+  private def rasterCoverSql(burn: Boolean): String = {
+    val burnCol = if (burn) "(b.box_id % 97 + 1) AS burn, " else ""
+    s"""boxes AS (SELECT * FROM ($boxesSql) WHERE box_id % 7 = 0),
+         res AS (SELECT 11.25 AS res, 11.25/64 AS pres),
+         cover AS (
+           SELECT b.box_id, ${burnCol}t.tx, t.ty,
+             -180.0 + t.tx * r.res AS west, 90.0 - t.ty * r.res AS north, r.pres
+           FROM boxes b, res r,
+             (SELECT gx.x AS tx, gy.y AS ty
+                FROM generate_series(0, 31) gx(x), generate_series(0, 15) gy(y)) t
+           WHERE t.tx BETWEEN CAST(least(greatest(floor((b.xmin+180.0)/360.0*32),0),31) AS BIGINT)
+                          AND CAST(least(greatest(floor((b.xmax+180.0)/360.0*32),0),31) AS BIGINT)
+             AND t.ty BETWEEN CAST(least(greatest(floor((90.0-b.ymax)/180.0*16),0),15) AS BIGINT)
+                          AND CAST(least(greatest(floor((90.0-b.ymin)/180.0*16),0),15) AS BIGINT))"""
+  }
+
+  /** [[rasterCoverSql]] plus the scanline-parity pixel runs of each box
+    * in each covered tile (`runs`), as core.Scanline computes them. */
+  private def rasterRunsSql(burn: Boolean): String = {
+    val burnCol = if (burn) "c.burn, " else ""
+    s"""${rasterCoverSql(burn)},
+         runs AS (
+           SELECT c.tx, c.ty, ${burnCol}py.py AS py,
+             greatest(CAST(ceil((b.xmin - c.west)/c.pres - 0.5) AS BIGINT), 0) AS xs,
+             least(CAST(ceil((b.xmax - c.west)/c.pres - 0.5) AS BIGINT), 64) AS xe
+           FROM cover c JOIN boxes b ON b.box_id = c.box_id,
+             generate_series(0, 63) py(py)
+           WHERE (py.py + 0.5) >= (c.north - b.ymax)/c.pres
+             AND (py.py + 0.5) <  (c.north - b.ymin)/c.pres)"""
+  }
+
   def oracleSql: Map[String, String] = Map(
     "q01_agg_filter" ->
       """SELECT l_returnflag, l_linestatus,
@@ -6864,26 +6557,7 @@ object SparkEntry {
       // scanline-parity runs computed arithmetically per (box, tile) with
       // the same FP op order as core.Scanline (see comment there); ADD
       // merge; checksum = sum(v * (i%49+1)) % 65535 over the 64x64 tile
-      s"""WITH boxes AS (SELECT * FROM ($boxesSql) WHERE box_id % 7 = 0),
-         res AS (SELECT 11.25 AS res, 11.25/64 AS pres),
-         cover AS (
-           SELECT b.box_id, (b.box_id % 97 + 1) AS burn, t.tx, t.ty,
-             -180.0 + t.tx * r.res AS west, 90.0 - t.ty * r.res AS north, r.pres
-           FROM boxes b, res r,
-             (SELECT gx.x AS tx, gy.y AS ty
-                FROM generate_series(0, 31) gx(x), generate_series(0, 15) gy(y)) t
-           WHERE t.tx BETWEEN CAST(least(greatest(floor((b.xmin+180.0)/360.0*32),0),31) AS BIGINT)
-                          AND CAST(least(greatest(floor((b.xmax+180.0)/360.0*32),0),31) AS BIGINT)
-             AND t.ty BETWEEN CAST(least(greatest(floor((90.0-b.ymax)/180.0*16),0),15) AS BIGINT)
-                          AND CAST(least(greatest(floor((90.0-b.ymin)/180.0*16),0),15) AS BIGINT)),
-         runs AS (
-           SELECT c.tx, c.ty, c.burn, py.py AS py,
-             greatest(CAST(ceil((b.xmin - c.west)/c.pres - 0.5) AS BIGINT), 0) AS xs,
-             least(CAST(ceil((b.xmax - c.west)/c.pres - 0.5) AS BIGINT), 64) AS xe
-           FROM cover c JOIN boxes b ON b.box_id = c.box_id,
-             generate_series(0, 63) py(py)
-           WHERE (py.py + 0.5) >= (c.north - b.ymax)/c.pres
-             AND (py.py + 0.5) <  (c.north - b.ymin)/c.pres),
+      s"""WITH ${rasterRunsSql(burn = true)},
          px AS (
            SELECT r.tx, r.ty, (r.py*64 + x.x) AS i, r.burn
            FROM runs r, generate_series(0, 63) x(x)
@@ -6899,18 +6573,7 @@ object SparkEntry {
       // px/py ranges by floor((edge - origin)/pres), never ambiguous (the
       // 2^-12 edge offset keeps every edge >= 1/720 px from pixel bounds);
       // MAX merge across overlapping boxes, checksum per tile
-      s"""WITH boxes AS (SELECT * FROM ($boxesSql) WHERE box_id % 7 = 0),
-         res AS (SELECT 11.25 AS res, 11.25/64 AS pres),
-         cover AS (
-           SELECT b.box_id, (b.box_id % 97 + 1) AS burn, t.tx, t.ty,
-             -180.0 + t.tx * r.res AS west, 90.0 - t.ty * r.res AS north, r.pres
-           FROM boxes b, res r,
-             (SELECT gx.x AS tx, gy.y AS ty
-                FROM generate_series(0, 31) gx(x), generate_series(0, 15) gy(y)) t
-           WHERE t.tx BETWEEN CAST(least(greatest(floor((b.xmin+180.0)/360.0*32),0),31) AS BIGINT)
-                          AND CAST(least(greatest(floor((b.xmax+180.0)/360.0*32),0),31) AS BIGINT)
-             AND t.ty BETWEEN CAST(least(greatest(floor((90.0-b.ymax)/180.0*16),0),15) AS BIGINT)
-                          AND CAST(least(greatest(floor((90.0-b.ymin)/180.0*16),0),15) AS BIGINT)),
+      s"""WITH ${rasterCoverSql(burn = true)},
          pxr AS (
            SELECT c.tx, c.ty, c.burn,
              greatest(CAST(floor((b.xmin - c.west)/c.pres) AS BIGINT), 0) AS px0,
@@ -6931,26 +6594,7 @@ object SparkEntry {
       // the q17 coverage chain (burn-free), complemented over the FULL
       // zoom-4 universe: uncovered pixels take 5, covered 0, every one
       // of the 512 tiles emits a checksum (all-burn when untouched)
-      s"""WITH boxes AS (SELECT * FROM ($boxesSql) WHERE box_id % 7 = 0),
-         res AS (SELECT 11.25 AS res, 11.25/64 AS pres),
-         cover AS (
-           SELECT b.box_id, t.tx, t.ty,
-             -180.0 + t.tx * r.res AS west, 90.0 - t.ty * r.res AS north, r.pres
-           FROM boxes b, res r,
-             (SELECT gx.x AS tx, gy.y AS ty
-                FROM generate_series(0, 31) gx(x), generate_series(0, 15) gy(y)) t
-           WHERE t.tx BETWEEN CAST(least(greatest(floor((b.xmin+180.0)/360.0*32),0),31) AS BIGINT)
-                          AND CAST(least(greatest(floor((b.xmax+180.0)/360.0*32),0),31) AS BIGINT)
-             AND t.ty BETWEEN CAST(least(greatest(floor((90.0-b.ymax)/180.0*16),0),15) AS BIGINT)
-                          AND CAST(least(greatest(floor((90.0-b.ymin)/180.0*16),0),15) AS BIGINT)),
-         runs AS (
-           SELECT c.tx, c.ty, py.py AS py,
-             greatest(CAST(ceil((b.xmin - c.west)/c.pres - 0.5) AS BIGINT), 0) AS xs,
-             least(CAST(ceil((b.xmax - c.west)/c.pres - 0.5) AS BIGINT), 64) AS xe
-           FROM cover c JOIN boxes b ON b.box_id = c.box_id,
-             generate_series(0, 63) py(py)
-           WHERE (py.py + 0.5) >= (c.north - b.ymax)/c.pres
-             AND (py.py + 0.5) <  (c.north - b.ymin)/c.pres),
+      s"""WITH ${rasterRunsSql(burn = false)},
          covpx AS (
            SELECT DISTINCT r.tx, r.ty, (r.py*64 + x.x) AS i
            FROM runs r, generate_series(0, 63) x(x)
@@ -7111,47 +6755,10 @@ object SparkEntry {
            CAST(ceil(xmax / 0.375) - floor(xmin / 0.375) AS BIGINT) AS nx,
            CAST(ceil(ymax / 0.375) - floor(ymin / 0.375) AS BIGINT) AS ny
          FROM boxes""",
-    "q129_retile" ->
-      """WITH ot AS (
-           SELECT gx.x AS otx, gy.y AS oty
-           FROM generate_series(0, 6) gx(x), generate_series(0, 5) gy(y)),
-         dims AS (
-           SELECT otx, oty, least(160, 1024 - otx * 160) AS w,
-             least(96, 512 - oty * 96) AS h FROM ot),
-         px AS (
-           SELECT otx, oty, w, h, i.i AS i,
-             otx * 160 + (i.i % w) AS gx, oty * 96 + (i.i // w) AS gy
-           FROM dims, generate_series(0, 15359) i(i) WHERE i.i < w * h),
-         vals AS (
-           SELECT otx, oty, w, h, i,
-             ((gx // 64) * 131 + (gy // 64) * 173 + (gx % 64) * 7
-              + (gy % 64) * 11 + 3) % 256 AS v
-           FROM px)
-         SELECT CAST(otx AS BIGINT) AS tx, CAST(oty AS BIGINT) AS ty,
-           CAST(w AS INT) AS w, CAST(h AS INT) AS h,
-           CAST(sum(CAST(v AS BIGINT) * (i % 49 + 1)) % 65535 AS INT) AS cks
-         FROM vals GROUP BY 1, 2, 3, 4""",
+    "q129_retile" -> retileSql(6, 5, 160, 96),
     "q204_retile_overlap" ->
       // q129's closed-form replay with stride 144/80 (size - overlap)
-      """WITH ot AS (
-           SELECT gx.x AS otx, gy.y AS oty
-           FROM generate_series(0, 7) gx(x), generate_series(0, 6) gy(y)),
-         dims AS (
-           SELECT otx, oty, least(160, 1024 - otx * 144) AS w,
-             least(96, 512 - oty * 80) AS h FROM ot),
-         px AS (
-           SELECT otx, oty, w, h, i.i AS i,
-             otx * 144 + (i.i % w) AS gx, oty * 80 + (i.i // w) AS gy
-           FROM dims, generate_series(0, 15359) i(i) WHERE i.i < w * h),
-         vals AS (
-           SELECT otx, oty, w, h, i,
-             ((gx // 64) * 131 + (gy // 64) * 173 + (gx % 64) * 7
-              + (gy % 64) * 11 + 3) % 256 AS v
-           FROM px)
-         SELECT CAST(otx AS BIGINT) AS tx, CAST(oty AS BIGINT) AS ty,
-           CAST(w AS INT) AS w, CAST(h AS INT) AS h,
-           CAST(sum(CAST(v AS BIGINT) * (i % 49 + 1)) % 65535 AS INT) AS cks
-         FROM vals GROUP BY 1, 2, 3, 4""",
+      retileSql(7, 6, 144, 80),
     "q21_grid_metrics" ->
       s"""WITH pts AS ($ptsSql)
          SELECT CAST(least(greatest(floor((lon + 180.0) / 360.0 * 128), 0), 127) AS BIGINT) AS tx,
@@ -7408,36 +7015,16 @@ object SparkEntry {
     "q184_lm_surprisal" ->
       // the q147 token/idf integer laws re-aimed at per-doc scoring:
       // surprisal surrogate = (total·1000) // cnt, doc score = floor mean
-      """WITH toks AS (
-           SELECT doc_id,
-             unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term
-           FROM documents),
-         t2 AS (SELECT doc_id, term FROM toks WHERE term <> ''),
-         model AS (SELECT term, count(*) AS cnt FROM t2 GROUP BY 1),
-         tot AS (SELECT sum(cnt) AS total FROM model),
-         sc AS (
-           SELECT t2.doc_id, count(*) AS n_tokens,
-             sum((tot.total * 1000) // model.cnt) AS surp_sum
-           FROM t2 JOIN model USING (term), tot
-           GROUP BY 1)
+      s"""WITH $tokensSql,
+         $surprisalSql
          SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
            CAST(surp_sum // n_tokens AS BIGINT) AS score_milli
          FROM sc""",
     "q205_ccnet_buckets" ->
       // q184's surprisal replica, then per-lang tercile THRESHOLDS from
       // the (lang, score) histogram; ties stay in the lower bucket
-      """WITH toks AS (
-           SELECT doc_id,
-             unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term
-           FROM documents),
-         t2 AS (SELECT doc_id, term FROM toks WHERE term <> ''),
-         model AS (SELECT term, count(*) AS cnt FROM t2 GROUP BY 1),
-         tot AS (SELECT sum(cnt) AS total FROM model),
-         sc AS (
-           SELECT t2.doc_id, count(*) AS n_tokens,
-             sum((tot.total * 1000) // model.cnt) AS surp_sum
-           FROM t2 JOIN model USING (term), tot
-           GROUP BY 1),
+      s"""WITH $tokensSql,
+         $surprisalSql,
          scored AS (
            SELECT s.doc_id, d.lang, CAST(s.surp_sum // s.n_tokens AS BIGINT) AS score_milli
            FROM sc s JOIN documents d USING (doc_id)),
@@ -7662,12 +7249,7 @@ object SparkEntry {
     "q173_contour_polygons" ->
       // q33's transitive closure with a band (lvl) column: edges connect
       // only same-band neighbors, components keyed (lvl, label)
-      """WITH px AS (
-           SELECT (t.tx * 8 + i.i % 8) AS gx, (t.ty * 8 + i.i // 8) AS gy,
-                  (t.tx*131 + t.ty*173 + (i.i % 8)*7 + (i.i // 8)*11) % 16 AS v
-           FROM (SELECT gx.x AS tx, gy.y AS ty
-                 FROM generate_series(0, 7) gx(x), generate_series(0, 3) gy(y)) t,
-                generate_series(0, 63) i(i)),
+      s"""WITH $maskPixelsSql,
          nodes AS (
            SELECT gx, gy, gy * 64 + gx AS id,
              CAST(CASE WHEN v < 4 THEN 0 WHEN v < 8 THEN 1
@@ -7681,13 +7263,7 @@ object SparkEntry {
            SELECT b.id AS a, a.id AS b FROM nodes a JOIN nodes b
              ON a.lvl = b.lvl AND
                 ((b.gx = a.gx + 1 AND b.gy = a.gy) OR (b.gx = a.gx AND b.gy = a.gy + 1))),
-         reach AS (
-           WITH RECURSIVE r(id, root) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.a, r.root FROM r JOIN edges e ON e.b = r.id WHERE r.root < e.a
-           ) SELECT * FROM r),
-         lbl AS (SELECT id, min(root) AS label FROM reach GROUP BY id)
+         $minLabelSql
          SELECT n.lvl, l.label, count(*) AS n_pixels,
            min(n.gx) AS min_gx, max(n.gx) AS max_gx,
            min(n.gy) AS min_gy, max(n.gy) AS max_gy
@@ -7934,12 +7510,7 @@ object SparkEntry {
     "q33_polygonize_comps" ->
       // connected components of the synthetic mask (v < 7) on the zoom-2
       // 8x8-tile grid via recursive transitive closure; label = min pixel id
-      """WITH px AS (
-           SELECT (t.tx * 8 + i.i % 8) AS gx, (t.ty * 8 + i.i // 8) AS gy,
-                  (t.tx*131 + t.ty*173 + (i.i % 8)*7 + (i.i // 8)*11) % 16 AS v
-           FROM (SELECT gx.x AS tx, gy.y AS ty
-                 FROM generate_series(0, 7) gx(x), generate_series(0, 3) gy(y)) t,
-                generate_series(0, 63) i(i)),
+      s"""WITH $maskPixelsSql,
          nodes AS (SELECT gx, gy, gy * 64 + gx AS id FROM px WHERE v < 7),
          edges AS (
            SELECT a.id AS a, b.id AS b FROM nodes a JOIN nodes b
@@ -7947,13 +7518,7 @@ object SparkEntry {
            UNION ALL
            SELECT b.id AS a, a.id AS b FROM nodes a JOIN nodes b
              ON (b.gx = a.gx + 1 AND b.gy = a.gy) OR (b.gx = a.gx AND b.gy = a.gy + 1)),
-         reach AS (
-           WITH RECURSIVE r(id, root) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.a, r.root FROM r JOIN edges e ON e.b = r.id WHERE r.root < e.a
-           ) SELECT * FROM r),
-         lbl AS (SELECT id, min(root) AS label FROM reach GROUP BY id)
+         $minLabelSql
          SELECT l.label, count(*) AS n_pixels,
            min(n.gx) AS min_gx, max(n.gx) AS max_gx,
            min(n.gy) AS min_gy, max(n.gy) AS max_gy
@@ -7961,7 +7526,7 @@ object SparkEntry {
     "q200_footprint" ->
       // the q33 closure restricted to SAME-TILE edges (scenes are
       // independent), valid mask v >= 8, bbox georeferenced at 5.625°/px
-      """WITH px AS (
+      s"""WITH px AS (
            SELECT t.tx AS tx, t.ty AS ty,
                   (t.tx * 8 + i.i % 8) AS gx, (t.ty * 8 + i.i // 8) AS gy,
                   (t.tx*131 + t.ty*173 + (i.i % 8)*7 + (i.i // 8)*11) % 16 AS v
@@ -7977,13 +7542,7 @@ object SparkEntry {
            SELECT b.id AS a, a.id AS b FROM nodes a JOIN nodes b
              ON a.tx = b.tx AND a.ty = b.ty
             AND ((b.gx = a.gx + 1 AND b.gy = a.gy) OR (b.gx = a.gx AND b.gy = a.gy + 1))),
-         reach AS (
-           WITH RECURSIVE r(id, root) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.a, r.root FROM r JOIN edges e ON e.b = r.id WHERE r.root < e.a
-           ) SELECT * FROM r),
-         lbl AS (SELECT id, min(root) AS label FROM reach GROUP BY id)
+         $minLabelSql
          SELECT CAST(n.tx AS BIGINT) AS tx, CAST(n.ty AS BIGINT) AS ty,
            CAST(l.label AS BIGINT) AS label, count(*) AS n_pixels,
            -180.0 + min(n.gx) * 5.625 AS lon_min,
@@ -7996,12 +7555,7 @@ object SparkEntry {
       // the q33 closure with the two diagonal adjacency offsets added —
       // 8-connected components (the reverse UNION ALL covers the other
       // two diagonal directions)
-      """WITH px AS (
-           SELECT (t.tx * 8 + i.i % 8) AS gx, (t.ty * 8 + i.i // 8) AS gy,
-                  (t.tx*131 + t.ty*173 + (i.i % 8)*7 + (i.i // 8)*11) % 16 AS v
-           FROM (SELECT gx.x AS tx, gy.y AS ty
-                 FROM generate_series(0, 7) gx(x), generate_series(0, 3) gy(y)) t,
-                generate_series(0, 63) i(i)),
+      s"""WITH $maskPixelsSql,
          nodes AS (SELECT gx, gy, gy * 64 + gx AS id FROM px WHERE v < 3),
          edges AS (
            SELECT a.id AS a, b.id AS b FROM nodes a JOIN nodes b
@@ -8011,13 +7565,7 @@ object SparkEntry {
            SELECT b.id AS a, a.id AS b FROM nodes a JOIN nodes b
              ON (b.gx = a.gx + 1 AND b.gy = a.gy) OR (b.gx = a.gx AND b.gy = a.gy + 1)
              OR (b.gx = a.gx + 1 AND b.gy = a.gy + 1) OR (b.gx = a.gx + 1 AND b.gy = a.gy - 1)),
-         reach AS (
-           WITH RECURSIVE r(id, root) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.a, r.root FROM r JOIN edges e ON e.b = r.id WHERE r.root < e.a
-           ) SELECT * FROM r),
-         lbl AS (SELECT id, min(root) AS label FROM reach GROUP BY id)
+         $minLabelSql
          SELECT l.label, count(*) AS n_pixels,
            min(n.gx) AS min_gx, max(n.gx) AS max_gx,
            min(n.gy) AS min_gy, max(n.gy) AS max_gy
@@ -8331,11 +7879,7 @@ object SparkEntry {
          FROM documents""",
     "q147_tfidf_topk" ->
       // same integer score law and (score desc, term asc) total order
-      """WITH toks AS (
-           SELECT doc_id,
-             unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term
-           FROM documents),
-         t2 AS (SELECT doc_id, term FROM toks WHERE term <> ''),
+      s"""WITH $tokensSql,
          tf AS (SELECT doc_id, term, count(*) AS tf FROM t2 GROUP BY 1, 2),
          dfp AS (SELECT term, count(DISTINCT doc_id) AS df FROM t2 GROUP BY 1),
          n AS (SELECT count(*) AS n FROM documents),
@@ -8374,11 +7918,7 @@ object SparkEntry {
     "q212_vocab_oov" ->
       // q147's token law; top-256 vocab cut by (cnt desc, term asc); the
       // per-doc OOV census with exact-integer 1000·oov//n rate
-      """WITH toks AS (
-           SELECT doc_id,
-             unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term
-           FROM documents),
-         t2 AS (SELECT doc_id, term FROM toks WHERE term <> ''),
+      s"""WITH $tokensSql,
          vocab AS (
            SELECT term FROM (SELECT term, count(*) AS cnt FROM t2 GROUP BY 1)
            ORDER BY cnt DESC, term ASC LIMIT 256),
@@ -8473,17 +8013,7 @@ object SparkEntry {
     "q150_grid_idw_p1" ->
       // q56's chain with w = 2^30 // isqrt(d2); floor(sqrt) provably
       // exact for d2 <= 2^26 (see query comment)
-      s"""WITH pts AS ($ptsSql),
-         ip AS (
-           SELECT CAST(l_quantity AS BIGINT) AS v,
-             CAST((lon + 180.0) * 1024 AS BIGINT) AS ix,
-             CAST((90.0 - lat) * 1024 AS BIGINT) AS iy
-           FROM pts),
-         cand AS (
-           SELECT (p.ix // 5760 + dx.d) AS tx, (p.iy // 5760 + dy.d) AS ty, p.v, p.ix, p.iy
-           FROM ip p, generate_series(-2, 2) dx(d), generate_series(-2, 2) dy(d)
-           WHERE (p.ix // 5760 + dx.d) BETWEEN 0 AND 63
-             AND (p.iy // 5760 + dy.d) BETWEEN 0 AND 31),
+      s"""WITH $gridCandSql,
          wtd AS (
            SELECT tx, ty, v,
              1073741824 // greatest(CAST(floor(sqrt(CAST(
@@ -8544,16 +8074,7 @@ object SparkEntry {
       // payloads from the generating arithmetic, string_agg in the docs()
       // span order (line_no, part_key, supp_key — a proven-unique key),
       // then the q31 rolling hash over the normalized render
-      s"""WITH pts AS ($ptsSql),
-         sp AS (
-           SELECT doc_key, line_no, part_key, supp_key,
-             CASE WHEN line_no % 4 <> 0 THEN printf('POINT(%.10f %.10f)', lon, lat)
-             ELSE '<media:tile://8/'
-               || CAST(CAST(floor((lon + 180.0) / 360.0 * 512) AS BIGINT) AS VARCHAR)
-               || '/'
-               || CAST(CAST(floor((90.0 - lat) / 180.0 * 256) AS BIGINT) AS VARCHAR)
-               || '/1>' END AS payload
-           FROM pts),
+      s"""WITH $docPayloadSql,
          r AS (
            SELECT doc_key,
              string_agg(payload, ' ' ORDER BY line_no, part_key, supp_key) AS render
@@ -8739,15 +8260,7 @@ object SparkEntry {
       // v2 is the zoom-2 parent pixel under nearest upsampling; Brovey in
       // integer deci units (scale 10 — see query comment), checksum per
       // (band, tile)
-      """WITH px AS (
-           SELECT t.tx, t.ty, i.i AS i,
-             (t.tx*131 + t.ty*173 + (i.i % 64)*7 + (i.i // 64)*11 + 3) % 256 AS pan,
-             ((t.tx // 2)*131 + (t.ty // 2)*173
-               + ((t.tx % 2)*32 + (i.i % 64) // 2)*7
-               + ((t.ty % 2)*32 + (i.i // 64) // 2)*11 + 2) % 256 AS v2
-           FROM (SELECT gx.x AS tx, gy.y AS ty
-                 FROM generate_series(0, 15) gx(x), generate_series(0, 7) gy(y)) t,
-                generate_series(0, 4095) i(i)),
+      s"""WITH $panPixelsSql,
          b AS (
            SELECT tx, ty, i, pan, bb.b AS band,
              (v2 * bb.b + bb.b * 17) % 256 AS ms,
@@ -8762,15 +8275,7 @@ object SparkEntry {
          FROM o GROUP BY 1, 2, 3""",
     "q137_pansharpen_weights" ->
       // q62's chain with den = ms1 + 2*ms2 + ms3 and factor Σw·scale = 40
-      """WITH px AS (
-           SELECT t.tx, t.ty, i.i AS i,
-             (t.tx*131 + t.ty*173 + (i.i % 64)*7 + (i.i // 64)*11 + 3) % 256 AS pan,
-             ((t.tx // 2)*131 + (t.ty // 2)*173
-               + ((t.tx % 2)*32 + (i.i % 64) // 2)*7
-               + ((t.ty % 2)*32 + (i.i // 64) // 2)*11 + 2) % 256 AS v2
-           FROM (SELECT gx.x AS tx, gy.y AS ty
-                 FROM generate_series(0, 15) gx(x), generate_series(0, 7) gy(y)) t,
-                generate_series(0, 4095) i(i)),
+      s"""WITH $panPixelsSql,
          b AS (
            SELECT tx, ty, i, pan, bb.b AS band,
              (v2 * bb.b + bb.b * 17) % 256 AS ms,
@@ -8865,12 +8370,7 @@ object SparkEntry {
          FROM body""",
     "q70_pct2rgb" ->
       // round-trip is exact, so the oracle checksums the ORIGINAL bands
-      """WITH tiles AS (
-           SELECT gx.x AS tx, gy.y AS ty FROM generate_series(0, 15) gx(x), generate_series(0, 7) gy(y)),
-         px AS (
-           SELECT t.tx, t.ty, i.i AS i,
-             (t.tx*131 + t.ty*173 + (i.i % 64)*7 + (i.i // 64)*11 + 3) % 256 AS v
-           FROM tiles t, generate_series(0, 4095) i(i)),
+      s"""WITH $zoom3PixelsSql,
          chan AS (
            SELECT tx, ty, i, 1 AS band, v AS val FROM px
            UNION ALL SELECT tx, ty, i, 2, (v*2 + 5) % 256 FROM px
@@ -8891,24 +8391,14 @@ object SparkEntry {
       // the PNG round-trip is lossless, so the oracle is the plain
       // closed-form checksum of the pre-encode pixels — any codec defect
       // (bit depth, row order, palette surprise) breaks the hash
-      """WITH tiles AS (
-           SELECT gx.x AS tx, gy.y AS ty FROM generate_series(0, 15) gx(x), generate_series(0, 7) gy(y)),
-         px AS (
-           SELECT t.tx, t.ty, i.i AS i,
-             (t.tx*131 + t.ty*173 + (i.i % 64)*7 + (i.i // 64)*11 + 3) % 256 AS v
-           FROM tiles t, generate_series(0, 4095) i(i))
+      s"""WITH $zoom3PixelsSql
          SELECT CAST(tx AS BIGINT) AS tx, CAST(ty AS BIGINT) AS ty,
            CAST(sum(CAST(v AS BIGINT) * (i % 49 + 1)) % 65535 AS INT) AS cks
          FROM px GROUP BY 1, 2""",
     "q71_tiff_roundtrip" ->
       // TIFF is also lossless, so the oracle is identical to q68's:
       // the closed-form checksum of the pre-encode pixels
-      """WITH tiles AS (
-           SELECT gx.x AS tx, gy.y AS ty FROM generate_series(0, 15) gx(x), generate_series(0, 7) gy(y)),
-         px AS (
-           SELECT t.tx, t.ty, i.i AS i,
-             (t.tx*131 + t.ty*173 + (i.i % 64)*7 + (i.i // 64)*11 + 3) % 256 AS v
-           FROM tiles t, generate_series(0, 4095) i(i))
+      s"""WITH $zoom3PixelsSql
          SELECT CAST(tx AS BIGINT) AS tx, CAST(ty AS BIGINT) AS ty,
            CAST(sum(CAST(v AS BIGINT) * (i % 49 + 1)) % 65535 AS INT) AS cks
          FROM px GROUP BY 1, 2""",
@@ -8916,12 +8406,7 @@ object SparkEntry {
       // hand-derived per-segment constants (NOT generated by the engine's
       // helper): R/G/B CASE chains over the closed-form zoom-3 pixels,
       // round-half-up via (2*d*|dc| + de) // (2*de) with baked signs
-      """WITH tiles AS (
-           SELECT gx.x AS tx, gy.y AS ty FROM generate_series(0, 15) gx(x), generate_series(0, 7) gy(y)),
-         px AS (
-           SELECT t.tx, t.ty, i.i AS i,
-             (t.tx*131 + t.ty*173 + (i.i % 64)*7 + (i.i // 64)*11 + 3) % 256 AS v
-           FROM tiles t, generate_series(0, 4095) i(i)),
+      s"""WITH $zoom3PixelsSql,
          chan AS (
            SELECT tx, ty, i, 1 AS band,
              CASE WHEN v < 64 THEN 0
@@ -8950,12 +8435,7 @@ object SparkEntry {
       // pixel jointly), shade from its own law, then the HSV value-replace
       // collapse out = c*shade // max(r,g,b) (max>0 over this ramp, the
       // vmax=0 guard is structurally dead here)
-      """WITH tiles AS (
-           SELECT gx.x AS tx, gy.y AS ty FROM generate_series(0, 15) gx(x), generate_series(0, 7) gy(y)),
-         px AS (
-           SELECT t.tx, t.ty, i.i AS i,
-             (t.tx*131 + t.ty*173 + (i.i % 64)*7 + (i.i // 64)*11 + 3) % 256 AS v
-           FROM tiles t, generate_series(0, 4095) i(i)),
+      s"""WITH $zoom3PixelsSql,
          chan AS (
            SELECT tx, ty, i,
              CASE WHEN v < 64 THEN 0
@@ -8987,12 +8467,7 @@ object SparkEntry {
       // hand-derived integer thresholds (v <= floor(midpoint)) — NOT the
       // engine's 2v < e_i+e_{i+1} form — per channel over the closed-form
       // zoom-3 pixels
-      """WITH tiles AS (
-           SELECT gx.x AS tx, gy.y AS ty FROM generate_series(0, 15) gx(x), generate_series(0, 7) gy(y)),
-         px AS (
-           SELECT t.tx, t.ty, i.i AS i,
-             (t.tx*131 + t.ty*173 + (i.i % 64)*7 + (i.i // 64)*11 + 3) % 256 AS v
-           FROM tiles t, generate_series(0, 4095) i(i)),
+      s"""WITH $zoom3PixelsSql,
          chan AS (
            SELECT tx, ty, i, 1 AS band,
              CASE WHEN v <= 15 THEN 0 WHEN v <= 63 THEN 0
@@ -9014,17 +8489,7 @@ object SparkEntry {
     "q67_grid_stats" ->
       // same candidate geometry as q56; metrics in pure integers, nearest
       // via arg_min on the packed (d2, v) key
-      s"""WITH pts AS ($ptsSql),
-         ip AS (
-           SELECT CAST(l_quantity AS BIGINT) AS v,
-             CAST((lon + 180.0) * 1024 AS BIGINT) AS ix,
-             CAST((90.0 - lat) * 1024 AS BIGINT) AS iy
-           FROM pts),
-         cand AS (
-           SELECT (p.ix // 5760 + dx.d) AS tx, (p.iy // 5760 + dy.d) AS ty, p.v, p.ix, p.iy
-           FROM ip p, generate_series(-2, 2) dx(d), generate_series(-2, 2) dy(d)
-           WHERE (p.ix // 5760 + dx.d) BETWEEN 0 AND 63
-             AND (p.iy // 5760 + dy.d) BETWEEN 0 AND 31),
+      s"""WITH $gridCandSql,
          wtd AS (
            SELECT tx, ty, v,
              (ix - (tx*5760 + 2880))*(ix - (tx*5760 + 2880))
@@ -9038,17 +8503,7 @@ object SparkEntry {
     "q138_grid_ellipse" ->
       // q67's candidate chain gated by the exact-integer ellipse
       // dx^2*4096^2 + dy^2*8192^2 <= 8192^2*4096^2 (rx 8deg, ry 4deg)
-      s"""WITH pts AS ($ptsSql),
-         ip AS (
-           SELECT CAST(l_quantity AS BIGINT) AS v,
-             CAST((lon + 180.0) * 1024 AS BIGINT) AS ix,
-             CAST((90.0 - lat) * 1024 AS BIGINT) AS iy
-           FROM pts),
-         cand AS (
-           SELECT (p.ix // 5760 + dx.d) AS tx, (p.iy // 5760 + dy.d) AS ty, p.v, p.ix, p.iy
-           FROM ip p, generate_series(-2, 2) dx(d), generate_series(-2, 2) dy(d)
-           WHERE (p.ix // 5760 + dx.d) BETWEEN 0 AND 63
-             AND (p.iy // 5760 + dy.d) BETWEEN 0 AND 31),
+      s"""WITH $gridCandSql,
          wtd AS (
            SELECT tx, ty, v,
              (ix - (tx*5760 + 2880)) AS dx, (iy - (ty*5760 + 2880)) AS dy
@@ -9063,17 +8518,7 @@ object SparkEntry {
       // same fixed-point IDW in pure integers: candidate cells from the
       // point's 5x5 cell neighborhood, exact radius filter, 2^34//d2
       // weights, (num*1000)//den output
-      s"""WITH pts AS ($ptsSql),
-         ip AS (
-           SELECT CAST(l_quantity AS BIGINT) AS v,
-             CAST((lon + 180.0) * 1024 AS BIGINT) AS ix,
-             CAST((90.0 - lat) * 1024 AS BIGINT) AS iy
-           FROM pts),
-         cand AS (
-           SELECT (p.ix // 5760 + dx.d) AS tx, (p.iy // 5760 + dy.d) AS ty, p.v, p.ix, p.iy
-           FROM ip p, generate_series(-2, 2) dx(d), generate_series(-2, 2) dy(d)
-           WHERE (p.ix // 5760 + dx.d) BETWEEN 0 AND 63
-             AND (p.iy // 5760 + dy.d) BETWEEN 0 AND 31),
+      s"""WITH $gridCandSql,
          wtd AS (
            SELECT tx, ty, v,
              (ix - (tx*5760 + 2880))*(ix - (tx*5760 + 2880))
@@ -9084,17 +8529,7 @@ object SparkEntry {
          FROM wtd WHERE d2 <= 67108864 GROUP BY 1, 2""",
     "q141_grid_idw_smoothing" ->
       // q56's chain with the smoothing-squared floor in the weight
-      s"""WITH pts AS ($ptsSql),
-         ip AS (
-           SELECT CAST(l_quantity AS BIGINT) AS v,
-             CAST((lon + 180.0) * 1024 AS BIGINT) AS ix,
-             CAST((90.0 - lat) * 1024 AS BIGINT) AS iy
-           FROM pts),
-         cand AS (
-           SELECT (p.ix // 5760 + dx.d) AS tx, (p.iy // 5760 + dy.d) AS ty, p.v, p.ix, p.iy
-           FROM ip p, generate_series(-2, 2) dx(d), generate_series(-2, 2) dy(d)
-           WHERE (p.ix // 5760 + dx.d) BETWEEN 0 AND 63
-             AND (p.iy // 5760 + dy.d) BETWEEN 0 AND 31),
+      s"""WITH $gridCandSql,
          wtd AS (
            SELECT tx, ty, v,
              (ix - (tx*5760 + 2880))*(ix - (tx*5760 + 2880))
@@ -9158,22 +8593,8 @@ object SparkEntry {
       // same integer BM25 law: k1=5/4, b=3/4 folded to one BIGINT
       // rational per term; idf = truncated 1000·(N−df+0.5)/(df+0.5);
       // (score desc, doc_id asc) total order
-      """WITH toks AS (
-           SELECT doc_id,
-             unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term
-           FROM documents),
-         t2 AS (SELECT doc_id, term FROM toks WHERE term <> ''),
-         st AS (SELECT (SELECT count(*) FROM t2) AS s,
-                       (SELECT count(*) FROM documents) AS n),
-         dl AS (SELECT doc_id, count(*) AS dl FROM t2 GROUP BY 1),
-         q(qid, term) AS (VALUES
-           ('Q1', 'spark'), ('Q1', 'table'),
-           ('Q2', 'hash'), ('Q2', 'join'), ('Q2', 'merge'),
-           ('Q3', 'vector'), ('Q3', 'stream')),
-         rel AS (SELECT doc_id, term FROM t2
-                 WHERE term IN (SELECT DISTINCT term FROM q)),
-         tf AS (SELECT doc_id, term, count(*) AS tf FROM rel GROUP BY 1, 2),
-         dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM rel GROUP BY 1),
+      s"""WITH $tokensSql,
+         $bm25TermsSql,
          sc AS (
            SELECT q.qid, tf.doc_id,
              ((1000 * (2 * (st.n - dfq.df) + 1)) // (2 * dfq.df + 1))
@@ -9239,22 +8660,8 @@ object SparkEntry {
       // both system scores replay their engine laws (q224 BM25 integer
       // rational; q147 tf·idf_milli), rank caps at 20, RRF k = 60,
       // (rrf desc, doc_id asc) total order
-      """WITH toks AS (
-           SELECT doc_id,
-             unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term
-           FROM documents),
-         t2 AS (SELECT doc_id, term FROM toks WHERE term <> ''),
-         st AS (SELECT (SELECT count(*) FROM t2) AS s,
-                       (SELECT count(*) FROM documents) AS n),
-         dl AS (SELECT doc_id, count(*) AS dl FROM t2 GROUP BY 1),
-         q(qid, term) AS (VALUES
-           ('Q1', 'spark'), ('Q1', 'table'),
-           ('Q2', 'hash'), ('Q2', 'join'), ('Q2', 'merge'),
-           ('Q3', 'vector'), ('Q3', 'stream')),
-         rel AS (SELECT doc_id, term FROM t2
-                 WHERE term IN (SELECT DISTINCT term FROM q)),
-         tf AS (SELECT doc_id, term, count(*) AS tf FROM rel GROUP BY 1, 2),
-         dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM rel GROUP BY 1),
+      s"""WITH $tokensSql,
+         $bm25TermsSql,
          base AS (
            SELECT q.qid, tf.doc_id, tf.tf, dl.dl,
              (1000 * (2 * (st.n - dfq.df) + 1)) // (2 * dfq.df + 1) AS idf_milli,
@@ -9363,16 +8770,7 @@ object SparkEntry {
       // q158's span/payload law + role alternation by span ordinal
       // (row_number over the proven-unique order == offset), '' joined;
       // q31 rolling hash over the normalized render
-      s"""WITH pts AS ($ptsSql),
-         sp AS (
-           SELECT doc_key, line_no, part_key, supp_key,
-             CASE WHEN line_no % 4 <> 0 THEN printf('POINT(%.10f %.10f)', lon, lat)
-             ELSE '<media:tile://8/'
-               || CAST(CAST(floor((lon + 180.0) / 360.0 * 512) AS BIGINT) AS VARCHAR)
-               || '/'
-               || CAST(CAST(floor((90.0 - lat) / 180.0 * 256) AS BIGINT) AS VARCHAR)
-               || '/1>' END AS payload
-           FROM pts),
+      s"""WITH $docPayloadSql,
          rn AS (
            SELECT *, row_number() OVER (PARTITION BY doc_key
              ORDER BY line_no, part_key, supp_key) - 1 AS off

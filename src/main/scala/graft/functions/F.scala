@@ -11,10 +11,13 @@ import org.apache.spark.sql.graftshim.Register
   * VRT pixel-function registry frmts/vrt/vrtderivedrasterband.cpp ::
   * GDALAddDerivedBandPixelFunc).
   *
-  * Registration is per-session and idempotent; every public entry point
-  * (operators, SparkEntry.queries) calls ensureRegistered(spark) first, so
-  * the functions exist both for the Column API (via call_function) and for
-  * spark.sql text. */
+  * Registration is per-session and idempotent, and it makes the functions
+  * exist both for the Column API (via call_function) and for spark.sql
+  * text. Who calls ensureRegistered: every operator and Synth input that
+  * uses the functions, for its own caller; SparkEntry.queries, once per
+  * query build (no query builder registers itself), and SparkEntry.entry;
+  * and TestSpark, once for all tests. A session built with
+  * graft.GraftExtensions has the functions from the start. */
 object F {
   private val registered =
     java.util.Collections.synchronizedMap(

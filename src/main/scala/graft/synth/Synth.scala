@@ -81,6 +81,18 @@ object Synth {
     regionWkt(spark, sfDir).select(col("region_id"), F.st_geomfromwkt(col("wkt")).as("geom"))
   }
 
+  /** The rasterize box set of q17, q119 and q130: every 7th [[boxes]] row
+    * with its rectangle parsed as `geom`. */
+  def rasterBoxes(spark: SparkSession, sfDir: String): DataFrame = {
+    F.ensureRegistered(spark)
+    boxes(spark, sfDir)
+      .where(col("box_id") % 7 === 0)
+      .withColumn("geom", F.st_geomfromwkt(format_string(
+        "POLYGON((%.12f %.12f, %.12f %.12f, %.12f %.12f, %.12f %.12f, %.12f %.12f))",
+        col("xmin"), col("ymin"), col("xmax"), col("ymin"),
+        col("xmax"), col("ymax"), col("xmin"), col("ymax"), col("xmin"), col("ymin"))))
+  }
+
   /** kNN query points — one per supplier row. */
   def queryPoints(spark: SparkSession, sfDir: String): DataFrame = {
     val s = spark.read.parquet(s"$sfDir/supplier.parquet")
@@ -226,4 +238,134 @@ object Synth {
         s"CAST((tx*131 + ty*173 + (i % $TileW)*7 + CAST(i / $TileW AS INT)*11 + zoom) % 256 AS DOUBLE))"))
       .select("zoom", "tx", "ty", "band", "w", "h", "pixels")
   }
+
+  /** The pansharpen multispectral bands (q62, q137): band b in 1..3 of
+    * the zoom-2 [[tiles]] with pixels (v·b + 17·b) mod 256. */
+  def panBands(spark: SparkSession): DataFrame =
+    (1 to 3).map { b =>
+      tiles(spark, 2).withColumn("band", lit(b))
+        .withColumn("pixels", expr(s"transform(pixels, v -> (v * $b + $b * 17) % 256)"))
+    }.reduce(_ unionByName _)
+
+  /** Three colour bands of the [[tiles]] at a zoom (q63, q70): v, (2v + 5)
+    * mod 256 and (7v + 11) mod 256, so the grid has exactly 256 distinct
+    * colours. */
+  def rgbBands(spark: SparkSession, zoom: Int): DataFrame =
+    Seq((1, "v"), (2, "(v * 2 + 5) % 256"), (3, "(v * 7 + 11) % 256"))
+      .map { case (b, e) =>
+        tiles(spark, zoom).withColumn("band", lit(b))
+          .withColumn("pixels", expr(s"transform(pixels, v -> $e)"))
+      }.reduce(_ unionByName _)
+
+  /** The shape seeds of the format round-trip queries (q101, q112, q142,
+    * q159, q162, q175, q189, q203, q237, q243): one row per supplier,
+    * `q_id` with an anchor `(ax, ay)` on the quarter lattice and a size
+    * `(w, h)` in halves and units. Each query builds its own WKT from them. */
+  def shapeSeeds(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"$sfDir/supplier.parquet")
+      .select(col("s_suppkey").as("q_id"))
+      .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 4.0D"))
+      .withColumn("ay", expr("CAST((q_id * 104729) % 512 AS DOUBLE)"))
+      .withColumn("w", expr("1.0D + CAST(q_id % 7 AS DOUBLE) / 2.0D"))
+      .withColumn("h", expr("2.0D + CAST(q_id % 5 AS DOUBLE)"))
+
+  /** The dyadic triangles of the line queries (q92, q106, q107): one row
+    * per supplier, `q_id` and three vertices `(ax, ay)`, `(bx, by)`,
+    * `(cx, cy)`, every coordinate a multiple of 2^-6. */
+  def triangles(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"$sfDir/supplier.parquet")
+      .select(col("s_suppkey").as("q_id"))
+      .withColumn("ax", expr("CAST((q_id * 7919) % 1024 AS DOUBLE) / 64.0"))
+      .withColumn("ay", expr("CAST((q_id * 104729) % 1024 AS DOUBLE) / 64.0"))
+      .withColumn("bx", expr("ax + 1.0 + CAST(q_id % 13 AS DOUBLE) / 2.0"))
+      .withColumn("by", expr("ay + CAST(q_id % 7 AS DOUBLE) / 4.0"))
+      .withColumn("cx", expr("bx - CAST(q_id % 5 AS DOUBLE) / 2.0"))
+      .withColumn("cy", expr("by + 2.0 + CAST(q_id % 11 AS DOUBLE) / 8.0"))
+
+  /** The synthetic audio containers of q193/q226: one per supplier,
+    * `(aid, bin)` with `bin` the header bytes 'AUD:nnnn:l:t:' — sample
+    * count 64..192, lead silence 0..6 and tail silence 0..4. The counts
+    * live only in the bytes; the queries decode them back. */
+  def audioClips(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"$sfDir/supplier.parquet")
+      .select(col("s_suppkey").as("aid"))
+      .withColumn("bin", expr(
+        """CAST(format_string('AUD:%04d:%01d:%01d:',
+           64 + aid % 129, aid % 7, aid % 5) AS BINARY)"""))
+
+  /** The near-dup-rich vector corpus of q43/q182: every embedding as
+    * doubles `(vec_id, v)`, plus a perturbed twin (id + 10^7) whose
+    * components move by integer thousandths, at cosine about 0.9999. */
+  def twinEmbeddings(spark: SparkSession, sfDir: String): DataFrame = {
+    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val base = e.select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+    val pert = e.select((col("vec_id") + lit(10000000L)).as("vec_id"),
+      expr("transform(sequence(1, 64), i -> " +
+        "(floor(CAST(element_at(embedding, i) AS DOUBLE) * 1000.0) " +
+        "+ ((vec_id * 31 + i) % 13) - 6) / 1000.0)").as("v"))
+    base.unionByName(pert)
+  }
+
+  /** The q118/q126 overlay layers: input boxes `a` (q_id, rid, x0, y0,
+    * x1, y1, ga) on the quarter lattice, each inside its 32-unit region
+    * `rid = q_id % 32`, and one method rectangle `b` (rid, gb) per region
+    * on the eighth-offset lattice, so no edges coincide. */
+  def overlayRects(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    F.ensureRegistered(spark)
+    val a = spark.read.parquet(s"$sfDir/supplier.parquet")
+      .select(col("s_suppkey").as("q_id"))
+      .withColumn("rid", expr("q_id % 32"))
+      .withColumn("x0", expr("CAST(rid * 32 AS DOUBLE) + 2.0 + CAST((q_id * 7919) % 96 AS DOUBLE) / 4.0"))
+      .withColumn("y0", expr("2.0 + CAST((q_id * 104729) % 96 AS DOUBLE) / 4.0"))
+      .withColumn("x1", expr("x0 + 1.0 + CAST(q_id % 14 AS DOUBLE) / 4.0"))
+      .withColumn("y1", expr("y0 + 1.0 + CAST(q_id % 11 AS DOUBLE) / 4.0"))
+      .withColumn("ga", rectGeom("x0", "y0", "x1", "y1"))
+    val b = spark.range(32)
+      .select(col("id").as("rid"))
+      .withColumn("u0", expr("CAST(rid * 32 AS DOUBLE) + 6.125 + CAST(rid % 3 AS DOUBLE)"))
+      .withColumn("v0", expr("6.125 + CAST(rid % 5 AS DOUBLE)"))
+      .withColumn("u1", expr("u0 + 14.0")).withColumn("v1", expr("v0 + 12.0"))
+      .withColumn("gb", rectGeom("u0", "v0", "u1", "v1"))
+      .select(col("rid"), col("gb"))
+    (a, b)
+  }
+
+  /** Shared q210/q231 layer-algebra corpus: 256 input boxes confined to
+    * per-(region, slot) 8×8 cells on the quarter lattice (`a`: q_id, rid,
+    * …, ga) and one method rectangle per 32-unit region on the eighth
+    * lattice (`b`: rid, gb). Every coordinate is dyadic, edges never
+    * coincide, same-region inputs are disjoint, and no input contains a
+    * method corner (see q210's comment for why each invariant makes the
+    * oracle closed-form). */
+  def algebraRects(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    F.ensureRegistered(spark)
+    val a = spark.read.parquet(s"$sfDir/supplier.parquet")
+      .select(col("s_suppkey").as("q_id"))
+      .where(col("q_id") < 256) // one input per (region, cell slot)
+      .withColumn("rid", expr("q_id % 32"))
+      .withColumn("k", expr("CAST(q_id div 32 AS INT)"))
+      .withColumn("cx", expr("element_at(array(1, 3, 0, 1, 2, 3, 1, 3), k + 1)"))
+      .withColumn("cy", expr("element_at(array(0, 0, 1, 1, 1, 1, 2, 2), k + 1)"))
+      .withColumn("x0", expr("CAST(rid * 32 + cx * 8 AS DOUBLE) + 0.25 + CAST((q_id * 7919) % 8 AS DOUBLE) / 4.0"))
+      .withColumn("y0", expr("CAST(cy * 8 AS DOUBLE) + 0.25 + CAST((q_id * 104729) % 8 AS DOUBLE) / 4.0"))
+      .withColumn("x1", expr("x0 + 1.0 + CAST(q_id % 14 AS DOUBLE) / 4.0"))
+      .withColumn("y1", expr("y0 + 1.0 + CAST(q_id % 11 AS DOUBLE) / 4.0"))
+      .withColumn("ga", rectGeom("x0", "y0", "x1", "y1"))
+    val b = spark.range(32)
+      .select(col("id").as("rid"))
+      .withColumn("u0", expr("CAST(rid * 32 AS DOUBLE) + 2.125 + CAST(rid % 3 AS DOUBLE)"))
+      .withColumn("v0", expr("2.125 + CAST(rid % 5 AS DOUBLE)"))
+      .withColumn("u1", expr("u0 + 17.0")).withColumn("v1", expr("v0 + 16.0"))
+      .withColumn("gb", rectGeom("u0", "v0", "u1", "v1"))
+      .select(col("rid"), col("gb"))
+    (a, b)
+  }
+
+  /** The closed rectangle ring over the named corner columns, parsed. */
+  private def rectGeom(x0: String, y0: String, x1: String, y1: String) =
+    call_function("st_geomfromwkt", format_string(
+      "POLYGON((%s %s, %s %s, %s %s, %s %s, %s %s))",
+      col(x0), col(y0), col(x1), col(y0), col(x1), col(y1),
+      col(x0), col(y1), col(x0), col(y0)))
 }

@@ -108,7 +108,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     // simplify: Douglas-Peucker removes exactly the collinear midpoints
     val line = Seq("LINESTRING(0 0, 1 1, 2 2, 3 3)").toDF("wkt")
       .select(F.st_astext(F.st_simplify(F.st_geomfromwkt(col("wkt")), lit(0.001))).as("s"))
@@ -130,7 +129,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     // bowtie over box (2, 3)-(9, 8): w=7, h=5 — repaired area w*h/2 = 17.5
     val row = Seq("POLYGON((2 3, 9 8, 2 8, 9 3, 2 3))").toDF("wkt")
       .select(F.st_geomfromwkt(col("wkt")).as("g"))
@@ -207,7 +205,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     val wkt = Seq("POINT(2.3522 48.8566)").toDF("wkt")
       .select(F.st_geomfromwkt(col("wkt")).as("g"))
     val p = wkt.select(
@@ -325,7 +322,6 @@ class CoreSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     // nine overlapping lattice boxes, one detached → union is a
     // MultiPolygon with a known cell count
     val wkts = (0 until 9).map { i =>
@@ -359,7 +355,6 @@ class CoreSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     val boxes = spark.range(0, 240).toDF("i")
       .withColumn("x", expr("(i % 20) * 2 + (i div 100)"))
       .withColumn("y", expr("((i div 20) % 10) * 2"))
@@ -396,7 +391,6 @@ class CoreSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
     import graft.functions.F
-    F.ensureRegistered(spark)
     val rows = spark.range(0, 2000).toDF("id")
       .withColumn("grp", expr("id % 7"))
       .withColumn("score", expr("(id * 7919) % 101")) // many ties
@@ -524,7 +518,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     val wkt = Seq("POINT(2.3522 48.8566)").toDF("wkt")
       .select(F.st_geomfromwkt(col("wkt")).as("g"))
     val p = wkt.select(F.st_transform(col("g"), lit(4326), lit(2154)).as("u"))
@@ -585,7 +578,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     // McMurdo Station (~166.67E, 77.85S) in EPSG:3031
     val wkt = Seq("POINT(166.67 -77.85)").toDF("wkt")
       .select(F.st_geomfromwkt(col("wkt")).as("g"))
@@ -655,7 +647,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     val r = Seq(("POINT(-0.1276 51.5072)")).toDF("wkt")
       .select(F.st_geomfromwkt(col("wkt")).as("g"))
       .select(F.st_transform(col("g"), lit(4326), lit(27700)).as("u"))
@@ -708,7 +699,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     val n = Seq("CURVEPOLYGON(CIRCULARSTRING(-3 0, 0 3, 3 0, 0 -3, -3 0))").toDF("wkt")
       .select(F.st_geomfromwkt(col("wkt")).as("g"))
       .select(call_function("st_points", col("g")).as("p"))
@@ -729,7 +719,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     def d(lon1: Double, lat1: Double, lon2: Double, lat2: Double): Double =
       Seq(1).toDF("i").select(call_function("st_distance_sphere",
         F.st_point(lit(lon1), lit(lat1)), F.st_point(lit(lon2), lit(lat2))))
@@ -753,7 +742,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     def parts(wkt: String): Seq[String] =
       Seq(wkt).toDF("w")
         .select(explode(call_function("st_dump", F.st_geomfromwkt(col("w")))).as("g"))
@@ -823,7 +811,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     val clip = "POLYGON((0.125 0.125, 256.125 0.125, 256.125 128.125, " +
       "0.125 128.125, 0.125 0.125))"
     def clipBox(wkt: String): Option[(Double, Double, Double, Double, Double)] =
@@ -868,7 +855,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     def parts(wkt: String): Seq[(Double, Double, Double, Double, Double)] =
       Seq(wkt).toDF("w")
         .select(posexplode(call_function("st_wrapdateline",
@@ -933,7 +919,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     def pts(wkt: String, ml: Double): Seq[(Double, Double)] =
       Seq(wkt).toDF("w")
         .select(call_function("st_points", call_function("st_segmentize",
@@ -1027,7 +1012,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     def pieces(aw: String, bw: String): Map[String, (Double, Double, Double, Double, Double)] =
       Seq((aw, bw)).toDF("aw", "bw")
         .select(explode(array(
@@ -1276,7 +1260,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     def simp(wkt: String, tol: Double): Seq[(Double, Double)] =
       Seq(wkt).toDF("w")
         .select(call_function("st_points", call_function("st_simplify",
@@ -1304,7 +1287,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     def parse(s: String): (String, Seq[(String, String)]) = {
       val r = Seq(s).toDF("s")
         .select(call_function("style_tool", col("s")).as("t"),
@@ -1329,7 +1311,6 @@ class CoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.F
-    F.ensureRegistered(spark)
     // big-endian WKB point (1.5, 2.5): 00 00000001 3FF8... 4004...
     val be = Array[Byte](0, 0, 0, 0, 1,
       0x3f.toByte, 0xf8.toByte, 0, 0, 0, 0, 0, 0,
@@ -1467,7 +1448,6 @@ class CoreSpec extends AnyFunSuite {
   test("csv_line/csv_fields: RFC-4180 quoting round-trips every edge case") {
     val spark = TestSpark.spark
     import spark.implicits._
-    graft.functions.F.ensureRegistered(spark)
     val cases = Seq(
       Seq("plain", "with,comma", "with\"quote"),
       Seq("", "", ""),                       // empty fields survive

@@ -16,6 +16,19 @@ class EntrySpec extends AnyFunSuite {
     }
   }
 
+  test("the registry registers the function surface on the session it is given") {
+    // a new session has its own function registry, without the graft
+    // functions, so only the registry's wrapper can register them here
+    val s2 = spark.newSession()
+    intercept[org.apache.spark.sql.AnalysisException](
+      s2.sql("SELECT st_x(st_point(1.0D, 2.0D))").collect())
+    // q73 resolves st_x through expr, q189 its format functions through
+    // call_function
+    for (n <- Seq("q73_utm_forward", "q189_mif_driver"))
+      assert(SparkEntry.queries(n)(s2, TestSpark.SfSmall).count() > 0, n)
+    assert(s2.sql("SELECT st_x(st_point(1.0D, 2.0D))").head().getDouble(0) == 1.0)
+  }
+
   test("GraftExtensions installs the function surface via the extensions seam") {
     import org.apache.spark.sql.SparkSession
     val orig = spark // force TestSpark init first

@@ -436,7 +436,6 @@ class FocalProxContourSpec extends AnyFunSuite {
   test("cutline blend: hand-pinned milli-weight ramp at the box edge") {
     import graft.functions.F
     import graft.operators.Raster
-    F.ensureRegistered(spark)
     // box [100,300)x[50,200) px at zoom 3 (the q61/q74 box 1, alone)
     val c = 45.0 / 128.0
     val cut = Seq((1L, 100L, 50L, 300L, 200L)).toDF("cut_id", "x0", "y0", "x1", "y1")

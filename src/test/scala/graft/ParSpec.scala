@@ -73,7 +73,6 @@ class ParSpec extends AnyFunSuite {
   private def chain: DataFrame = chainOf(docsDir)
 
   private def chainOf(dir: String): DataFrame = {
-    F.ensureRegistered(spark)
     spark.read.parquet(dir)
       .select(col("doc_id"), explode(col("spans")).as("span"))
       .where(col("span.kind") === "text")

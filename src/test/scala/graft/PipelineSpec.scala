@@ -158,7 +158,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("cosineDupPairs: LSH-bucketed pair set == brute force on the q43 derived corpus") {
-    F.ensureRegistered(spark)
     val e = spark.read.parquet(s"${TestSpark.SfSmall}/embeddings.parquet")
     val base = e.select(col("vec_id"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -189,7 +188,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("cosineDupPairs overflow guard is tight: large-but-exact norms pass, wrapping ones raise") {
-    F.ensureRegistered(spark)
     import spark.implicits._
     // one large-norm vector (na2 = 64·3500² ≈ 7.8e8, outside the old
     // per-factor sqrt(Long.Max)/num bound) paired with a small parallel
@@ -218,7 +216,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("span-sequence invariant: pipeline output reconstructs input spans exactly") {
-    F.ensureRegistered(spark)
     val docs = graft.io.Checkpoints.cached(Synth.docs(spark, TestSpark.SfSmall))
     // a pipeline: explode -> enrich (tile assign + lang of text) -> reassemble
     val exploded = docs
@@ -242,7 +239,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("media resolve + features: every media_ref resolves, features computed") {
-    F.ensureRegistered(spark)
     val docs = Synth.docs(spark, TestSpark.SfSmall)
     val tiles = Synth.tiles(spark, 8)
     val resolved = Media.resolveMedia(docs, tiles)
@@ -846,7 +842,6 @@ class PipelineSpec extends AnyFunSuite {
     // top-ks == direct per-stratum top-k (every global winner survives
     // its own bucket's cut) — pinned on the real corpus by re-deriving
     // the direct top-k on the driver from the same keys
-    F.ensureRegistered(spark)
     val k = 10
     val keyed = docsTable
       .withColumn("w", expr(
@@ -967,7 +962,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("char entropy (q252): closed-form anchors and normalization law") {
-    F.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq(
       (1L, "aaaa"),           // single symbol → exactly 0 bits

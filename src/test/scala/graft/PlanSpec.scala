@@ -18,7 +18,6 @@ class PlanSpec extends AnyFunSuite {
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
   private def plan(name: String): String = {
-    graft.functions.F.ensureRegistered(spark)
     formatted(SparkEntry.queries(name)(spark, TestSpark.SfSmall))
   }
 
@@ -72,7 +71,6 @@ class PlanSpec extends AnyFunSuite {
 
   private def adaptivePip(threshold: Long): String = {
     import org.apache.spark.sql.functions.col
-    graft.functions.F.ensureRegistered(spark)
     val polys = graft.synth.Synth.regionWkt(spark, TestSpark.SfSmall)
       .withColumn("geom", graft.functions.F.st_geomfromwkt(col("wkt")))
     val points = graft.synth.Synth.points(spark, TestSpark.SfSmall).select("pt_id", "lon", "lat")
@@ -82,7 +80,6 @@ class PlanSpec extends AnyFunSuite {
 
   private def saltedSelfJoin(threshold: Long): String = {
     import org.apache.spark.sql.functions.col
-    graft.functions.F.ensureRegistered(spark)
     val r = graft.synth.Synth.regionWkt(spark, TestSpark.SfSmall)
       .withColumn("g", graft.functions.F.st_geomfromwkt(col("wkt")))
     formatted(graft.operators.SpatialJoin.geomSelfJoin(
@@ -112,7 +109,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q52: the persisted region cover holds (region_id, geom) and no WKT text") {
-    graft.functions.F.ensureRegistered(spark)
     val df = SparkEntry.queries("q52_pip_adaptive")(spark, TestSpark.SfSmall)
     val cached = df.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.output.map(_.name)
@@ -131,7 +127,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("relational core stays inside whole-stage codegen") {
-    graft.functions.F.ensureRegistered(spark)
     for (q <- Seq("q01_agg_filter", "q02_join_agg", "q04_distinct", "q10_histogram")) {
       val df = SparkEntry.queries(q)(spark, TestSpark.SfSmall)
       val qe = df.queryExecution

@@ -19,7 +19,6 @@ class RasterSpec extends AnyFunSuite {
     ((tx * 131 + ty * 173 + px * 7 + py * 11 + zoom) % 256).toDouble
 
   test("rasterize ADD matches scalar oracle checksums") {
-    F.ensureRegistered(spark)
     val boxes = Synth.boxes(spark, TestSpark.SfSmall).where(col("box_id") % 7 === 0)
     val rows = boxes.collect().map(r =>
       (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
@@ -56,7 +55,6 @@ class RasterSpec extends AnyFunSuite {
   }
 
   test("rasterize LINES (all-touched DDA): tiled == whole-grid walk, seams exact") {
-    F.ensureRegistered(spark)
     import spark.implicits._
     // integer-pixel endpoints at zoom 3 (1024x512 global px), incl. a
     // horizontal, a vertical, a steep diagonal and a tile-corner crosser
@@ -94,7 +92,6 @@ class RasterSpec extends AnyFunSuite {
   }
 
   test("rasterize MAX (REPLACE-by-priority) deterministic overlap") {
-    F.ensureRegistered(spark)
     import spark.implicits._
     val two = Seq(
       (1L, "POLYGON((0 0, 20 0, 20 20, 0 20, 0 0))", 1.0),
@@ -114,7 +111,6 @@ class RasterSpec extends AnyFunSuite {
   }
 
   test("pyramid 3->0 matches scalar oracle") {
-    F.ensureRegistered(spark)
     val base = Synth.tiles(spark, 3)
     val got = Raster.pyramid(base, 3, 0)
       .select(col("zoom"), col("tx"), col("ty"), F.checksum_px(col("pixels")).as("cks"))
@@ -146,7 +142,6 @@ class RasterSpec extends AnyFunSuite {
   }
 
   test("warp to mercator matches scalar oracle (all 7 kernels)") {
-    F.ensureRegistered(spark)
     val srcZoom = 3; val dstZoom = 3
     // scalar oracle: direct global sampling (no tile join) via the same kernels
     val srcFn: (Int, Int) => Double = (gx, gy) => {
@@ -194,7 +189,6 @@ class RasterSpec extends AnyFunSuite {
   }
 
   test("warp dst universe scales with SOURCE coverage, not the planet") {
-    F.ensureRegistered(spark)
     import spark.implicits._
     // one source tile at zoom 3 warped to dstZoom 6: round 1 enumerated
     // every dst tile on Earth (4^6 = 4096 rows pre-join); the derived
@@ -248,14 +242,9 @@ class RasterSpec extends AnyFunSuite {
   }
 
   test("rgb2pct median cut: distributed == whole-grid scalar; palette partitioning-independent") {
-    F.ensureRegistered(spark)
     import spark.implicits._
     // general path: 5-bit bins, 16-entry palette over 256 distinct colors
-    val ms = Seq((1, "v"), (2, "(v * 2 + 5) % 256"), (3, "(v * 7 + 11) % 256"))
-      .map { case (b, e) =>
-        Synth.tiles(spark, 2).withColumn("band", lit(b))
-          .withColumn("pixels", expr(s"transform(pixels, v -> $e)"))
-      }.reduce(_ unionByName _)
+    val ms = Synth.rgbBands(spark, 2)
     val (mapped, pal) = Raster.rgb2pct(ms, paletteSize = 16, quantBits = 5)
     assert(pal.length <= 16 && pal.length > 1)
     assert(pal.sameElements(pal.sorted), "palette must be sorted")
@@ -289,7 +278,6 @@ class RasterSpec extends AnyFunSuite {
   }
 
   test("mosaic max_by priority") {
-    F.ensureRegistered(spark)
     val a = Synth.tiles(spark, 2).withColumn("prio", lit(1))
     val b = Synth.tiles(spark, 2).where(col("tx") === 0)
       .withColumn("pixels", expr("transform(pixels, p -> p + 5.0)"))
@@ -413,7 +401,6 @@ class RasterSpec extends AnyFunSuite {
 
   test("rasterizeInvert: exact complement of coverage over the FULL tile universe") {
     val spark = TestSpark.spark
-    F.ensureRegistered(spark)
     val geoms = graft.synth.Synth.boxes(spark, TestSpark.SfSmall)
       .where(col("box_id") % 7 === 0)
       .withColumn("geom", F.st_geomfromwkt(format_string(
@@ -596,7 +583,6 @@ class RasterSpec extends AnyFunSuite {
   }
 
   test("retile: every output pixel == closed form at its global coords; edges clipped") {
-    F.ensureRegistered(spark)
     val got = Raster.retile(Synth.tiles(spark, 3), 16, 8, 160, 96)
       .collect().map(r => ((r.getLong(0), r.getLong(1)),
         (r.getInt(2), r.getInt(3), r.getSeq[Double](4).toArray))).toMap
@@ -620,7 +606,6 @@ class RasterSpec extends AnyFunSuite {
   }
 
   test("retile -overlap: stride = size - overlap, replicated bands match closed form") {
-    F.ensureRegistered(spark)
     val ov = 16
     val got = Raster.retile(Synth.tiles(spark, 3), 16, 8, 160, 96, overlap = ov)
       .collect().map(r => ((r.getLong(0), r.getLong(1)),
@@ -649,7 +634,6 @@ class RasterSpec extends AnyFunSuite {
   }
 
   test("pyramidGauss tiled == whole-grid scalar (halo seams, border truncation)") {
-    F.ensureRegistered(spark)
     val got = Raster.pyramidGauss(Synth.tiles(spark, 2))
       .collect().map(r => ((r.getLong(1), r.getLong(2)), r.getSeq[Double](3).toArray)).toMap
     assert(got.size == 4 * 2 && got.keySet.forall { case (tx, ty) => tx < 4 && ty < 2 })

@@ -22,7 +22,6 @@ class SpatialJoinSpec extends AnyFunSuite {
     // a point exactly ON the polygon's envelope edge must NOT be dropped by
     // the bbox gate — the exact predicate decides (intersects: true;
     // contains: false, boundary excluded)
-    F.ensureRegistered(spark)
     val polys = Seq((1L, "POLYGON((10 20, 30 20, 30 40, 10 40, 10 20))"))
       .toDF("region_id", "wkt")
       .withColumn("geom", F.st_geomfromwkt(col("wkt")))
@@ -41,7 +40,6 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("PIP broadcast == PIP shuffle == PIP salted == JTS brute force") {
-    F.ensureRegistered(spark)
     val polys = Synth.regionWkt(spark, TestSpark.SfSmall)
       .withColumn("geom", F.st_geomfromwkt(col("wkt")))
     val points = Synth.points(spark, TestSpark.SfSmall)
@@ -76,7 +74,6 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("PIP with concave polygon and polygon-with-hole matches brute force") {
-    F.ensureRegistered(spark)
     val shapes = Seq(
       (1L, "POLYGON((0 0, 40 0, 40 8, 8 8, 8 40, 0 40, 0 0))"),          // L
       (2L, "POLYGON((-60 -30, -20 -30, -20 10, -60 10, -60 -30), (-50 -20, -30 -20, -30 0, -50 0, -50 -20))"), // hole
@@ -97,7 +94,6 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("cells_cover cap: hemisphere polygon at z15 coarsens to <= 65536 cells") {
-    F.ensureRegistered(spark)
     val hemi = Seq((1L, "POLYGON((-180 -90, 0 -90, 0 90, -180 90, -180 -90))"))
       .toDF("id", "wkt").withColumn("geom", F.st_geomfromwkt(col("wkt")))
     val cells = hemi.select(explode(F.cells_cover(col("geom"), lit(15))).as("c"))
@@ -114,7 +110,6 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("PIP with a cover-coarsening giant polygon still matches brute force") {
-    F.ensureRegistered(spark)
     // zoom 9: a near-global polygon needs ~2*4^9 >> 4096 cells -> coarsens;
     // the fan-to-zooms re-key must keep the join complete (points fan to
     // BOTH zooms: the giant's coarse zoom and the small boxes' zoom 9)
@@ -151,7 +146,6 @@ class SpatialJoinSpec extends AnyFunSuite {
   // under the broadcast threshold joins map-side and skips the hot-cell
   // split; with broadcasting off every hot cell (threshold 1) is salted
   test("mixed-zoom giant polygon: adaptive PIP and salted geomSelfJoin rows hold with the cover broadcast or shuffled") {
-    F.ensureRegistered(spark)
     val shapes = Seq(
       (1L, "POLYGON((-179 -89, 179 -89, 179 89, -179 89, -179 -89))"), // giant
       (2L, "POLYGON((10 10, 30 10, 30 30, 10 30, 10 10))"))            // small
@@ -184,7 +178,6 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("PIP on the MERCATOR cell grid == geodetic == brute force (post-warp prune path)") {
-    F.ensureRegistered(spark)
     val polys = Synth.regionWkt(spark, TestSpark.SfSmall)
       .withColumn("geom", F.st_geomfromwkt(col("wkt")))
     val points = Synth.points(spark, TestSpark.SfSmall)
@@ -201,7 +194,6 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("geomJoin adaptive salting returns the identical pair set") {
-    F.ensureRegistered(spark)
     val left = Synth.regionWkt(spark, TestSpark.SfSmall).limit(60)
       .withColumn("geom_l", F.st_geomfromwkt(col("wkt")))
       .select(col("region_id").as("lid"), col("geom_l"))
@@ -218,7 +210,6 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("geomJoin intersects: poly x poly with dedup matches brute force") {
-    F.ensureRegistered(spark)
     val left = Synth.regionWkt(spark, TestSpark.SfSmall).limit(60)
       .withColumn("geom_l", F.st_geomfromwkt(col("wkt")))
       .select(col("region_id").as("lid"), col("geom_l"))
@@ -266,7 +257,6 @@ class SpatialJoinSpec extends AnyFunSuite {
   // broadcast reference (the threshold is set above any cell count, so
   // the plain-join branch is the one executing).
   test("adaptive PIP with empty hot-cell set (plain-join branch) matches broadcast") {
-    F.ensureRegistered(spark)
     val polys = Synth.regionWkt(spark, TestSpark.SfSmall)
       .withColumn("geom", F.st_geomfromwkt(col("wkt")))
     val points = Synth.points(spark, TestSpark.SfSmall)
@@ -283,7 +273,6 @@ class SpatialJoinSpec extends AnyFunSuite {
   // must equal the two-cover geomJoin on the same inputs, in both the
   // plain and the forced-hot salted regimes.
   test("geomSelfJoin == geomJoin on the same table (plain and salted)") {
-    F.ensureRegistered(spark)
     val r = Synth.regionWkt(spark, TestSpark.SfSmall).limit(80)
       .withColumn("g", F.st_geomfromwkt(col("wkt")))
     val a = r.select(col("region_id").as("id_a"), col("g").as("ga"))
